@@ -212,184 +212,74 @@ def main() -> None:
 
     # Streaming throughput probe: the reference is a stream processor,
     # so the bench also records events/sec through the causal sequencer
-    # (keyed applyInPandasWithState, 4 micro-batches, noop sink). Wall
-    # time includes micro-batch scheduling and state commits — the
-    # end-to-end number a consumer of the sequenced view experiences.
+    # and its cross-key deps twin (keyed applyInPandasWithState, 4
+    # micro-batches, noop sink) under the shipped stateful config,
+    # session.recommended_streaming_state. Wall time includes
+    # micro-batch scheduling and state commits — the end-to-end number
+    # a consumer of the sequenced view experiences.
     streaming = None
     try:
         import shutil
         import tempfile
 
+        from distributed_causal_stream_processing_spark.session import (
+            recommended_streaming_state,
+        )
         from distributed_causal_stream_processing_spark.streaming import jobs
         from distributed_causal_stream_processing_spark.streaming.causal import (
+            causal_deps_stream,
             causal_sequence_stream,
         )
 
-        # stage the events copy ONCE; both probes replay it (each run
-        # keeps its own checkpoint, so offsets never cross-contaminate)
+        # stage the events copy ONCE; every run replays it from its own
+        # checkpoint, so offsets never cross-contaminate
         sdir = tempfile.mkdtemp(prefix="bench_stream_")
 
-        def probe(n_state_parts: int | None, ck: str) -> tuple[int, float]:
-            """One sequencer run; returns (rows, wall). n_state_parts
-            overrides the stateful operator's partition count for the
-            run (the state-commit-per-partition overhead dominates this
-            probe's wall at local scale — see causal.py's scale note)."""
-            old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            try:
-                if n_state_parts is not None:
-                    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_parts))
-                src = jobs.events_stream(spark, sdir, watermark="35 days").select(
-                    "event_id", "ts", "user_id"
+        def probe(job, cols: tuple[str, ...], ck: str) -> float:
+            """Wall of one run of ``job`` over the staged events."""
+            src = jobs.events_stream(spark, sdir, watermark="35 days").select(*cols)
+            t0 = time.perf_counter()
+            with recommended_streaming_state(spark):
+                q = (
+                    job(src)
+                    .writeStream.format("noop")
+                    .outputMode("append")
+                    .option("checkpointLocation", os.path.join(sdir, ck))
+                    .start()
                 )
-                t0 = time.perf_counter()
-                q = None
                 try:
-                    q = (
-                        causal_sequence_stream(src)
-                        .writeStream.format("noop")
-                        .outputMode("append")
-                        .option("checkpointLocation", os.path.join(sdir, ck))
-                        .start()
-                    )
                     q.processAllAvailable()
                 finally:
-                    if q is not None:
-                        q.stop()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            return n_rows, time.perf_counter() - t0
+                    q.stop()
+            return time.perf_counter() - t0
 
-        # a probe failure at ANY point after mkdtemp — staging, source
-        # construction, the row count, or the query itself — must not
-        # leak the staged events copy + checkpoints under /tmp
+        # a probe failure at ANY point after mkdtemp must not leak the
+        # staged events copy + checkpoints under /tmp
         try:
             jobs.stage_events_as_stream_dir(spark, sf_dir, sdir, n_files=4)
             n_rows = spark.read.parquet(sdir).count()
-            # min-of-2 per config (VERDICT r07 item 4): batch queries get
-            # retries but the streaming probe didn't, so one host window
-            # during the 4 micro-batches regressed the committed record
-            # 15.6k -> 9.5k rows/s while the engine was fine. Each run
-            # keeps its own checkpoint so offsets replay from scratch.
+            # min-of-2 (VERDICT r07 item 4): one host window during the
+            # 4 micro-batches must not stand for the engine's rate
+            seq_cols = ("event_id", "ts", "user_id")
             wall = min(
-                probe(None, "_ck_default_a")[1],  # session default (32)
-                probe(None, "_ck_default_b")[1],
+                probe(causal_sequence_stream, seq_cols, f"_ck_seq_{i}") for i in range(2)
             )
-            wall_tuned = min(  # state partitions sized to batch volume
-                probe(16, "_ck_16_a")[1],
-                probe(16, "_ck_16_b")[1],
+            wall_deps = min(
+                probe(causal_deps_stream, seq_cols + ("event_type",), f"_ck_deps_{i}")
+                for i in range(2)
             )
-            # RocksDB state store (VERDICT r09 item 6): the sequencer's
-            # own measurements say per-partition state-store commits
-            # dominate this probe's wall at local scale, and the RocksDB
-            # provider (JVM-built-in, no new deps) changes exactly that
-            # commit path — measure it beside the default HDFS-backed
-            # provider at both partition counts. Best-effort: a provider
-            # that fails to load records an error string, never kills
-            # the default numbers.
-            wall_rocksdb = wall_rocksdb_16 = wall_deps = None
-            rocksdb_err = deps_err = None
-            provider_key = "spark.sql.streaming.stateStore.providerClass"
-            changelog_key = (
-                "spark.sql.streaming.stateStore.rocksdb"
-                ".changelogCheckpointing.enabled"
-            )
-            old_provider = spark.conf.get(provider_key, None)
-            old_changelog = spark.conf.get(changelog_key, None)
-            try:
-                from distributed_causal_stream_processing_spark.session import (
-                    enable_rocksdb_state,
-                )
-
-                enable_rocksdb_state(spark)
-                wall_rocksdb = min(
-                    probe(None, "_ck_rdb_a")[1],
-                    probe(None, "_ck_rdb_b")[1],
-                )
-                wall_rocksdb_16 = min(
-                    probe(16, "_ck_rdb16_a")[1],
-                    probe(16, "_ck_rdb16_b")[1],
-                )
-                # round 13: the cross-key dependency layering twin
-                # (causal_deps_stream, pair-keyed state) measured once
-                # under the recommended config (RocksDB + 16 state
-                # partitions), min-of-2 like the sequencer rows
-                from distributed_causal_stream_processing_spark.streaming.causal import (
-                    causal_deps_stream,
-                )
-
-                def probe_deps(ck: str) -> float:
-                    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-                    try:
-                        spark.conf.set("spark.sql.shuffle.partitions", "16")
-                        src = jobs.events_stream(
-                            spark, sdir, watermark="35 days"
-                        ).select("event_id", "ts", "user_id", "event_type")
-                        t0 = time.perf_counter()
-                        q = None
-                        try:
-                            q = (
-                                causal_deps_stream(src)
-                                .writeStream.format("noop")
-                                .outputMode("append")
-                                .option(
-                                    "checkpointLocation", os.path.join(sdir, ck)
-                                )
-                                .start()
-                            )
-                            q.processAllAvailable()
-                        finally:
-                            if q is not None:
-                                q.stop()
-                    finally:
-                        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-                    return time.perf_counter() - t0
-
-                # own try (ADVICE r13): a deps-probe failure is NOT a
-                # state-store-provider failure — record it under its
-                # own key so the JSON doesn't misattribute it
-                try:
-                    wall_deps = min(
-                        probe_deps("_ck_deps_a"), probe_deps("_ck_deps_b")
-                    )
-                except Exception as exc:  # noqa: BLE001
-                    deps_err = f"{type(exc).__name__}: {exc}"[:200]
-            except Exception as exc:  # noqa: BLE001
-                rocksdb_err = f"{type(exc).__name__}: {exc}"[:200]
-            finally:
-                if old_provider is None:
-                    spark.conf.unset(provider_key)
-                else:
-                    spark.conf.set(provider_key, old_provider)
-                if old_changelog is None:
-                    spark.conf.unset(changelog_key)
-                else:
-                    spark.conf.set(changelog_key, old_changelog)
         finally:
             shutil.rmtree(sdir, ignore_errors=True)
         streaming = {
             "job": "causal_sequence_stream",
             "rows": n_rows,
             "micro_batches": 4,
+            "state_partitions": spark.sparkContext.defaultParallelism,
             "wall_sec": round(wall, 3),
             "rows_per_sec": round(n_rows / wall),
-            "wall_sec_16_state_parts": round(wall_tuned, 3),
-            "rows_per_sec_16_state_parts": round(n_rows / wall_tuned),
+            "wall_sec_deps": round(wall_deps, 3),
+            "rows_per_sec_deps": round(n_rows / wall_deps),
         }
-        if rocksdb_err is not None:
-            streaming["rocksdb_error"] = rocksdb_err
-        if wall_rocksdb is not None:
-            streaming["wall_sec_rocksdb"] = round(wall_rocksdb, 3)
-            streaming["rows_per_sec_rocksdb"] = round(n_rows / wall_rocksdb)
-        if wall_rocksdb_16 is not None:
-            streaming["wall_sec_rocksdb_16_state_parts"] = round(wall_rocksdb_16, 3)
-            streaming["rows_per_sec_rocksdb_16_state_parts"] = round(
-                n_rows / wall_rocksdb_16
-            )
-        if deps_err is not None:
-            streaming["deps_error"] = deps_err
-        if wall_deps is not None:
-            streaming["wall_sec_deps_recommended"] = round(wall_deps, 3)
-            streaming["rows_per_sec_deps_recommended"] = round(n_rows / wall_deps)
     except Exception as exc:  # noqa: BLE001 — probe is best-effort
         streaming = {"error": f"{type(exc).__name__}: {exc}"[:200]}
 

@@ -48,16 +48,6 @@ def enable_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
-# Stateful-streaming state partitions, the measured default (VERDICT r10
-# item 6): the stateful operator inherits spark.sql.shuffle.partitions at
-# FIRST start (pinned in the checkpoint after), and every partition pays a
-# state-store commit per micro-batch — at local/bench volumes the job is
-# commit-bound, and 16 partitions + RocksDB measured best across rounds
-# (r10 bench: 20.8k rows/s vs 15.7k at the 32-partition heap default).
-# On a real cluster size this to volume/parallelism instead; the conf is
-# per-job, not global.
-STREAMING_STATE_PARTITIONS = 16
-
 _STREAMING_STATE_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.stateStore.providerClass",
@@ -66,20 +56,28 @@ _STREAMING_STATE_CONFS = (
 
 
 @contextmanager
-def recommended_streaming_state(
-    spark: SparkSession, state_partitions: int = STREAMING_STATE_PARTITIONS
-):
-    """Apply the measured-best stateful-streaming configuration —
-    RocksDB state store (changelog checkpointing on) + 16 state
-    partitions — for the duration of one streaming job, restoring every
-    conf after (stateful-streaming jobs read these at query start; batch
-    work on the session must not inherit them). The causal sequencer
-    job builders apply this by default (VERDICT r10 item 6); pass
-    ``tuned_state=False`` there to measure the untuned baseline."""
+def recommended_streaming_state(spark: SparkSession):
+    """Run one stateful streaming job on RocksDB state (changelog
+    checkpointing on) with one state partition per core, restoring every
+    conf after: stateful queries read these at start, and batch work on
+    the session must not inherit them.
+
+    The stateful operator takes ``spark.sql.shuffle.partitions`` at its
+    first start and pins it in the checkpoint, so existing checkpoints
+    keep their count. Every state partition pays a store load, an
+    fsync'd changelog commit and a Python round trip per micro-batch,
+    whatever its key count, so ``defaultParallelism`` partitions run
+    each batch as one wave of tasks. At 4 cores the causal stream's
+    p50 latency fell from ~4.2 s at 16 partitions to ~1.8 s at 4, and 2
+    partitions measured the same as 4. The HDFS-backed provider ties
+    RocksDB at this state size; RocksDB stays for its disk-backed state
+    and delta-only commits."""
     old = {k: spark.conf.get(k, None) for k in _STREAMING_STATE_CONFS}
     try:
         enable_rocksdb_state(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
         yield spark
     finally:
         for k, v in old.items():
@@ -87,6 +85,16 @@ def recommended_streaming_state(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _default_driver_memory() -> str:
+    """Half of host memory (MemTotal), capped at 32g."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(x.split()[1]) for x in fh if x.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{max(1, min(32, kb // 2**21))}g"
 
 
 def get_spark(
@@ -117,7 +125,10 @@ def get_spark(
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

@@ -59,34 +59,21 @@ def causal_sequence_stream(events: DataFrame) -> DataFrame:
     serializes it by value, so Python workers need no access to this
     package on their PYTHONPATH.
 
-    Throughput levers, measured at sf0.1 / 100k rows / 4 micro-batches
-    (round 7): (1) the sequencing itself is vectorized — see the
-    in-kernel comment — which took the warm default-config probe from
-    6.4 s to ~5.4 s; (2) the stateful operator inherits
-    ``spark.sql.shuffle.partitions`` AT FIRST START (pinned in the
-    checkpoint thereafter), and each partition pays a state-store
-    commit per micro-batch, so local-scale runs are commit-bound:
-    16 partitions ran 4.25 s (23.5k rows/s) vs 5.4 s at the default
-    32. Size it to batch volume / desired parallelism, not to the
-    batch-query shuffle default; at cluster scale the same conf scales
-    the state stores out instead. (3) the state-store PROVIDER
-    (round 10): bench.py now records the sequencer under BOTH
-    providers each round. Across two measured windows the ordering
-    flipped — probe window: RocksDB 6.12 s vs HDFS-backed 6.43 s at 32
-    partitions; committed bench record: RocksDB ahead in both configs
-    (20.3k vs 15.5k rows/s at 32, 21.4k vs 19.3k at 16) — i.e. the
-    difference sits inside host noise at this state size (~15k user
-    keys fits trivially in heap, so the provider swap moves only the
-    commit path). The DOCUMENTED DEFAULT (VERDICT r10 item 6) is
-    RocksDB + 16 state partitions — the best measured configuration
-    (r10 bench: 20.8k rows/s vs 15.7k at the heap-backed/32 default),
-    applied by the sequencer job builders via
-    session.recommended_streaming_state and restored after each job;
-    bench.py keeps measuring BOTH providers at both partition counts
-    each round for continuity. RocksDB's real point is scale headroom
-    anyway — disk-backed state + changelog (delta-only) commits keep
-    per-executor state far past heap — and it costs nothing measurable
-    here even where that headroom isn't needed.
+    Throughput levers: (1) the sequencing itself is vectorized (see
+    the in-kernel comment). (2) Every state partition pays a fixed cost
+    per micro-batch (a state-store load, an fsync'd changelog commit
+    and a Python round trip) whatever its key count, so the job
+    builders run the operator under session.recommended_streaming_state:
+    RocksDB with one state partition per core, one wave of tasks per
+    batch. The partition count is pinned in the checkpoint at first
+    start. On a 4-core host (~1,667 rows per batch, 150 keys) this took
+    the causal stream's p50 batch latency from ~4.2 s at 16 partitions
+    to ~1.8 s at 4, state commit time from ~1.75 s to ~0.43 s per batch,
+    and restart recovery from 4.5 s to 1.8 s; 2 partitions measured the
+    same as 4. (3) The provider: at 4 partitions the HDFS-backed store
+    tied RocksDB (p50 ~1.47 vs ~1.45 s over 6 interleaved pairs), so
+    RocksDB stays for its headroom: disk-backed state with delta-only
+    commits keeps per-executor state far past heap.
     """
 
     def sequence_group(

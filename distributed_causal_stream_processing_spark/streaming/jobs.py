@@ -26,7 +26,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -204,6 +204,17 @@ class _CommitMarkers:
     def _latest_committed(self) -> int:
         return max(self._committed_ids(), default=-1)
 
+    def _skip_replay(self, df: DataFrame, batch_id: int) -> bool:
+        """True if ``batch_id`` is already committed. A replayed batch
+        still runs its plan, into the ``noop`` sink (nothing is written),
+        so that upstream stateful operators commit their state version
+        for it: a batch skipped without running fails Spark's state-store
+        commit validation on restart."""
+        if not self.is_committed(batch_id):
+            return False
+        df.write.format("noop").mode("overwrite").save()
+        return True
+
     def _write_marker(self, batch_id: int, **payload) -> None:
         # written only AFTER the batch's data write returned — the
         # ordering every reader in this module relies on
@@ -218,12 +229,13 @@ class IdempotentForeachBatchSink(_CommitMarkers):
              <root>/_commits/N                   (the commit marker)
 
     ``process(df, batch_id)`` is the foreachBatch callback. A batch
-    whose commit marker exists is skipped entirely, so redelivery
-    (Structured Streaming replays the last uncommitted batch after a
-    crash) cannot duplicate rows — at-least-once delivery + idempotent
-    write = effectively-once output. The marker is written only after
-    the data write returns, matching the reference's commit-after-write
-    ordering.
+    whose commit marker exists writes nothing (``_skip_replay``), so
+    redelivery (Structured Streaming replays the last uncommitted batch
+    after a crash) cannot duplicate rows — at-least-once delivery +
+    idempotent write = effectively-once output. The marker is written
+    only after the data write returns, matching the reference's
+    commit-after-write ordering. A committed batch costs one Spark job:
+    the marker's row count is observed on the write itself.
     """
 
     def __init__(self, root: str):
@@ -232,18 +244,18 @@ class IdempotentForeachBatchSink(_CommitMarkers):
         os.makedirs(self.data_dir, exist_ok=True)
 
     def process(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed batch: idempotent no-op
+        if self._skip_replay(df, batch_id):
+            return
         out = os.path.join(self.data_dir, f"batch_id={batch_id}")
         # overwrite, not append: a torn previous attempt of this batch
-        # is replaced wholesale, never double-counted
-        df.write.mode("overwrite").parquet(out)
-        # marker row count comes from the files just written (footer
-        # metadata), NOT df.count() — counting the input DataFrame
-        # would re-execute the batch's whole plan a second time (for
-        # the IVFADC probe that is the full scoring job per batch)
-        rows = df.sparkSession.read.parquet(out).count()
-        self._write_marker(batch_id, rows=rows)
+        # is replaced wholesale, never double-counted. The row count is
+        # an Observation on the write, not df.count() (a second run of
+        # the batch's plan) nor a read-back of the files (three jobs).
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(out)
+        self._write_marker(batch_id, rows=obs.get["rows"])
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         # COMMITTED batches only: a crash mid-write leaves a torn
@@ -433,7 +445,6 @@ def run_multi_source_causal_stream(
     dir_a: str,
     dir_b: str,
     watermark: str = "35 days",
-    tuned_state: bool = True,
 ) -> list:
     """THE reference loop: N partitioned input streams → causal merge →
     per-key sequenced view.
@@ -447,14 +458,9 @@ def run_multi_source_causal_stream(
     row arrived on. The shuffle to `groupBy(user_id)` is the merge
     point; no global coordination, state O(keys).
 
-    Runs under the documented stateful-streaming default — RocksDB
-    state store + 16 state partitions, the configuration bench.py
-    measured best (session.recommended_streaming_state, VERDICT r10
-    item 6); ``tuned_state=False`` keeps the session's own confs (the
-    bench's untuned baseline rows).
+    Runs under session.recommended_streaming_state (RocksDB, one state
+    partition per core).
     """
-    from contextlib import nullcontext
-
     from distributed_causal_stream_processing_spark.session import (
         recommended_streaming_state,
     )
@@ -462,8 +468,7 @@ def run_multi_source_causal_stream(
         causal_sequence_stream,
     )
 
-    ctx = recommended_streaming_state(spark) if tuned_state else nullcontext()
-    with ctx:
+    with recommended_streaming_state(spark):
         streams = [
             events_stream(spark, d, watermark=watermark).select(
                 "event_id", "ts", "user_id"
@@ -535,14 +540,14 @@ class CdcMergeSink(_CommitMarkers):
     Layout:  <root>/snapshot_N/...parquet   (state AFTER batch N)
              <root>/_commits/N              (marker, written after data)
 
-    Replay safety: ``process`` for an already-committed batch is a
-    no-op; a replayed UNcommitted batch re-reads the last committed
-    snapshot (never a torn one) and rewrites snapshot_N wholesale, so
-    at-least-once redelivery converges to the same state. State per
-    key is O(1) — count + latest-event struct — so the snapshot scales
-    with |keys|, not |events|; at 100 TB the same shape lands on a
-    transactional table format and the merge becomes the broadcast
-    join of q_merge_upsert.
+    Replay safety: ``process`` for an already-committed batch writes
+    nothing (``_skip_replay``); a replayed UNcommitted batch re-reads
+    the last committed snapshot (never a torn one) and rewrites
+    snapshot_N wholesale, so at-least-once redelivery converges to the
+    same state. State per key is O(1) — count + latest-event struct —
+    so the snapshot scales with |keys|, not |events|; at 100 TB the
+    same shape lands on a transactional table format and the merge
+    becomes the broadcast join of q_merge_upsert.
     """
 
     def __init__(self, root: str):
@@ -555,8 +560,8 @@ class CdcMergeSink(_CommitMarkers):
         return spark.read.parquet(os.path.join(self.root, f"snapshot_{latest}"))
 
     def process(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed batch: idempotent no-op
+        if self._skip_replay(df, batch_id):
+            return
         spark = df.sparkSession
         batch = df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -807,17 +812,13 @@ def run_chain_assign_stream(
     stream_dir: str,
     gap_us: int,
     watermark: str = "35 days",
-    tuned_state: bool = True,
 ) -> list:
     """Streaming chain-root assignment (causal.chain_assign_stream)
     over the staged events log; memory-sink collect for tests.
     Sentinel rows (negative event_id), if staged, are excluded from
     the returned rows but still flow through state — harmless: they
-    use reserved user ids. Runs under the documented
-    stateful-streaming default (RocksDB + 16 state partitions,
-    session.recommended_streaming_state) unless ``tuned_state=False``."""
-    from contextlib import nullcontext
-
+    use reserved user ids. Runs under
+    session.recommended_streaming_state."""
     from distributed_causal_stream_processing_spark.session import (
         recommended_streaming_state,
     )
@@ -825,8 +826,7 @@ def run_chain_assign_stream(
         chain_assign_stream,
     )
 
-    ctx = recommended_streaming_state(spark) if tuned_state else nullcontext()
-    with ctx:
+    with recommended_streaming_state(spark):
         chains = chain_assign_stream(
             events_stream(spark, stream_dir, watermark=watermark), gap_us
         )
@@ -1101,7 +1101,7 @@ class _StreamingIndexDedup(_CommitMarkers):
         return len(live)
 
     def process(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
+        if self._skip_replay(df, batch_id):
             return
         spark = df.sparkSession
         # signatures once per batch; the decisions join and the index
@@ -1414,8 +1414,8 @@ class PostingsIngestSink(_CommitMarkers):
             index_store as ix,
         )
 
-        if self.is_committed(batch_id):
-            return  # replayed batch: idempotent no-op
+        if self._skip_replay(df, batch_id):
+            return
         ix.postings_store_append(
             df.sparkSession, self.store_dir, df.select("doc_id", "text")
         )
@@ -1455,7 +1455,6 @@ def run_causal_deps_stream(
     spark: SparkSession,
     stream_dir: str,
     watermark: str = "35 days",
-    tuned_state: bool = True,
 ) -> list:
     """Streaming cross-key causal layering (causal.causal_deps_stream)
     over the staged events log; memory-sink collect for tests. On a
@@ -1464,10 +1463,7 @@ def run_causal_deps_stream(
     respecting replay asserted in tests/test_streaming.py. Sentinel
     rows (negative event_id) are excluded from the returned rows but
     flow through state harmlessly (reserved user ids → their own
-    pairs). Runs under the documented stateful-streaming default
-    (RocksDB + 16 state partitions) unless ``tuned_state=False``."""
-    from contextlib import nullcontext
-
+    pairs). Runs under session.recommended_streaming_state."""
     from distributed_causal_stream_processing_spark.session import (
         recommended_streaming_state,
     )
@@ -1475,8 +1471,7 @@ def run_causal_deps_stream(
         causal_deps_stream,
     )
 
-    ctx = recommended_streaming_state(spark) if tuned_state else nullcontext()
-    with ctx:
+    with recommended_streaming_state(spark):
         deps = causal_deps_stream(
             events_stream(spark, stream_dir, watermark=watermark).select(
                 "event_id", "ts", "user_id", "event_type"

@@ -249,3 +249,17 @@ def test_observe_streaming_metrics_in_progress(spark, tmp_path):
     from distributed_causal_stream_processing_spark.io import load
 
     assert total == load(spark, SF_SMOKE, "events").count()
+
+
+def test_default_driver_heap_fits_host():
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half of host
+    memory in whole GiB, at least 1g and at most 32g."""
+    from distributed_causal_stream_processing_spark.session import (
+        _default_driver_memory,
+    )
+
+    with open("/proc/meminfo") as fh:
+        host_kb = next(int(x.split()[1]) for x in fh if x.startswith("MemTotal:"))
+    heap = _default_driver_memory()
+    assert heap.endswith("g")
+    assert int(heap[:-1]) == max(1, min(32, host_kb // 2**21))

@@ -1844,3 +1844,130 @@ def test_run_merge_stream_matches_independent_fold(spark, tmp_path):
         for r in table2.snapshot(spark).collect()
     }
     assert got2 == got
+
+
+_STATE_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+)
+
+
+def test_recommended_state_sizes_partitions_to_cores(spark, stream_dir):
+    """Under recommended_streaming_state the sequencer's stateful
+    operator gets one state partition per core, and every conf the
+    context manager set is restored afterwards."""
+    from distributed_causal_stream_processing_spark.session import (
+        recommended_streaming_state,
+    )
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    before = {k: spark.conf.get(k, None) for k in _STATE_CONFS}
+    with recommended_streaming_state(spark):
+        q = (
+            causal.causal_sequence_stream(jobs.events_stream(spark, stream_dir))
+            .writeStream.format("noop")
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            progress = q.lastProgress
+        finally:
+            q.stop()
+    assert {k: spark.conf.get(k, None) for k in _STATE_CONFS} == before
+    op = progress["stateOperators"][0]
+    assert op["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+
+
+def test_idempotent_sink_commits_batch_in_one_job(spark, stream_dir, tmp_path):
+    """A non-replayed batch costs exactly one Spark job (the write), so a
+    read-back or recount of the batch fails here without any timing; the
+    marker's ``rows``, observed on that write, equals the rows of the
+    committed parquet."""
+    import json
+
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    sink = jobs.IdempotentForeachBatchSink(str(tmp_path / "sink"))
+    sc = spark.sparkContext
+    jobs_per_batch = {}
+
+    def process(df, batch_id):
+        group = f"idempotent-sink-{tmp_path.name}-{batch_id}"
+        sc.setJobGroup(group, "sink.process")
+        sink.process(df, batch_id)
+        jobs_per_batch[batch_id] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    q = (
+        causal.causal_sequence_stream(jobs.events_stream(spark, stream_dir))
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", str(tmp_path / "checkpoint"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(jobs_per_batch) >= 4
+    assert set(jobs_per_batch.values()) == {1}, jobs_per_batch
+    for b in jobs_per_batch:
+        with open(sink._marker(b)) as fh:
+            rows = json.load(fh)["rows"]
+        data = os.path.join(sink.data_dir, f"batch_id={b}")
+        assert rows == spark.read.parquet(data).count(), b
+
+
+def test_stateful_stream_restarts_after_crash_past_sink_marker(spark, tmp_path):
+    """Crash after the sink's marker but before Spark commits the batch:
+    the restart replays that batch, which must still run its plan so the
+    sequencer's state stores commit. Every event then lands exactly once
+    with the batch oracle's seq."""
+    from distributed_causal_stream_processing_spark import all_queries
+    from distributed_causal_stream_processing_spark.session import (
+        recommended_streaming_state,
+    )
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    staged = str(tmp_path / "staged")
+    jobs.stage_events_time_ordered(spark, SF_SMOKE, staged, n_files=3)
+    sink = jobs.IdempotentForeachBatchSink(str(tmp_path / "sink"))
+    crash_on = {1}
+
+    def process(df, batch_id):
+        sink.process(df, batch_id)
+        if batch_id in crash_on:
+            crash_on.discard(batch_id)
+            raise RuntimeError(f"injected crash after the marker of batch {batch_id}")
+
+    def run() -> None:
+        with recommended_streaming_state(spark):
+            q = (
+                causal.causal_sequence_stream(
+                    jobs.events_stream(spark, staged, watermark="35 days")
+                )
+                .writeStream.foreachBatch(process)
+                .option("checkpointLocation", str(tmp_path / "checkpoint"))
+                .outputMode("append")
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    assert sink.is_committed(1)
+    run()
+
+    got = sink.read_all(spark).select("event_id", "seq", "late").collect()
+    ids = [r.event_id for r in got]
+    assert len(ids) == len(set(ids)), "an event_id was committed twice"
+    assert not any(r.late for r in got)
+    want = {
+        r.event_id: r.seq
+        for r in all_queries()["q_causal_seq"](spark, SF_SMOKE).collect()
+    }
+    assert {r.event_id: r.seq for r in got} == want
