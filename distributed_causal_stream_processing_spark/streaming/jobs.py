@@ -234,8 +234,8 @@ class IdempotentForeachBatchSink(_CommitMarkers):
     after a crash) cannot duplicate rows — at-least-once delivery +
     idempotent write = effectively-once output. The marker is written
     only after the data write returns, matching the reference's
-    commit-after-write ordering. A committed batch costs one Spark job:
-    the marker's row count is observed on the write itself.
+    commit-after-write ordering. The marker's row count is observed on
+    the write itself, so committing adds no Spark job beyond the write.
     """
 
     def __init__(self, root: str):
