@@ -989,6 +989,22 @@ def test_iterative_shuffle_records_pinned(spark):
             f"{name} shuffled {records:,} records at sf0.001 "
             f"(pinned plan shape: {want:,}) — the plan changed"
         )
+    # The vector quantizer's trainers: k-means, PQ and the trained-cell
+    # IVFADC index. PQ and IVFADC memoize their training, so clear the
+    # memo first to count the Lloyd rounds, not a cache hit. Exact: no
+    # blocked-GEMM packing on these paths.
+    quantizer = {
+        "q_sim_ivf_kmeans": 3_568,
+        "q_sim_pq": 14_804,
+        "q_sim_ivfadc_trained_recall": 25_265,
+    }
+    for name, want in quantizer.items():
+        S._MEMO.clear()
+        records, _ = shuffle_volume(qs, name, spark, sf)
+        assert records == want, (
+            f"{name} shuffled {records:,} records at sf0.001 "
+            f"(pinned plan shape: {want:,}) — the plan changed"
+        )
     # q_dedup_semantic_clusters' chain volume is NOT exactly stable:
     # its pair discovery packs vectors into blocked-GEMM batches per
     # input partition, so intermediate record counts wiggle ~5% with
