@@ -50,9 +50,9 @@ from distributed_causal_stream_processing_spark.operators.similarity import (
     PQ_ITERS,
     PQ_K,
     PQ_M,
-    _coarse_d2,
-    _pq_assign,
-    _pq_subvecs,
+    _ivfadc_codes,
+    _ivfadc_probes,
+    _ivfadc_residuals,
     ivfadc_index,
     ivfadc_index_trained,
     ivfadc_score,
@@ -183,30 +183,10 @@ def ivfadc_index_append(
     vector, partitioned into the probed layout on write; unchanged
     cells' directories are untouched."""
     cent, cb_df = _open_constants(spark, index_dir)
-    codes_path = os.path.join(index_dir, "codes")
-    e = new_embeddings.select("vec_id", "emb")
-    cd = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cell_id", "emb", "cemb", _coarse_d2().alias("cd2")
+    best, sub = _ivfadc_residuals(new_embeddings.select("vec_id", "emb"), cent)
+    _ivfadc_codes(best, sub, cb_df).write.partitionBy("cell_id").mode("append").parquet(
+        os.path.join(index_dir, "codes")
     )
-    best = (
-        cd.groupBy("vec_id")
-        .agg(F.min(F.struct("cd2", "cell_id")).alias("bc"), F.first("emb").alias("emb"))
-        .select("vec_id", F.col("bc.cell_id").alias("cell_id"), "emb")
-    )
-    res = best.join(F.broadcast(cent), ["cell_id"]).select(
-        "vec_id",
-        "cell_id",
-        F.zip_with(F.col("emb"), F.col("cemb"), lambda x, y: x - y).alias("emb"),
-    )
-    new_codes = (
-        _pq_assign(_pq_subvecs(res.select("vec_id", "emb")), cb_df)
-        .select("vec_id", "sub_no", "code")
-        .join(
-            res.select("vec_id", F.col("cell_id").cast("bigint").alias("cell_id")),
-            ["vec_id"],
-        )
-    )
-    new_codes.write.partitionBy("cell_id").mode("append").parquet(codes_path)
 
 
 def probed_cells(
@@ -217,22 +197,8 @@ def probed_cells(
     state (the same contract as collecting k-means centroids), never
     corpus data. This list IS the static partition filter the serving
     scan pushes into the cell-partitioned code table."""
-    from pyspark.sql import Window as W
-
-    qcd = (
-        queries_df.select("query_id", "emb")
-        .crossJoin(F.broadcast(cent))
-        .select("query_id", "cell_id", _coarse_d2().alias("cd2"))
-    )
-    wq = W.partitionBy("query_id").orderBy("cd2", "cell_id")
-    rows = (
-        qcd.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r.cell_id) for r in rows)
+    probes = _ivfadc_probes(queries_df, cent, n_probe)
+    return sorted(int(r.cell_id) for r in probes.select("cell_id").distinct().collect())
 
 
 def ivfadc_search_saved(

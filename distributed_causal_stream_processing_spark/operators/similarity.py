@@ -170,6 +170,22 @@ def cosine(a, b) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def sq_l2(a, b) -> Column:
+    """Squared L2 distance as a left fold over the per-dimension squared
+    differences — bit-equal to the DuckDB oracles' ``list_sum([(a[j] -
+    b[j]) ** 2 for j in range(...)])``, so an argmin or a rounded
+    distance ranks identically on both engines. The one squared-L2
+    fold: k-means, PQ, IVFADC cells and LUTs, k-center and the exact
+    L2 yardsticks all call it. Squared, not sqrt'd: sqrt can collapse
+    two distinct near-tied sums into one double and flip a tie-break
+    (see _kmeans_duck)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def scored(na: str, nb: str) -> Column:
     """Pairwise cosine as dot(ea, eb) / (na · nb), with the two norms
     precomputed as scalar columns on each side BEFORE the join — one
@@ -991,7 +1007,12 @@ def q_dedup_embedding_recall(
     )
 
 
-# --- IVF k-means trainer -------------------------------------------------
+# --- Vector quantizer: nearest codeword + Lloyd trainer ------------------
+#
+# One implementation behind k-means (q_sim_ivf_kmeans), the PQ
+# codebooks (_pq_codebook), the IVFADC coarse cells (_trained_cent) and
+# every IVFADC encode (the offline build and the index store's append).
+# Each has its own unrolled DuckDB oracle; these are the Spark sides.
 
 KM_K = 8  # cells
 KM_ITERS = 3  # fixed Lloyd rounds (deterministic, oracle-unrollable)
@@ -1009,6 +1030,83 @@ KM_ITERS = 3  # fixed Lloyd rounds (deterministic, oracle-unrollable)
 # re-finding that cliff on a future deeper trainer; every current
 # trainer (KM_ITERS=3, IVF_TRAIN_ITERS=2, PQ_ITERS=2) chains fully.
 _LLOYD_CHAIN_MAX = 4
+
+
+def nearest_code(
+    vecs: DataFrame,
+    book: DataFrame,
+    v: str,
+    c: str,
+    code: str,
+    keys: tuple[str, ...] = (),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Nearest codeword per (vec_id, *keys) → (vec_id, *keys, *carry,
+    code, d2): vector column ``v`` of ``vecs`` against the (*keys, code,
+    c) codewords of ``book``.
+
+    The codebook is model-sized and broadcast: an equi join on ``keys``
+    (PQ's per-subspace codebooks), or a cross join when there are none
+    (k-means and coarse cells — PySpark's ``join(on=[])`` raises). The
+    argmin is min(struct(d2, code)): a hash aggregation with map-side
+    partial combine, NOT a window — no sort, no per-vec_id exchange of
+    the fanned-out rows — and the struct order ties-break on ``code``
+    exactly like the oracles' row_number() ORDER BY d2, code.
+    ``carry`` names vector-side columns kept through the aggregation
+    (constant per vec_id, so first() is exact); callers that need the
+    vector back either carry it or join it back, their choice."""
+    book = F.broadcast(book)
+    pairs = vecs.join(book, list(keys)) if keys else vecs.crossJoin(book)
+    ids = ["vec_id", *keys]
+    return (
+        pairs.select(*ids, *carry, F.struct(sq_l2(v, c).alias("d2"), F.col(code)).alias("dc"))
+        .groupBy(*ids)
+        .agg(F.min("dc").alias("best"), *[F.first(x).alias(x) for x in carry])
+        .select(*ids, *carry, F.col(f"best.{code}").alias(code), F.col("best.d2").alias("d2"))
+    )
+
+
+def lloyd(
+    vecs: DataFrame, schema: str, v: str, seed_lo: int, k: int, iters: int
+) -> list[tuple]:
+    """Train a codebook with ``iters`` fixed Lloyd rounds over vector
+    column ``v`` of ``vecs``; returns it collected and sorted as
+    (*keys, code, codeword) tuples.
+
+    ``schema`` is the codebook's DDL: the group keys shared with
+    ``vecs`` (PQ's sub_no; none for k-means cells), the code, then the
+    codeword array. Seeds are the vectors seed_lo <= vec_id < seed_lo
+    + k, with code = vec_id - seed_lo. A round assigns every vector
+    (nearest_code) and re-averages each (key, code, dim) rounded to
+    6 dp, so both engines quantize identically between rounds. The
+    collected state is k x dim doubles per key — constant in the
+    corpus, the MLlib trainer pattern. Rounds chain lazily in blocks
+    of _LLOYD_CHAIN_MAX: one job and one collect per block."""
+    *keys, code, c = [f.split()[0] for f in schema.split(",")]
+
+    def update(book: DataFrame) -> DataFrame:
+        return (
+            nearest_code(vecs, book, v, c, code, tuple(keys), carry=(v,))
+            .select(*keys, code, F.posexplode(v).alias("i", "v"))
+            .groupBy(*keys, code, "i")
+            .agg(F.round(F.avg("v"), 6).alias("v"))
+            .groupBy(*keys, code)
+            .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("cv"))
+            .select(*keys, code, F.col("cv.v").alias(c))
+        )
+
+    seeds = vecs.filter(
+        (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + k)
+    ).collect()
+    book = sorted(
+        (*(r[x] for x in keys), int(r.vec_id) - seed_lo, list(r[v])) for r in seeds
+    )
+    for done in range(0, iters, _LLOYD_CHAIN_MAX):
+        cur = vecs.sparkSession.createDataFrame(book, schema)
+        for _ in range(min(_LLOYD_CHAIN_MAX, iters - done)):
+            cur = update(cur)
+        book = sorted(tuple(r) for r in cur.collect())
+    return book
 
 
 def _kmeans_duck(k: int, iters: int, dim: int) -> str:
@@ -1098,61 +1196,14 @@ def q_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", as_double("embedding").alias("emb"))
         .localCheckpoint()
     )
-    cent_rows = (
-        e.filter(F.col("vec_id") < KM_K)
-        .select(F.col("vec_id").alias("cell_id"), F.col("emb").alias("c"))
-        .collect()
-    )
-    cent = [(int(r.cell_id), list(r.c)) for r in cent_rows]
-
-    def assign(cent_df):
-        # argmin over k cells as min(struct(d2, cell_id)) — a hash
-        # aggregation with map-side partial combine, NOT a window: no
-        # sort, no per-vec_id exchange of the k-fanned rows. The struct
-        # ordering ties-break by cell_id exactly like the oracle's
-        # row_number ORDER BY d2, cell_id.
-        d2 = F.aggregate(
-            F.zip_with(F.col("emb"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return (
-            e.crossJoin(F.broadcast(cent_df))
-            .select("vec_id", "emb", F.struct(d2.alias("d2"), F.col("cell_id")).alias("dc"))
-            .groupBy("vec_id")
-            .agg(F.min("dc").alias("best"), F.first("emb").alias("emb"))
-            .select("vec_id", "emb", F.col("best.cell_id").alias("cell_id"), F.col("best.d2").alias("d2"))
-        )
-
-    # chained Lloyd rounds (see _LLOYD_CHAIN_MAX): each update feeds the
-    # next assign's broadcast side lazily; ONE collect per block instead
-    # of one per round, identical 6-dp-rounded centroids per round
-    def update(cent_df):
-        return (
-            assign(cent_df)
-            .select("cell_id", F.posexplode("emb").alias("i", "v"))
-            .groupBy("cell_id", "i")
-            .agg(F.round(F.avg("v"), 6).alias("v"))
-            .groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("cv"))
-            .select("cell_id", F.col("cv.v").alias("c"))
-        )
-
-    done = 0
-    while done < KM_ITERS:
-        cur = spark.createDataFrame(cent, "cell_id bigint, c array<double>")
-        for _ in range(min(_LLOYD_CHAIN_MAX, KM_ITERS - done)):
-            cur = update(cur)
-            done += 1
-        cent = sorted((int(r.cell_id), list(r.c)) for r in cur.collect())
-
-    cent_df = spark.createDataFrame(cent, "cell_id bigint, c array<double>")
-    sums = {cid: sum(c) for cid, c in cent}
+    schema = "cell_id bigint, c array<double>"
+    cent = lloyd(e, schema, "emb", 0, KM_K, KM_ITERS)
+    cent_df = spark.createDataFrame(cent, schema)
     sum_df = spark.createDataFrame(
-        [(cid, s) for cid, s in sums.items()], "cell_id bigint, csum double"
+        [(cid, sum(c)) for cid, c in cent], "cell_id bigint, csum double"
     )
     return (
-        assign(cent_df)
+        nearest_code(e, cent_df, "emb", "c", "cell_id")
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.round(F.sum("d2"), 2).alias("inertia"))
         .join(F.broadcast(sum_df), "cell_id")
@@ -1421,14 +1472,7 @@ def _kcenter_min_d2(vecs: list[list[float]]) -> Column:
     return F.array_min(
         F.transform(
             _nested_double_literal(vecs),
-            lambda s: F.round(
-                F.aggregate(
-                    F.zip_with(F.col("emb"), s, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                4,
-            ),
+            lambda s: F.round(sq_l2(F.col("emb"), s), 4),
         )
     )
 
@@ -2450,10 +2494,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_subvecs(e: DataFrame) -> DataFrame:
-    """(vec_id, sub_no, sv): the M per-subspace slices of each vector."""
+def _pq_subvecs(e: DataFrame, ids: tuple[str, ...] = ("vec_id",)) -> DataFrame:
+    """(*ids, sub_no, sv): the M per-subspace slices of each ``emb``."""
     return e.select(
-        "vec_id",
+        *ids,
         F.posexplode(
             F.array(
                 *[F.slice("emb", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
@@ -2462,48 +2506,13 @@ def _pq_subvecs(e: DataFrame) -> DataFrame:
     )
 
 
-def _pq_d2(sv: str, c: str) -> Column:
-    """Squared L2 between two small arrays, left-fold order (bit-equal
-    to the oracle's list_sum over an index comprehension)."""
-    return F.aggregate(
-        F.zip_with(F.col(sv), F.col(c), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_assign(sub: DataFrame, cb_df: DataFrame) -> DataFrame:
-    """argmin codeword per (vec_id, sub_no): broadcast the M*K codebook,
-    min(struct(d2, code)) — hash agg with partial combine, no window."""
-    return (
-        sub.join(F.broadcast(cb_df), ["sub_no"])
-        .select(
-            "vec_id",
-            "sub_no",
-            "sv",
-            F.struct(_pq_d2("sv", "c").alias("d2"), F.col("code")).alias("dc"),
-        )
-        .groupBy("vec_id", "sub_no")
-        .agg(F.min("dc").alias("best"), F.first("sv").alias("sv"))
-        .select(
-            "vec_id",
-            "sub_no",
-            "sv",
-            F.col("best.code").alias("code"),
-            F.col("best.d2").alias("d2"),
-        )
-    )
-
-
-def _pq_codebook(spark: SparkSession, sub: DataFrame, seed_lo: int = 0) -> DataFrame:
+def _pq_codebook(sub: DataFrame, seed_lo: int = 0) -> DataFrame:
     """Train the per-subspace codebooks: seeds = subvectors of
     seed_lo <= vec_id < seed_lo + PQ_K, then PQ_ITERS Lloyd rounds run
     for ALL M subspaces in one DataFrame pass each (assignment keys on
     (vec_id, sub_no), update aggregates per (sub_no, code, dim)). The
     codebook collected per round is M*K*PQ_DSUB doubles — constant,
-    never grows with the corpus (the same MLlib trainer pattern as
-    q_sim_ivf_kmeans). Centroids round to 6 dp per round so both
-    engines quantize identically.
+    never grows with the corpus.
 
     ``seed_lo`` exists for the residual-PQ (IVFADC) trainer: its input
     subvectors are coarse-cell RESIDUALS, and vectors 0..N_CELLS-1 ARE
@@ -2513,33 +2522,10 @@ def _pq_codebook(spark: SparkSession, sub: DataFrame, seed_lo: int = 0) -> DataF
     degeneracy: every ADC distance within a cell was constant and
     "search" tie-broke on neighbor_id). IVFADC seeds from
     seed_lo = N_CELLS, the first K vectors with real residuals."""
-    cb = [
-        (int(r.sub_no), int(r.vec_id) - seed_lo, list(r.sv))
-        for r in sub.filter(
-            (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + PQ_K)
-        ).collect()
-    ]
-    # chained Lloyd rounds (see _LLOYD_CHAIN_MAX): one job + one collect
-    # per block instead of per round, identical 6-dp rounding per round
-    def update(cb_df):
-        return (
-            _pq_assign(sub, cb_df)
-            .select("sub_no", "code", F.posexplode("sv").alias("i", "v"))
-            .groupBy("sub_no", "code", "i")
-            .agg(F.round(F.avg("v"), 6).alias("v"))
-            .groupBy("sub_no", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("cv"))
-            .select("sub_no", "code", F.col("cv.v").alias("c"))
-        )
-
-    done = 0
-    while done < PQ_ITERS:
-        cur = spark.createDataFrame(cb, "sub_no int, code bigint, c array<double>")
-        for _ in range(min(_LLOYD_CHAIN_MAX, PQ_ITERS - done)):
-            cur = update(cur)
-            done += 1
-        cb = sorted((int(r.sub_no), int(r.code), list(r.c)) for r in cur.collect())
-    return spark.createDataFrame(cb, "sub_no int, code bigint, c array<double>")
+    schema = "sub_no int, code bigint, c array<double>"
+    return sub.sparkSession.createDataFrame(
+        lloyd(sub, schema, "sv", seed_lo, PQ_K, PQ_ITERS), schema
+    )
 
 
 def _pq_duck(
@@ -2631,7 +2617,7 @@ def _pq_raw_parts(spark: SparkSession, sf_dir: str):
     if key is not None and key in _MEMO:
         return _MEMO[key]
     sub = _build_ckpt(_pq_subvecs(_emb(spark, sf_dir)))
-    cb_df = _pq_codebook(spark, sub)
+    cb_df = _pq_codebook(sub)
     out = (sub, cb_df)
     if key is not None:
         _memo_put(key, out)
@@ -2662,7 +2648,7 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually stores and scans at search time."""
     sub, cb_df = _pq_raw_parts(spark, sf_dir)
     return (
-        _pq_assign(sub, cb_df)
+        nearest_code(sub, cb_df, "sv", "c", "code", keys=("sub_no",))
         .groupBy("vec_id")
         .agg(
             F.array_sort(F.collect_list(F.struct("sub_no", "code"))).alias("sc"),
@@ -2723,12 +2709,14 @@ def _pq_adc_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         sub, cb_df = _pq_raw_parts(spark, sf_dir)
-        codes = _pq_assign(sub, cb_df).select("vec_id", "sub_no", "code")
+        codes = nearest_code(sub, cb_df, "sv", "c", "code", keys=("sub_no",)).select(
+            "vec_id", "sub_no", "code"
+        )
         lut = (
             sub.filter(_q_win())
             .withColumnRenamed("vec_id", "query_id")
             .join(F.broadcast(cb_df), ["sub_no"])
-            .select("query_id", "sub_no", "code", _pq_d2("sv", "c").alias("d2"))
+            .select("query_id", "sub_no", "code", sq_l2("sv", "c").alias("d2"))
         )
         adc = (
             codes.join(F.broadcast(lut), ["sub_no", "code"])
@@ -2932,17 +2920,6 @@ def _ivfadc_search_sql(n_probe: int = N_PROBE, with_rank: bool = False) -> str:
 _IVFADC_SEARCH = _ivfadc_search_sql()
 
 
-def _coarse_d2() -> Column:
-    """Left-fold squared L2 between emb and cemb — bit-equal to the
-    oracle's list_sum comprehension, so coarse cell assignment (argmin
-    with cell_id tie-break) is identical across engines."""
-    return F.aggregate(
-        F.zip_with(F.col("emb"), F.col("cemb"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def ivfadc_index(spark: SparkSession, sf_dir: str):
     """Build the IVFADC index over the embeddings corpus: returns
     (cent, cb_df, codes) — the broadcastable centroid table, the
@@ -2984,33 +2961,56 @@ def ivfadc_index_from(
         cent = e.filter(F.col("vec_id") < N_CELLS).select(
             F.col("vec_id").alias("cell_id"), F.col("emb").alias("cemb")
         )
-    cd = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cell_id", _coarse_d2().alias("cd2")
-    )
-    # argmin cell per vector: min(struct) — partial-aggregating, no window
-    best = (
-        cd.groupBy("vec_id")
-        .agg(F.min(F.struct("cd2", "cell_id")).alias("bc"))
-        .select("vec_id", F.col("bc.cell_id").alias("cell_id"))
-    )
+    best, sub = _ivfadc_residuals(e, cent)
+    sub = _build_ckpt(sub)
+    sub_train = sub.filter(train_pred) if train_pred is not None else sub
+    cb_df = _pq_codebook(sub_train, seed_lo=N_CELLS)
+    codes = _ivfadc_codes(best, sub, cb_df)
+    return cent, cb_df, codes
+
+
+def _ivfadc_residuals(e: DataFrame, cent: DataFrame):
+    """(best, sub): each vector's nearest coarse cell as (vec_id,
+    cell_id), and the PQ subvectors of its residual from that cell's
+    centroid. With _ivfadc_codes, the one IVFADC residual/encode step:
+    the offline build (ivfadc_index_from) and the store's append path
+    (index_store.ivfadc_index_append) both run it, so an appended batch
+    is encoded exactly like the in-memory index."""
+    best = nearest_code(e, cent, "emb", "cemb", "cell_id").select("vec_id", "cell_id")
     res = (
         e.join(best, ["vec_id"])
         .join(F.broadcast(cent), ["cell_id"])
         .select(
             "vec_id",
-            "cell_id",
             F.zip_with(F.col("emb"), F.col("cemb"), lambda x, y: x - y).alias("emb"),
         )
     )
-    sub = _build_ckpt(_pq_subvecs(res.select("vec_id", "emb")))
-    sub_train = sub.filter(train_pred) if train_pred is not None else sub
-    cb_df = _pq_codebook(e.sparkSession, sub_train, seed_lo=N_CELLS)
-    codes = (
-        _pq_assign(sub, cb_df)
+    return best, _pq_subvecs(res)
+
+
+def _ivfadc_codes(best: DataFrame, sub: DataFrame, cb_df: DataFrame) -> DataFrame:
+    """The cell-tagged code table (vec_id, sub_no, code, cell_id): each
+    residual subvector's nearest codeword, tagged with its cell."""
+    return (
+        nearest_code(sub, cb_df, "sv", "c", "code", keys=("sub_no",))
         .select("vec_id", "sub_no", "code")
         .join(best, ["vec_id"])
     )
-    return cent, cb_df, codes
+
+
+def _ivfadc_probes(queries_df: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """(query_id, cell_id, crank, emb, cemb): each query's ``n_probe``
+    nearest coarse cells, ranked by (d2, cell_id) like the oracles'
+    probes CTE. Shared by ivfadc_score and the saved store's
+    partition pruning (index_store.probed_cells)."""
+    w = W.partitionBy("query_id").orderBy("cd2", "cell_id")
+    return (
+        queries_df.select("query_id", "emb")
+        .crossJoin(F.broadcast(cent))
+        .select("query_id", "cell_id", "emb", "cemb", sq_l2("emb", "cemb").alias("cd2"))
+        .withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= n_probe)
+    )
 
 
 def ivfadc_score(
@@ -3034,33 +3034,16 @@ def ivfadc_score(
     sweep (q_sim_ivfadc_probe_sweep) scores once at the deepest level
     and derives every shallower level by filtering crank, instead of
     re-scoring per level."""
-    qcd = queries_df.select(F.col("query_id"), F.col("emb")).crossJoin(
-        F.broadcast(cent)
-    ).select("query_id", "cell_id", "emb", "cemb", _coarse_d2().alias("cd2"))
-    wq = W.partitionBy("query_id").orderBy("cd2", "cell_id")
-    qres = (
-        qcd.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select(
-            "query_id",
-            "cell_id",
-            "crank",
-            F.zip_with(F.col("emb"), F.col("cemb"), lambda x, y: x - y).alias("remb"),
-        )
-    )
-    qsub = qres.select(
+    qres = _ivfadc_probes(queries_df, cent, n_probe).select(
         "query_id",
         "cell_id",
         "crank",
-        F.posexplode(
-            F.array(
-                *[F.slice("remb", m * PQ_DSUB + 1, PQ_DSUB) for m in range(PQ_M)]
-            )
-        ).alias("sub_no", "sv"),
+        F.zip_with(F.col("emb"), F.col("cemb"), lambda x, y: x - y).alias("emb"),
     )
+    qsub = _pq_subvecs(qres, ("query_id", "cell_id", "crank"))
     lut = qsub.join(F.broadcast(cb_df), ["sub_no"]).select(
         "query_id", "cell_id", "crank", "sub_no", "code",
-        _pq_d2("sv", "c").alias("d2"),
+        sq_l2("sv", "c").alias("d2"),
     )
     aggs = [F.round(_fold_by_sub("d2"), 4).alias("adc_dist")]
     if with_rank:
@@ -3280,14 +3263,7 @@ def _exact_nn1(e: DataFrame) -> DataFrame:
     q = e.filter(_q_win()).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qe"), F.col("emb"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
+    d2 = F.round(sq_l2("qe", "emb"), 4)
     w2 = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
     # Broadcast the PQ_NQ-bounded query side explicitly (VERDICT r10
     # item 5): on a DERIVED corpus (clustered eval) the planner has no
@@ -3435,14 +3411,7 @@ def _rerank_l2(e: DataFrame, adc: DataFrame, r: int) -> DataFrame:
         .filter(F.col("rn") <= r)
         .select("query_id", "neighbor_id", "rn")
     )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qe"), F.col("ne"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
+    l2 = F.round(sq_l2("qe", "ne"), 4)
     return (
         short.join(
             e.select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")),
@@ -3932,50 +3901,14 @@ def _trained_cent_duck(iters: int) -> tuple[str, ...]:
     return tuple(ctes)
 
 
-def _trained_cent(e: DataFrame, iters: int = IVF_TRAIN_ITERS) -> DataFrame:
-    """Lloyd-train the N_CELLS coarse centroids over corpus ``e`` —
-    the q_sim_ivf_kmeans trainer pattern (broadcast k×dim centroids,
-    argmin as min(struct) hash-agg, per-(cell, dim) avg rounded to 6 dp
-    so both engines quantize identically between rounds; the collected
-    state is N_CELLS*DIM doubles, constant in the corpus)."""
-    spark = e.sparkSession
-    cent = sorted(
-        (int(r.cell_id), list(r.cemb))
-        for r in e.filter(F.col("vec_id") < N_CELLS)
-        .select(F.col("vec_id").alias("cell_id"), F.col("emb").alias("cemb"))
-        .collect()
+def _trained_cent(e: DataFrame) -> DataFrame:
+    """Lloyd-train the N_CELLS coarse centroids over corpus ``e``
+    (IVF_TRAIN_ITERS rounds of the shared trainer, seeded from
+    vec_id < N_CELLS) as the ``cent(cell_id, cemb)`` table."""
+    schema = "cell_id bigint, cemb array<double>"
+    return e.sparkSession.createDataFrame(
+        lloyd(e, schema, "emb", 0, N_CELLS, IVF_TRAIN_ITERS), schema
     )
-    # chained Lloyd rounds (see _LLOYD_CHAIN_MAX): one job + one collect
-    # per block instead of per round, identical 6-dp rounding per round
-    def update(cent_df):
-        return (
-            e.crossJoin(F.broadcast(cent_df))
-            .select(
-                "vec_id",
-                "emb",
-                F.struct(_coarse_d2().alias("d2"), F.col("cell_id")).alias("dc"),
-            )
-            .groupBy("vec_id")
-            .agg(F.min("dc").alias("best"), F.first("emb").alias("emb"))
-            .select(
-                F.col("best.cell_id").alias("cell_id"),
-                F.posexplode("emb").alias("i", "v"),
-            )
-            .groupBy("cell_id", "i")
-            .agg(F.round(F.avg("v"), 6).alias("v"))
-            .groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("cv"))
-            .select("cell_id", F.col("cv.v").alias("cemb"))
-        )
-
-    done = 0
-    while done < iters:
-        cur = spark.createDataFrame(cent, "cell_id bigint, cemb array<double>")
-        for _ in range(min(_LLOYD_CHAIN_MAX, iters - done)):
-            cur = update(cur)
-            done += 1
-        cent = sorted((int(r.cell_id), list(r.cemb)) for r in cur.collect())
-    return spark.createDataFrame(cent, "cell_id bigint, cemb array<double>")
 
 
 def ivfadc_index_trained(spark: SparkSession, sf_dir: str):
