@@ -186,22 +186,26 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fused-loop rounds chained lazily between checkpoint + certificate
-# probes (see connected_components). 2 is the measured-best LOCAL
-# default (A/B below); it trades O(|V|) extra label-row recompute +
-# shuffle per block for one fewer checkpoint job + sum probe per extra
-# round — the right trade where per-round cost is job overhead (bench
-# scale), the wrong one where shuffle volume dominates (a 100 TB graph:
-# set 1 to shuffle the minimum, every label row exactly once per round).
-_CC_ROUNDS_PER_BLOCK = int(os.environ.get("SPARK_GRAFT_CC_ROUNDS_PER_BLOCK", "2"))
+# Fused rounds chained LAZILY between checkpoint + certificate probes
+# (optimization round 16, VERDICT r15 item 6 A/B): per-round cost at
+# bench scale is fixed job overhead, so batching amortizes the
+# checkpoint job and the sum probe over several joins. Inside a block
+# the previous round's label subtree appears twice (the frontier union
+# branch and the join side); ReuseExchange dedups its shuffles, and the
+# sum certificate still works at block granularity — labels are
+# monotone non-increasing, so the block-end sum equals the block-start
+# sum iff EVERY round in the block was idle. Measured A/B on
+# q_graph_components' edge set (sf0.1, warm min-of-2, identical output
+# verified row-for-row): block=1 3.49 s, block=2 3.09 s, block=3
+# 3.69 s — the duplicated-subtree recompute outgrows the saved probes
+# past 2 (the r14 DEPS_BLOCK lesson: block size trades executor work
+# against analyzer/recompute work, measure before raising). Where
+# shuffle volume dominates instead (a 100 TB graph), 1 shuffles every
+# label row exactly once per round.
+_CC_ROUNDS_PER_BLOCK = 2
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = 50,
-    shortcut: bool = True,
-    rounds_per_block: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Connected components of an undirected edge list (src, dst) →
     (node, component) where component = min node id in the component.
 
@@ -226,11 +230,13 @@ def connected_components(
     round 15), never node-pair materialization; lineage cut with
     localCheckpoint. Hypothesis-tested against
     union-find in tests/test_properties.py, whose chain-topology pin
-    proves a diameter where the plain loop's guard raises at the same
-    round budget and this loop converges.
+    proves a diameter where plain propagation raises at the same round
+    budget and this loop converges.
 
-    ``shortcut=False`` keeps the plain O(diameter) propagation — used
-    only by that contrast test.
+    Exactly ``max_rounds`` rounds run at most: rounds chain in blocks
+    of _CC_ROUNDS_PER_BLOCK and the last block is clamped to the
+    remaining budget. Exhausting the budget with labels still moving
+    raises.
     """
     # symmetrize once so propagation runs both directions
     sym = (
@@ -245,35 +251,6 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    if not shortcut:
-        # plain O(diameter) propagation — kept verbatim as the contrast
-        # baseline tests/test_properties.py pins against the fused loop
-        changed = True
-        for _ in range(max_rounds):
-            neigh_min = (
-                sym.join(labels, sym.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("label").alias("nmin"))
-            )
-            cand = labels.join(neigh_min, labels.node == neigh_min.src, "left").select(
-                "node", "label", F.coalesce("nmin", "label").alias("cand")
-            )
-            merged = cand.select(
-                "node",
-                F.least("label", "cand").alias("new_label"),
-                (F.col("cand") < F.col("label")).alias("shrunk"),
-            ).localCheckpoint()
-            changed = merged.filter("shrunk").limit(1).count() > 0
-            labels = merged.select("node", F.col("new_label").alias("label"))
-            if not changed:
-                break
-        if changed:
-            raise RuntimeError(
-                f"connected_components did not converge within {max_rounds} "
-                "rounds — raise max_rounds"
-            )
-        return labels.select("node", F.col("label").alias("component"))
-
     # FUSED propagation + pointer-doubling (optimization round 15,
     # guide §2.4): the previous loop ran three joins per round
     # (neighbor-min, left-join back onto labels, and — from round 2 —
@@ -311,29 +288,10 @@ def connected_components(
             raise TypeError(
                 "connected_components convergence certificate needs "
                 "numeric (castable to decimal) node ids; got a label "
-                "column that sums to NULL — use shortcut=False or "
-                "map ids to integers first"
+                "column that sums to NULL — map ids to integers first"
             )
         return s
 
-    # ``rounds_per_block`` chains that many fused rounds LAZILY between
-    # checkpoint + certificate probes (optimization round 16, VERDICT
-    # r15 item 6 A/B): per-round cost at bench scale is fixed job
-    # overhead, so batching amortizes the checkpoint job and the sum
-    # probe over several joins. Inside a block the previous round's
-    # label subtree appears twice (the frontier union branch and the
-    # join side); ReuseExchange dedups its shuffles, and the sum
-    # certificate still works at block granularity — labels are
-    # monotone non-increasing, so the block-end sum equals the
-    # block-start sum iff EVERY round in the block was idle.
-    # Measured A/B on q_graph_components' edge set (sf0.1, warm
-    # min-of-2, identical output verified row-for-row): block=1 3.49 s,
-    # block=2 3.09 s, block=3 3.69 s — the duplicated-subtree recompute
-    # outgrows the saved probes past 2, so 2 is the shipped default
-    # (the r14 DEPS_BLOCK lesson: block size trades executor work
-    # against analyzer/recompute work, measure before raising).
-    if rounds_per_block is None:
-        rounds_per_block = _CC_ROUNDS_PER_BLOCK
     prev_sum = _label_sum(labels)
     converged = False
 
@@ -341,11 +299,11 @@ def connected_components(
         frontier = lb.select(
             F.col("node").alias("src"), F.col("label").alias("dst")
         ).unionAll(sym)
-        # name-based join condition: the chained (rounds_per_block > 1)
-        # case embeds lb's plan inside frontier too, and an
-        # attribute-based lb.node would be ambiguous after Spark's
-        # relation deduplication; (src, dst) vs (node, label) names are
-        # disjoint, so F.col resolves each side uniquely
+        # name-based join condition: a chained block embeds lb's plan
+        # inside frontier too, and an attribute-based lb.node would be
+        # ambiguous after Spark's relation deduplication; (src, dst) vs
+        # (node, label) names are disjoint, so F.col resolves each side
+        # uniquely
         return (
             frontier.join(lb, F.col("dst") == F.col("node"))
             .groupBy("src")
@@ -353,8 +311,8 @@ def connected_components(
             .withColumnRenamed("src", "node")
         )
 
-    for _ in range(max(1, (max_rounds + rounds_per_block - 1) // rounds_per_block)):
-        for _ in range(rounds_per_block):
+    for done in range(0, max_rounds, _CC_ROUNDS_PER_BLOCK):
+        for _ in range(min(_CC_ROUNDS_PER_BLOCK, max_rounds - done)):
             labels = one_round(labels)
         labels = labels.localCheckpoint()
         new_sum = _label_sum(labels)

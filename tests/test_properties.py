@@ -591,6 +591,77 @@ def test_connected_components_raises_on_round_exhaustion(spark):
         connected_components(edges, max_rounds=2)
 
 
+def test_connected_components_runs_exactly_max_rounds(spark):
+    """``max_rounds`` is the number of fused rounds that run: the loop
+    chains rounds in blocks of two and clamps the last block to the
+    remaining budget. On the 200-hop chain every budget below 5 runs
+    out, so each extra round of budget must shuffle more records — an
+    unclamped last block would run budgets 1 and 2 (and 3 and 4) as
+    the same two (four) rounds."""
+    import pytest as _pytest
+
+    from distributed_causal_stream_processing_spark.benchlib import shuffle_volume
+    from distributed_causal_stream_processing_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "src long, dst long"
+    )
+
+    def records(max_rounds: int) -> int:
+        def run(spark, _sf):
+            with _pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(edges, max_rounds=max_rounds)
+            return spark.range(1)
+
+        return shuffle_volume({"cc": run}, "cc", spark, None)[0]
+
+    per_budget = [records(r) for r in (1, 2, 3, 4)]
+    assert all(a < b for a, b in zip(per_budget, per_budget[1:])), per_budget
+
+
+def _plain_propagation_components(edges, max_rounds: int):
+    """Plain O(diameter) min-label propagation: each round every node
+    takes the minimum of its own and its neighbors' labels. The
+    contrast baseline for connected_components' pointer doubling;
+    raises like it when the budget runs out."""
+    from pyspark.sql import functions as F
+
+    sym = (
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint()
+    )
+    labels = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint()
+    )
+    for _ in range(max_rounds):
+        neigh_min = (
+            sym.join(labels, sym.dst == labels.node)
+            .groupBy("src")
+            .agg(F.min("label").alias("nmin"))
+        )
+        cand = labels.join(neigh_min, labels.node == neigh_min.src, "left").select(
+            "node", "label", F.coalesce("nmin", "label").alias("cand")
+        )
+        merged = cand.select(
+            "node",
+            F.least("label", "cand").alias("new_label"),
+            (F.col("cand") < F.col("label")).alias("shrunk"),
+        ).localCheckpoint()
+        labels = merged.select("node", F.col("new_label").alias("label"))
+        if merged.filter("shrunk").limit(1).count() == 0:
+            return labels.select("node", F.col("label").alias("component"))
+    raise RuntimeError(
+        f"plain propagation did not converge within {max_rounds} rounds"
+    )
+
+
 def test_pointer_doubling_converges_where_plain_propagation_raises(spark):
     """VERDICT r12 item 3, the contrast pin: on a chain whose diameter
     (200) far exceeds the round budget (20), plain min-label
@@ -607,7 +678,7 @@ def test_pointer_doubling_converges_where_plain_propagation_raises(spark):
         [(i, i + 1) for i in range(200)], "src long, dst long"
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=20, shortcut=False)
+        _plain_propagation_components(edges, max_rounds=20)
     comp = {
         r.node: r.component
         for r in connected_components(edges, max_rounds=20).collect()
