@@ -26,7 +26,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # snapshots per commit; RocksDB spills state to local disk and (with
 # changelog checkpointing) uploads only per-batch deltas, so per-key state
 # 100x larger than heap survives. JVM-side only — needs no extra Python
-# deps, unlike transformWithState (see streaming/causal.py:tws_available).
+# deps.
 ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )

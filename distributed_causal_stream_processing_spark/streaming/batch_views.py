@@ -222,7 +222,7 @@ def q_causal_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's causal merge. Concurrent events (equal ts) are ordered
     by the unique event id, a deterministic arbitrary order consistent
     with causality. Streaming form: keyed max-seq state via
-    transformWithState (streaming/causal.py).
+    applyInPandasWithState (streaming/causal.py).
     """
     e = load(spark, sf_dir, "events")
     return causal_sequence_batch(e).select("user_id", "event_id", "ts", "seq")

@@ -139,114 +139,6 @@ def causal_sequence_stream(events: DataFrame) -> DataFrame:
     )
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def tws_available() -> bool:
-    """transformWithState's Python state protocol speaks protobuf to the
-    JVM state server; without the `protobuf` package the driver worker
-    crashes at pre-init (verified in this container). Gate, don't fail.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_causal_processor():
-    """Build the TWS CausalProcessor class (defined inside a function so
-    cloudpickle serializes it by value — workers need no PYTHONPATH —
-    and so tests can instantiate it against a fake handle without the
-    protobuf wire protocol: the class itself only needs pyspark)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CausalProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("causal_seq", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-            (user_id,) = key
-            if self._state.exists():
-                max_seq, last_ts_us, last_eid = self._state.get()
-            else:
-                max_seq, last_ts_us, last_eid = 0, -(2**62), -1
-            import numpy as np
-
-            # concat-then-sort, exactly like causal_sequence_stream: a
-            # key spanning several Arrow chunks arrives in shuffle
-            # order, and the sorted-batch vectorization below is only
-            # valid over the WHOLE micro-batch (per-chunk sorting would
-            # mis-flag chunk-2 rows older than chunk-1's max as late —
-            # code-review find, round 7)
-            chunks = [c for c in rows if len(c)]
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ["ts", "event_id"], kind="mergesort"
-                )
-                # sorted batch ⇒ late only vs the carry-in watermark
-                n = len(pdf)
-                ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-                eid = pdf["event_id"].to_numpy()
-                # <= on the id: equal-to-watermark = redelivered
-                # duplicate, flag it (see the applyInPandasWithState twin)
-                lates = (ts_us < last_ts_us) | (
-                    (ts_us == last_ts_us) & (eid <= last_eid)
-                )
-                seqs = np.arange(max_seq + 1, max_seq + n + 1)
-                max_seq += n
-                if not lates[-1]:
-                    last_ts_us, last_eid = int(ts_us[-1]), int(eid[-1])
-                self._state.update((max_seq, last_ts_us, last_eid))
-                yield pd.DataFrame(
-                    {
-                        "user_id": user_id,
-                        "event_id": eid,
-                        "ts": pdf["ts"].to_numpy(),
-                        "seq": seqs,
-                        "late": lates,
-                    }
-                )
-            else:
-                self._state.update((max_seq, last_ts_us, last_eid))
-
-        def close(self) -> None:
-            pass
-
-    return CausalProcessor
-
-
-def causal_sequence_stream_tws(events: DataFrame) -> DataFrame:
-    """Same sequencer on Spark 4's transformWithState API.
-
-    transformWithState is the successor to applyInPandasWithState:
-    typed state variables (ValueState/ListState/MapState), timers, TTL,
-    and state-schema evolution. Identical semantics to
-    ``causal_sequence_stream``; kept alongside it because TWS requires
-    (a) the RocksDB state-store provider — set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``ROCKSDB_PROVIDER`` before starting the query — and (b) the
-    `protobuf` package (check ``tws_available()``), while the classic
-    API runs anywhere. The processor logic itself is unit-tested
-    against a fake state handle (tests/test_streaming.py), so the
-    absence of protobuf in this container gates only the wire protocol,
-    not the semantics.
-    """
-    CausalProcessor = make_causal_processor()
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CausalProcessor(),
-        outputStructType=CAUSAL_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming causal pattern matching (MATCH_RECOGNIZE-lite, unbounded form
 # of operators/windows.py::q_event_pattern).

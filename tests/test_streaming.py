@@ -378,100 +378,81 @@ def test_stream_stream_join_matches_batch(spark, stream_dir):
     assert got == want and len(want) > 0
 
 
-class _FakeValueState:
-    """Minimal stand-in for TWS ValueState: exists/get/update."""
+def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
+    """The sequencer's late-flag rules, end to end on a file stream of
+    three micro-batches (one file each, maxFilesPerTrigger=1):
 
-    def __init__(self):
-        self._val = None
+    1. rows within a batch are sequenced in (ts, event_id) order, even
+       when the file holds them out of order;
+    2. ``seq`` continues across batches — the per-key state survives;
+    3. a row behind the key's frontier is flagged late and still
+       sequenced;
+    4. an exact redelivery of the frontier event (same ts AND id) is
+       flagged late, never reprocessed as new.
 
-    def exists(self):
-        return self._val is not None
+    A key first seen in the last batch starts again at seq 1."""
+    import datetime as dt
+    import glob
+    import time as _time
 
-    def get(self):
-        return self._val
+    from pyspark.sql import Row
 
-    def update(self, new_value):
-        self._val = tuple(new_value)
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
 
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema, ttl_duration_ms=None):
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def test_causal_tws_processor_logic(spark, stream_dir):
-    """Unit test of the transformWithState CausalProcessor against a
-    fake state handle — the container lacks protobuf, so the TWS wire
-    protocol can't run end-to-end here (tws_available() gates the
-    production path); this drives the identical processor class
-    (init/handleInputRows/state round-trip) directly, covering the
-    sequencing semantics: gapless per-key seq across BATCHES (state
-    survives between handleInputRows calls), late flags for events
-    behind the causal frontier, and (ts, event_id) ordering within a
-    batch. End-to-end stateful streaming is covered by the
-    applyInPandasWithState tests above; when protobuf is present,
-    causal_sequence_stream_tws runs the same class unmodified."""
-    import pandas as pd
-
-    from distributed_causal_stream_processing_spark.streaming.causal import (
-        make_causal_processor,
-    )
-
-    proc = make_causal_processor()()
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    def batch(rows):
-        # rows: list of (event_id, ts_ns) — deliberately unsorted input
-        return pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pd.to_datetime([r[1] for r in rows], unit="ns"),
-                "user_id": 7,
-            }
+    def ev(event_id, user_id, ms):
+        return Row(
+            event_id=event_id,
+            ts=base + dt.timedelta(milliseconds=ms),
+            user_id=user_id,
+            event_type="click",
+            value=1.0,
+            props="{}",
         )
 
-    # micro-batch 1: out-of-order within the batch → must sort by (ts, id)
-    out1 = pd.concat(
-        proc.handleInputRows((7,), iter([batch([(11, 2_000), (10, 1_000)])]), None)
+    batches = [
+        [ev(11, 7, 2_000), ev(10, 7, 1_000)],  # out of order in the file
+        [ev(12, 7, 1_500), ev(13, 7, 3_000)],  # 12 is behind the frontier
+        [ev(13, 7, 3_000), ev(20, 8, 5_000)],  # redelivered 13; new key 8
+    ]
+    d = str(tmp_path / "late_flags")
+    seen: set[str] = set()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, jobs.EVENT_SCHEMA).coalesce(1).write.mode(
+            "overwrite" if i == 0 else "append"
+        ).parquet(d)
+        new_files = set(glob.glob(os.path.join(d, "part-*.parquet"))) - seen
+        seen |= new_files
+        t = _time.time() + 1000 * i  # mtime order = batch order
+        for f in new_files:
+            os.utime(f, (t, t))
+
+    seq = causal.causal_sequence_stream(jobs.events_stream(spark, d, watermark="1 day"))
+    q = (
+        seq.writeStream.format("memory")
+        .queryName("causal_late_flags_out")
+        .outputMode("append")
+        .start()
     )
-    assert list(out1.sort_values("seq")["event_id"]) == [10, 11]
-    assert list(out1.sort_values("seq")["seq"]) == [1, 2]
-    assert not out1["late"].any()
+    try:
+        q.processAllAvailable()
+        rows = spark.sql(
+            "SELECT user_id, event_id, seq, late FROM causal_late_flags_out"
+        ).collect()
+        n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    finally:
+        q.stop()
 
-    # micro-batch 2: state carried over — seq continues at 3; the event
-    # at ts=1500ns is BEHIND the frontier (2000ns) → late, still sequenced
-    out2 = pd.concat(
-        proc.handleInputRows((7,), iter([batch([(12, 1_500), (13, 3_000)])]), None)
-    )
-    got = {r.event_id: (r.seq, r.late) for r in out2.itertuples()}
-    assert got[12] == (3, True)
-    assert got[13] == (4, False)
-
-    # state now holds the non-late frontier and max_seq
-    max_seq, last_ts_us, last_eid = handle.states["causal_seq"].get()
-    assert max_seq == 4 and last_eid == 13 and last_ts_us == 3  # 3000ns = 3µs
-
-    # micro-batch 3 (review find, round 9): a redelivered EXACT
-    # duplicate of the most recent event — (ts, id) EQUAL to the
-    # frontier — must be flagged late, never silently reprocessed as
-    # new (a strict < comparison reprocessed it with late=False); the
-    # frontier itself stays put
-    out4 = pd.concat(
-        proc.handleInputRows((7,), iter([batch([(13, 3_000)])]), None)
-    )
-    assert bool(out4["late"].iloc[0]) is True
-    _, last_ts_us, last_eid = handle.states["causal_seq"].get()
-    assert last_eid == 13 and last_ts_us == 3
-
-    # fresh key → fresh state object, numbering restarts at 1
-    proc2 = make_causal_processor()()
-    proc2.init(_FakeHandle())
-    out3 = pd.concat(proc2.handleInputRows((8,), iter([batch([(20, 5_000)])]), None))
-    assert list(out3["seq"]) == [1]
+    assert n_batches == 3
+    assert sorted((r.user_id, r.seq, r.event_id, r.late) for r in rows) == [
+        (7, 1, 10, False),  # rule 1: (ts, event_id) order within a batch
+        (7, 2, 11, False),
+        (7, 3, 12, True),  # rules 2 + 3: seq continues; behind → late
+        (7, 4, 13, False),
+        (7, 5, 13, True),  # rule 4: exact redelivery of the frontier
+        (8, 1, 20, False),
+    ]
 
 
 def test_causal_sequence_stream_rocksdb_state(spark, stream_dir):
