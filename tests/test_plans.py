@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 
@@ -37,6 +39,21 @@ def _registry():
 
     all_queries()
     return REGISTRY
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """{name: (optimized plan, executed plan)} for every registered
+    query, built ONCE under _memo_disabled and shared by the three
+    registry-wide audits (cartesian, Python surface, global window) —
+    building all queries is the slow part, and each audit only reads
+    plan strings."""
+    plans = {}
+    with _memo_disabled():
+        for name, spec in sorted(_registry().items()):
+            qe = spec.fn(spark, SF_SMOKE)._jdf.queryExecution()
+            plans[name] = (qe.optimizedPlan().toString(), qe.executedPlan().toString())
+    return plans
 
 
 def test_broadcast_join_is_broadcast(spark):
@@ -188,20 +205,15 @@ CARTESIAN_OK = {
 }
 
 
-def test_no_accidental_cartesian_products(spark):
+def test_no_accidental_cartesian_products(registry_plans):
     """Registry-wide audit: no query may contain a CartesianProduct or
     BroadcastNestedLoopJoin unless it is on the explicit allowlist —
     an equi join degrading to a product is the classic silent
     100 TB-killer."""
     bad = []
-    with _memo_disabled():
-        for name, spec in sorted(_registry().items()):
-            df = spec.fn(spark, SF_SMOKE)
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-            if (
-                "Join Cross" in plan or "NestedLoop" in plan
-            ) and name not in CARTESIAN_OK:
-                bad.append(name)
+    for name, (plan, _) in registry_plans.items():
+        if ("Join Cross" in plan or "NestedLoop" in plan) and name not in CARTESIAN_OK:
+            bad.append(name)
     assert not bad, f"unexpected cartesian/NLJ in: {bad}"
 
 
@@ -632,37 +644,29 @@ _PY_MARKERS = (
 )
 
 
-def test_no_python_outside_declared_surfaces_registry_wide(spark):
+def test_no_python_outside_declared_surfaces_registry_wide(registry_plans):
     """Registry-wide audit: Python may appear in a query's physical
     plan only on the declared Arrow-batched surfaces above — a Python
     eval node sneaking into a relational query is the classic 10-100×
     hot-path slowdown. (The manual audit VERDICT performs each round,
     made permanent.)"""
     bad = []
-    with _memo_disabled():
-        for name, spec in sorted(_registry().items()):
-            df = spec.fn(spark, SF_SMOKE)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            if any(m in plan for m in _PY_MARKERS) and name not in PYTHON_EVAL_OK:
-                bad.append(name)
+    for name, (_, plan) in registry_plans.items():
+        if any(m in plan for m in _PY_MARKERS) and name not in PYTHON_EVAL_OK:
+            bad.append(name)
     assert not bad, f"undeclared Python eval in: {bad}"
 
 
-def test_no_unbounded_global_window_registry_wide(spark):
+def test_no_unbounded_global_window_registry_wide(registry_plans):
     """Registry-wide audit: no query may plan an unpartitioned ordered
     Window except the bounded-input allowlist above. Guards every
     future query against the single-partition-window trap without a
     per-query test."""
     bad = []
-    with _memo_disabled():
-        for name, spec in sorted(_registry().items()):
-            df = spec.fn(spark, SF_SMOKE)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            unpart = [
-                n for n in _window_nodes(plan) if not _is_partitioned_window(n)
-            ]
-            if unpart and name not in BOUNDED_GLOBAL_WINDOW_OK:
-                bad.append(name)
+    for name, (_, plan) in registry_plans.items():
+        unpart = [n for n in _window_nodes(plan) if not _is_partitioned_window(n)]
+        if unpart and name not in BOUNDED_GLOBAL_WINDOW_OK:
+            bad.append(name)
     assert not bad, f"unbounded global window in: {bad}"
 
 
