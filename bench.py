@@ -46,8 +46,8 @@ def main() -> None:
     # are meaningless for a low-core scaling run (ADVICE r15 — the
     # driver's cpus=8 pass left a detail that statically flagged
     # build_ivfadc_trained at 2.1x forever).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="dcsp-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     queries = all_queries()
     timings: dict[str, float] = {}

@@ -13,7 +13,7 @@ rather than via file:line citations.
 
 Layout
 ------
-- ``session``    SparkSession builder tuned for local[32] testing but
+- ``session``    SparkSession builder tuned for local[<cores>] testing but
                  configured the way a 1000-executor cluster job would be
                  (AQE, adaptive skew join, explicit shuffle partitions).
 - ``io``         fixture loaders + temp-view registration.
@@ -61,10 +61,7 @@ def __getattr__(name):  # pragma: no cover - thin lazy-import shims
         "ivfadc_score": "operators.similarity",
         "run_streaming_ivfadc": "streaming.jobs",
         "MergeSpec": "transactional",
-        "build_merge_into_sql": "transactional",
         "ParquetMergeTable": "transactional",
-        "DeltaMergeTable": "transactional",
-        "IcebergMergeTable": "transactional",
     }
     if name in lazy:
         import importlib
@@ -100,9 +97,6 @@ __all__ = [
     "ivfadc_score",
     "run_streaming_ivfadc",
     "MergeSpec",
-    "build_merge_into_sql",
     "ParquetMergeTable",
-    "DeltaMergeTable",
-    "IcebergMergeTable",
 ]
 __version__ = "0.1.0"

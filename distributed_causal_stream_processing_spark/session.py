@@ -6,7 +6,8 @@ chosen to also be the right call on a large cluster:
 - AQE on (runtime partition coalescing, skew-join splitting, join
   re-selection) — at 100 TB the static plan is always wrong somewhere.
 - Explicit ``spark.sql.shuffle.partitions`` sized to the parallelism at
-  hand (32 locally; thousands on a real cluster — AQE coalesces down).
+  hand (one per core locally; thousands on a real cluster — AQE
+  coalesces down).
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are reproducible across clusters.
 - Arrow enabled for the (rare, deliberate) Python↔JVM crossings.
@@ -19,7 +20,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS overrides; otherwise one task slot per core this
+# process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 # State-store provider for stateful streaming at scale. The default
 # HDFS-backed provider keeps every key in executor heap and rewrites full

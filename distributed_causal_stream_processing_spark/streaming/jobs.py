@@ -13,6 +13,10 @@ this module runs the same logic as real unbounded jobs:
   AFTER the data (write-then-commit), so at-least-once redelivery of a
   batch cannot duplicate output.
 
+Every runner whose query keeps state starts it under
+``session.recommended_streaming_state`` (RocksDB, one state partition
+per core), so all stateful builders run on one state rule.
+
 Tests (tests/test_streaming.py) assert the semantic invariants the
 oracle can't: late-data drop past the watermark, replay idempotence,
 per-key monotone sequences across micro-batches.
@@ -29,6 +33,8 @@ import tempfile
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from distributed_causal_stream_processing_spark.session import recommended_streaming_state
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -71,19 +77,20 @@ def run_tumbling_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql(
-            "SELECT w.start AS window_start, event_type, n_events FROM tumbling_out"
-        ).collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("tumbling_out")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql(
+                "SELECT w.start AS window_start, event_type, n_events FROM tumbling_out"
+            ).collect()
+        finally:
+            q.stop()
 
 
 def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
@@ -100,19 +107,20 @@ def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("n_users"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_distinct_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql(
-            "SELECT w.start AS window_start, n_users FROM win_distinct_out"
-        ).collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("win_distinct_out")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql(
+                "SELECT w.start AS window_start, n_users FROM win_distinct_out"
+            ).collect()
+        finally:
+            q.stop()
 
 
 def run_dedup_stream(spark: SparkSession, stream_dir: str, watermark: str = "35 days") -> list:
@@ -125,17 +133,18 @@ def run_dedup_stream(spark: SparkSession, stream_dir: str, watermark: str = "35 
     deduped = events_stream(spark, stream_dir, watermark=watermark).dropDuplicates(
         ["event_id"]
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql("SELECT event_id FROM dedup_out").collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            deduped.writeStream.format("memory")
+            .queryName("dedup_out")
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql("SELECT event_id FROM dedup_out").collect()
+        finally:
+            q.stop()
 
 
 def run_dedup_stream_bounded(
@@ -158,34 +167,37 @@ def run_dedup_stream_bounded(
     deduped = events_stream(
         spark, stream_dir, watermark=watermark
     ).dropDuplicatesWithinWatermark(["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_bounded_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        state_rows = max(
-            (
-                op["numRowsTotal"]
-                for p in q.recentProgress
-                for op in p.get("stateOperators", [])
-            ),
-            default=0,
+    with recommended_streaming_state(spark):
+        q = (
+            deduped.writeStream.format("memory")
+            .queryName("dedup_bounded_out")
+            .outputMode("append")
+            .start()
         )
-        return spark.sql("SELECT event_id FROM dedup_bounded_out").collect(), state_rows
-    finally:
-        q.stop()
+        try:
+            q.processAllAvailable()
+            state_rows = max(
+                (
+                    op["numRowsTotal"]
+                    for p in q.recentProgress
+                    for op in p.get("stateOperators", [])
+                ),
+                default=0,
+            )
+            rows = spark.sql("SELECT event_id FROM dedup_bounded_out").collect()
+            return rows, state_rows
+        finally:
+            q.stop()
 
 
 class _CommitMarkers:
     """The write-then-commit marker protocol shared by every
-    foreachBatch sink in this module (IdempotentForeachBatchSink,
-    CdcMergeSink, the streaming dedup indexes) — ONE implementation of
-    the file's core crash-safety contract, so a hardening change (e.g.
-    fsync before the marker write, atomic marker creation) lands in
-    every sink at once instead of by copy-paste discipline."""
+    effectively-once sink (IdempotentForeachBatchSink, the two
+    _SnapshotTable sinks CdcMergeSink and transactional.ParquetMergeTable,
+    the streaming dedup indexes, PostingsIngestSink) — ONE
+    implementation of the core crash-safety contract, so a hardening
+    change (e.g. fsync before the marker write, atomic marker creation)
+    lands in every sink at once instead of by copy-paste discipline."""
 
     def _init_markers(self, root: str) -> None:
         self.root = root
@@ -220,6 +232,43 @@ class _CommitMarkers:
         # ordering every reader in this module relies on
         with open(self._marker(batch_id), "w") as fh:
             json.dump({"batch_id": batch_id, **payload}, fh)
+
+
+class _SnapshotTable(_CommitMarkers):
+    """A keyed table kept as one full snapshot per committed version.
+
+    Layout:  <root>/snapshot_N/...parquet   (table state AFTER version N)
+             <root>/_commits/N              (marker, written after data)
+
+    Readers see only the latest committed snapshot, so a torn write
+    (data without marker) is invisible and is rewritten wholesale when
+    its version is retried. Subclasses own only their merge rule; the
+    layout, the read and the commit live here once."""
+
+    def __init__(self, root: str):
+        self._init_markers(root)
+
+    def _snapshot_dir(self, version: int) -> str:
+        return os.path.join(self.root, f"snapshot_{version}")
+
+    def snapshot(self, spark: SparkSession) -> DataFrame | None:
+        latest = self._latest_committed()
+        if latest < 0:
+            return None
+        return spark.read.parquet(self._snapshot_dir(latest))
+
+    def _commit_snapshot(self, merged: DataFrame, version: int) -> None:
+        merged.write.mode("overwrite").parquet(self._snapshot_dir(version))
+        self._write_marker(version)
+        # prune superseded snapshots AFTER the marker commit: only the
+        # latest committed snapshot is ever read back, so keeping every
+        # version's full keyed state grows storage O(versions × keys);
+        # the markers themselves stay (replay idempotence needs them),
+        # and a crash before this loop just leaves garbage the next
+        # commit prunes
+        for b in self._committed_ids():
+            if b < version:
+                shutil.rmtree(self._snapshot_dir(b), ignore_errors=True)
 
 
 class IdempotentForeachBatchSink(_CommitMarkers):
@@ -313,17 +362,18 @@ def run_stateful_agg_stream(spark: SparkSession, stream_dir: str) -> list:
             F.max("ts").alias("last_ts"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stateful_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql("SELECT * FROM stateful_out").collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("stateful_out")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql("SELECT * FROM stateful_out").collect()
+        finally:
+            q.stop()
 
 
 def run_stream_stream_join(
@@ -388,17 +438,18 @@ def _click_purchase_join(
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         how,
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql(result_sql).collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            joined.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql(result_sql).collect()
+        finally:
+            q.stop()
 
 
 def stage_events_split_sources(
@@ -461,9 +512,6 @@ def run_multi_source_causal_stream(
     Runs under session.recommended_streaming_state (RocksDB, one state
     partition per core).
     """
-    from distributed_causal_stream_processing_spark.session import (
-        recommended_streaming_state,
-    )
     from distributed_causal_stream_processing_spark.streaming.causal import (
         causal_sequence_stream,
     )
@@ -506,20 +554,21 @@ def run_session_window_stream(
         .groupBy(F.session_window("ts", "15 minutes").alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("session_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql(
-            "SELECT user_id, sw.start AS session_start, sw.end AS session_end,"
-            " n_events FROM session_out"
-        ).collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("session_out")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql(
+                "SELECT user_id, sw.start AS session_start, sw.end AS session_end,"
+                " n_events FROM session_out"
+            ).collect()
+        finally:
+            q.stop()
 
 
 def temp_dir(prefix: str) -> str:
@@ -530,46 +579,33 @@ def cleanup(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
-class CdcMergeSink(_CommitMarkers):
+class CdcMergeSink(_SnapshotTable):
     """Streaming CDC apply: maintain a keyed snapshot table (per-user
     event count + latest event) by MERGE-ing each micro-batch into the
     previous snapshot — the reference's per-key materialized view,
     maintained incrementally with the same effectively-once contract
     as IdempotentForeachBatchSink.
 
-    Layout:  <root>/snapshot_N/...parquet   (state AFTER batch N)
-             <root>/_commits/N              (marker, written after data)
-
     Replay safety: ``process`` for an already-committed batch writes
     nothing (``_skip_replay``); a replayed UNcommitted batch re-reads
     the last committed snapshot (never a torn one) and rewrites
-    snapshot_N wholesale, so at-least-once redelivery converges to the
-    same state. State per key is O(1) — count + latest-event struct —
-    so the snapshot scales with |keys|, not |events|; at 100 TB the
-    same shape lands on a transactional table format and the merge
-    becomes the broadcast join of q_merge_upsert.
+    snapshot_N wholesale (``_SnapshotTable``), so at-least-once
+    redelivery converges to the same state. State per key is O(1) —
+    count + latest-event struct — so the snapshot scales with |keys|,
+    not |events|, and the merge is one full-outer join on user_id per
+    batch.
     """
-
-    def __init__(self, root: str):
-        self._init_markers(root)
-
-    def snapshot(self, spark: SparkSession) -> DataFrame | None:
-        latest = self._latest_committed()
-        if latest < 0:
-            return None
-        return spark.read.parquet(os.path.join(self.root, f"snapshot_{latest}"))
 
     def process(self, df: DataFrame, batch_id: int) -> None:
         if self._skip_replay(df, batch_id):
             return
-        spark = df.sparkSession
         batch = df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.max(
                 F.struct(F.unix_micros("ts").alias("us"), "event_id", "value")
             ).alias("last"),
         )
-        prev = self.snapshot(spark)
+        prev = self.snapshot(df.sparkSession)
         if prev is None:
             merged = batch
         else:
@@ -593,20 +629,7 @@ class CdcMergeSink(_CommitMarkers):
                     ).alias("last"),
                 )
             )
-        out = os.path.join(self.root, f"snapshot_{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        self._write_marker(batch_id)
-        # prune superseded snapshots AFTER the marker commit: only
-        # snapshot_{latest_committed} is ever read back, so keeping
-        # every batch's full keyed state grows storage O(batches ×
-        # keys); the markers themselves stay (replay idempotence needs
-        # them), and a crash before this loop just leaves garbage the
-        # next commit prunes
-        for b in self._committed_ids():
-            if b < batch_id:
-                shutil.rmtree(
-                    os.path.join(self.root, f"snapshot_{b}"), ignore_errors=True
-                )
+        self._commit_snapshot(merged, batch_id)
 
 
 def run_cdc_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str) -> "CdcMergeSink":
@@ -627,39 +650,30 @@ def run_cdc_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str) -
     return sink
 
 
-def run_merge_stream(
-    spark: SparkSession,
-    stream_dir: str,
-    sink_root: str,
-    spec=None,
-):
+def run_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str):
     """Streaming MERGE INTO: maintain a latest-event-per-user table by
-    applying each micro-batch through the transactional seam
-    (transactional.ParquetMergeTable), batch_id as the merge version —
-    CdcMergeSink generalized to an arbitrary MergeSpec, and the exact
-    wiring a Delta/Iceberg deployment uses (swap the table class, keep
-    the foreachBatch body; the format's log then plays the marker's
-    role via txnAppId/txnVersion or the snapshot commit).
+    applying each micro-batch to a transactional.ParquetMergeTable,
+    batch_id as the merge version — CdcMergeSink's snapshot table with
+    MERGE INTO's update/insert/delete clauses as the merge rule.
 
     Per batch: reduce to ONE row per user (latest by (ts, event_id) —
     MERGE forbids two source rows matching one target row), then merge.
-    The default spec tombstones a user whose batch-latest event is an
-    'error' (matched ⇒ DELETE) — the standard CDC shape where a
-    terminal op removes the key; an error from a NEVER-seen user still
-    inserts (MERGE's not-matched clause carries no delete), which the
-    semantics test pins via an independent per-batch fold.
+    The spec tombstones a user whose batch-latest event is an 'error'
+    (matched ⇒ DELETE) — the standard CDC shape where a terminal op
+    removes the key; an error from a NEVER-seen user still inserts
+    (MERGE's not-matched clause carries no delete), which the semantics
+    test pins via an independent per-batch fold.
 
     Returns the ParquetMergeTable; idempotence under batch replay is
-    the table's own contract (version marker ⇒ no-op)."""
+    the table's own contract (committed version ⇒ ``_skip_replay``)."""
     from distributed_causal_stream_processing_spark.transactional import (
         MergeSpec,
         ParquetMergeTable,
     )
 
-    if spec is None:
-        spec = MergeSpec(
-            keys=("user_id",), matched_delete_condition="s.event_type = 'error'"
-        )
+    spec = MergeSpec(
+        keys=("user_id",), matched_delete_condition="s.event_type = 'error'"
+    )
     table = ParquetMergeTable(sink_root)
 
     def apply_batch(df: DataFrame, batch_id: int) -> None:
@@ -819,9 +833,6 @@ def run_chain_assign_stream(
     the returned rows but still flow through state — harmless: they
     use reserved user ids. Runs under
     session.recommended_streaming_state."""
-    from distributed_causal_stream_processing_spark.session import (
-        recommended_streaming_state,
-    )
     from distributed_causal_stream_processing_spark.streaming.causal import (
         chain_assign_stream,
     )
@@ -855,19 +866,20 @@ def run_sliding_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sliding_out")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql(
-            "SELECT w.start AS window_start, event_type, n_events FROM sliding_out"
-        ).collect()
-    finally:
-        q.stop()
+    with recommended_streaming_state(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName("sliding_out")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return spark.sql(
+                "SELECT w.start AS window_start, event_type, n_events FROM sliding_out"
+            ).collect()
+        finally:
+            q.stop()
 
 
 # --- Streaming content dedup (MinHash bands vs accumulating index) -------
@@ -1464,9 +1476,6 @@ def run_causal_deps_stream(
     rows (negative event_id) are excluded from the returned rows but
     flow through state harmlessly (reserved user ids → their own
     pairs). Runs under session.recommended_streaming_state."""
-    from distributed_causal_stream_processing_spark.session import (
-        recommended_streaming_state,
-    )
     from distributed_causal_stream_processing_spark.streaming.causal import (
         causal_deps_stream,
     )
@@ -1493,24 +1502,14 @@ def run_causal_deps_stream(
             q.stop()
 
 
-# ---------------------------------------------------------------------------
-# Kafka-shaped source adapter (VERDICT r12 "missing" #4)
+# --- Kafka-shaped decode (broker-free) -----------------------------------
 #
-# The production path the file-source jobs above stand in for: the
-# reference polls partitioned topics with per-topic consumer offsets;
-# Structured Streaming's kafka source does the same (offsets tracked
-# per (topic, partition) in the checkpoint, resumed on restart). No
-# broker — and no spark-sql-kafka connector jar — exists in this
-# sandbox, so kafka_events_stream cannot be executed here (the
-# format("kafka") lookup itself fails without the jar; documented in
-# BASELINE.md's environment notes). What IS testable without a broker
-# is everything after the source: decode_kafka_events takes the
-# kafka-shaped relation (key/value binary, topic, partition, offset,
-# timestamp — the connector's fixed output schema) and produces
-# EVENT_SCHEMA rows plus the source-position columns the causal merge
-# consumes as resume offsets. tests/test_streaming.py round-trips it
-# on a batch DataFrame.
-# ---------------------------------------------------------------------------
+# decode_kafka_events takes a relation with the kafka source's fixed
+# schema (key/value binary, topic, partition, offset, timestamp) and
+# produces EVENT_SCHEMA rows plus the source position, which the causal
+# merge consumes as resume offsets; route_decoded_events splits
+# malformed payloads off before any watermark. Both run on batch frames
+# and are pinned in tests/test_streaming.py.
 
 
 def decode_kafka_events(raw: DataFrame) -> DataFrame:
@@ -1576,75 +1575,3 @@ def route_decoded_events(
     rejects = decoded.filter(~F.col("decode_ok"))
     return well_formed, rejects
 
-
-def kafka_events_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Unbounded events read from a Kafka topic — the production
-    counterpart of ``events_stream``. UNTESTED IN THIS SANDBOX by
-    necessity (no broker, no spark-sql-kafka jar); the decode half and
-    the decode_ok routing are broker-free and pinned in
-    tests/test_streaming.py.
-
-    Returns the WELL-FORMED branch only, watermarked on ``ts``
-    (ADVICE r13: watermarking malformed rows, whose ts is NULL, would
-    have every downstream stateful operator drop them silently — the
-    opposite of surfacing them). Callers that must audit malformed
-    payloads use ``kafka_events_with_rejects`` and sink the reject
-    branch separately.
-
-    Options, each load-bearing at scale:
-    - ``startingOffsets=earliest`` only seeds the FIRST run; restarts
-      resume from the checkpoint's per-(topic, partition) offsets —
-      the reference's per-topic consumer positions.
-    - ``maxOffsetsPerTrigger`` caps records per micro-batch so a
-      backlogged topic cannot produce an unbounded first batch.
-    - ``failOnDataLoss=true``: an aged-out (compacted/retention-
-      expired) offset range is an ERROR, not a silent gap — the same
-      no-silent-reorder stance the causal sequencer takes on late
-      rows.
-
-    Downstream wiring is identical to the file-source jobs: e.g.
-    ``causal_sequence_stream(decoded.select('event_id','ts','user_id'))``
-    or two topics unioned into ``run_multi_source_causal_stream``'s
-    merge."""
-    well_formed, _ = kafka_events_with_rejects(
-        spark,
-        bootstrap_servers,
-        topic,
-        starting_offsets=starting_offsets,
-        max_offsets_per_trigger=max_offsets_per_trigger,
-        watermark=watermark,
-    )
-    return well_formed
-
-
-def kafka_events_with_rejects(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    watermark: str = "10 minutes",
-) -> tuple[DataFrame, DataFrame]:
-    """``kafka_events_stream`` plus the malformed-payload branch:
-    returns (well_formed_watermarked, rejects). Both frames share ONE
-    logical source; each started sink replays the topic through its
-    own consumer, so a two-sink deployment (events → processing,
-    rejects → dead-letter parquet) reads the topic twice — the
-    standard Structured Streaming trade for branch isolation."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("failOnDataLoss", "true")
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return route_decoded_events(decode_kafka_events(reader.load()), watermark)

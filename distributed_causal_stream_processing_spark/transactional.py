@@ -1,55 +1,34 @@
-"""Transactional-table MERGE sink: one MERGE INTO semantics, three
-bindings (VERDICT r13 item 8 — the documented seam where Delta /
-Iceberg plug into the engine's manifest-commit protocol).
+"""MERGE INTO on plain parquet under the engine's write-then-commit
+protocol.
 
-The reference's effectively-once output contract is already carried by
-the engine's own write-then-commit protocol (streaming/jobs.py
-``_CommitMarkers``: data first, marker after, readers trust markers
-only). What a production deployment adds is a TABLE FORMAT whose
-commit is the marker — Delta's ``_delta_log`` JSON commit or an
-Iceberg snapshot swap plays exactly the role ``_commits/N`` plays
-here. This module makes that correspondence a code seam instead of a
-paragraph:
-
-- ``MergeSpec`` + ``build_merge_into_sql`` — the single source of
-  truth for the MERGE semantics, rendered as the ANSI ``MERGE INTO``
-  statement Delta and Iceberg both execute verbatim.
-- ``ParquetMergeTable`` — the same semantics executed on plain
-  parquet via versioned snapshots + the shared commit markers, so the
-  semantics are TESTABLE in this sandbox (no table-format dependency)
-  and idempotent under replay (same version re-applied = no-op), the
-  property the streaming sinks already pin in tests/test_sinks.py.
-- ``DeltaMergeTable`` / ``IcebergMergeTable`` — thin bindings that
-  register the source as a temp view and run the generated statement;
-  they gate on availability (import-try / catalog conf) and raise
-  loudly here, where neither format's jars exist. Their merge SQL is
-  identical BY CONSTRUCTION (same builder), so the sandbox tests of
-  ``ParquetMergeTable`` + the golden statement pin everything except
-  the format's own commit machinery.
+- ``MergeSpec`` — the MERGE shape: equi-match keys plus an optional
+  matched-row delete predicate; matched rows otherwise update, and
+  unmatched source rows insert.
+- ``ParquetMergeTable`` — executes that spec as one versioned snapshot
+  per merge (streaming/jobs.py ``_SnapshotTable``: snapshot_N data
+  first, ``_commits/N`` marker after, readers trust markers only), so a
+  replayed version runs into ``noop`` and a torn write is invisible and
+  rewritten on retry. streaming/jobs.py ``run_merge_stream`` drives it
+  from foreachBatch with the batch id as the version.
 
 Scale: ``ParquetMergeTable.merge`` is one full-outer shuffle join on
-the merge keys per version — the same cost a format-native MERGE pays
-for its find-touched-files + rewrite, minus file skipping. At 100 TB
-the format binding wins precisely because its manifest prunes the
-untouched files; the seam exists so switching is a constructor swap,
-not a rewrite.
+the merge keys per version and rewrites the whole table; there is no
+file skipping, so its cost grows with the table, not with the batch.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distributed_causal_stream_processing_spark.streaming.jobs import _CommitMarkers
+from distributed_causal_stream_processing_spark.streaming.jobs import _SnapshotTable
 
 
 @dataclass(frozen=True)
 class MergeSpec:
-    """MERGE INTO shape shared by every binding.
+    """MERGE INTO shape.
 
     - ``keys``: equi-match columns (``ON t.k = s.k AND ...``).
     - ``matched_delete_condition``: optional SQL predicate over ``s.``
@@ -61,62 +40,31 @@ class MergeSpec:
 
     keys: tuple[str, ...]
     matched_delete_condition: str | None = None
-    extra: dict = field(default_factory=dict, compare=False)
 
     def __post_init__(self) -> None:
         if not self.keys:
             raise ValueError("MergeSpec needs at least one key column")
 
 
-def build_merge_into_sql(target: str, source: str, spec: MergeSpec) -> str:
-    """Render the exact ANSI statement a Delta/Iceberg session runs —
-    golden-pinned in tests so the seam can't drift from the parquet
-    executor's semantics."""
-    on = " AND ".join(f"t.{k} = s.{k}" for k in spec.keys)
-    clauses = []
-    if spec.matched_delete_condition:
-        clauses.append(
-            f"WHEN MATCHED AND ({spec.matched_delete_condition}) THEN DELETE"
-        )
-    clauses.append("WHEN MATCHED THEN UPDATE SET *")
-    clauses.append("WHEN NOT MATCHED THEN INSERT *")
-    body = "\n".join(clauses)
-    return f"MERGE INTO {target} t\nUSING {source} s\nON {on}\n{body}"
-
-
-class ParquetMergeTable(_CommitMarkers):
+class ParquetMergeTable(_SnapshotTable):
     """MERGE INTO semantics on plain parquet with the engine's
-    manifest-commit protocol.
-
-    Layout:  <root>/snapshot_N/...parquet   (table state AFTER version N)
-             <root>/_commits/N              (marker, written after data)
+    write-then-commit protocol.
 
     ``merge(source, spec, version)`` is idempotent per version: a
-    replayed version whose marker exists is a no-op, and a torn write
-    (data without marker) is invisible to ``snapshot`` and rewritten
+    replayed version whose marker exists runs its plan into ``noop``
+    and writes nothing (``_skip_replay``), and a torn write (data
+    without marker) is invisible to ``snapshot`` and rewritten
     wholesale on retry — the write-then-commit contract shared with
-    IdempotentForeachBatchSink/CdcMergeSink, i.e. exactly what the
-    Delta/Iceberg commit gives a cluster deployment.
+    IdempotentForeachBatchSink and CdcMergeSink.
     """
 
-    def __init__(self, root: str):
-        self._init_markers(root)
-
-    def snapshot(self, spark: SparkSession) -> DataFrame | None:
-        latest = self._latest_committed()
-        if latest < 0:
-            return None
-        return spark.read.parquet(os.path.join(self.root, f"snapshot_{latest}"))
-
     def merge(self, source: DataFrame, spec: MergeSpec, version: int) -> None:
-        if self.is_committed(version):
-            return  # replayed version: idempotent no-op
-        spark = source.sparkSession
-        # MERGE cardinality rule (ADVICE r14): Delta/Iceberg raise when
-        # one target row matches multiple source rows; a silently
-        # duplicate-producing parquet path would diverge from the
-        # bindings exactly where callers other than run_merge_stream
-        # (which pre-dedupes) hit it. Enforce the same error here.
+        if self._skip_replay(source, version):
+            return
+        # MERGE cardinality rule (ADVICE r14): MERGE INTO raises when
+        # one target row matches multiple source rows; silently emitting
+        # duplicate target rows would hide the bug from callers other
+        # than run_merge_stream (which pre-dedupes). Raise the same error.
         dup = (
             source.groupBy(*spec.keys)
             .count()
@@ -128,15 +76,14 @@ class ParquetMergeTable(_CommitMarkers):
             key_vals = {k: dup[0][k] for k in spec.keys}
             raise ValueError(
                 "MERGE source has multiple rows for key "
-                f"{key_vals} — same cardinality violation Delta/Iceberg "
-                "MERGE INTO raises; dedupe the source first"
+                f"{key_vals} — the cardinality violation MERGE INTO "
+                "raises; dedupe the source first"
             )
-        target = self.snapshot(spark)
+        target = self.snapshot(source.sparkSession)
         if target is None:
             merged = source
         else:
             keys = list(spec.keys)
-            cols = source.columns
             # presence markers BEFORE the join: full_outer coalesces the
             # key columns, so side-presence must ride on its own column
             t = target.withColumn("__t", F.lit(True)).alias("t")
@@ -161,80 +108,7 @@ class ParquetMergeTable(_CommitMarkers):
                 else F.when(keep_target, F.col(f"t.{c}"))
                 .otherwise(F.col(f"s.{c}"))
                 .alias(c)
-                for c in cols
+                for c in source.columns
             ]
             merged = both.filter(~deleted).select(*picked)
-        out = os.path.join(self.root, f"snapshot_{version}")
-        merged.write.mode("overwrite").parquet(out)
-        self._write_marker(version)
-        for b in self._committed_ids():
-            if b < version:
-                import shutil
-
-                shutil.rmtree(
-                    os.path.join(self.root, f"snapshot_{b}"), ignore_errors=True
-                )
-
-
-def _delta_available(spark: SparkSession) -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _iceberg_available(spark: SparkSession, catalog: str) -> bool:
-    conf = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-    return conf is not None and "iceberg" in conf.lower()
-
-
-class _SqlMergeTable:
-    """Shared binding: register source, run the generated MERGE INTO."""
-
-    def __init__(self, spark: SparkSession, target_table: str):
-        self.spark = spark
-        self.target_table = target_table
-
-    def merge(self, source: DataFrame, spec: MergeSpec) -> None:
-        # per-call unique view name (ADVICE r14): a hash of the target
-        # can collide across tables and races across concurrent merges
-        # on one session — uuid4 makes the source view private to this call
-        view = f"__merge_src_{uuid.uuid4().hex}"
-        source.createOrReplaceTempView(view)
-        try:
-            self.spark.sql(build_merge_into_sql(self.target_table, view, spec))
-        finally:
-            self.spark.catalog.dropTempView(view)
-
-
-class DeltaMergeTable(_SqlMergeTable):
-    """Delta Lake binding — requires the delta-spark package + jars
-    (absent in this sandbox BY NECESSITY; the semantics this would
-    execute are pinned by ParquetMergeTable's tests + the golden
-    statement, both format-free). Versioned idempotence comes from
-    Delta's own log: ``txnAppId``/``txnVersion`` writer options play
-    the role of ``_commits/N``."""
-
-    def __init__(self, spark: SparkSession, target_table: str):
-        if not _delta_available(spark):
-            raise RuntimeError(
-                "delta-spark is not installed; use ParquetMergeTable (same "
-                "MERGE semantics on plain parquet) or install the format"
-            )
-        super().__init__(spark, target_table)
-
-
-class IcebergMergeTable(_SqlMergeTable):
-    """Iceberg binding — requires an Iceberg catalog in the session
-    conf (absent here). Idempotence role-equivalent: the snapshot
-    commit; replay protection via the WAP/snapshot-id checks."""
-
-    def __init__(self, spark: SparkSession, target_table: str, catalog: str):
-        if not _iceberg_available(spark, catalog):
-            raise RuntimeError(
-                f"no Iceberg catalog {catalog!r} in this session; use "
-                "ParquetMergeTable (same MERGE semantics on plain parquet)"
-            )
-        super().__init__(spark, f"{catalog}.{target_table}")
+        self._commit_snapshot(merged, version)

@@ -263,3 +263,36 @@ def test_default_driver_heap_fits_host():
     heap = _default_driver_memory()
     assert heap.endswith("g")
     assert int(heap[:-1]) == max(1, min(32, host_kb // 2**21))
+
+
+def test_default_cpus_fit_host():
+    """Without SPARK_GRAFT_CPUS the session runs one task slot per core
+    this process may use; the variable still overrides. DEFAULT_CPUS is
+    read at import, so each case imports the module in a fresh
+    interpreter."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_DIR
+
+    def default_cpus(**env_extra) -> int:
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        env.update(env_extra)
+        out = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                "from distributed_causal_stream_processing_spark.session "
+                "import DEFAULT_CPUS; print(DEFAULT_CPUS)",
+            ],
+            cwd=REPO_DIR,
+            env=env,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        return int(out.split()[-1])
+
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    assert default_cpus(SPARK_GRAFT_CPUS="3") == 3

@@ -254,45 +254,23 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert "quality_score" not in plan.split("ReadSchema:")[1].split("\n")[0]
 
 
-def test_merge_into_sql_golden():
-    """The generated MERGE INTO statement — the exact SQL the Delta /
-    Iceberg bindings execute — is golden-pinned so the seam cannot
-    drift from the parquet executor's semantics."""
-    from distributed_causal_stream_processing_spark.transactional import (
-        MergeSpec,
-        build_merge_into_sql,
-    )
-
-    spec = MergeSpec(keys=("user_id",), matched_delete_condition="s.op = 'D'")
-    assert build_merge_into_sql("views", "changes", spec) == (
-        "MERGE INTO views t\n"
-        "USING changes s\n"
-        "ON t.user_id = s.user_id\n"
-        "WHEN MATCHED AND (s.op = 'D') THEN DELETE\n"
-        "WHEN MATCHED THEN UPDATE SET *\n"
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    two = MergeSpec(keys=("a", "b"))
-    assert "ON t.a = s.a AND t.b = s.b" in build_merge_into_sql("x", "y", two)
-    assert "DELETE" not in build_merge_into_sql("x", "y", two)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        MergeSpec(keys=())
-
-
 def test_parquet_merge_table_semantics_and_idempotence(spark, tmp_path):
     """ParquetMergeTable executes MERGE semantics (update-all /
     insert-all / conditional delete) on plain parquet under the shared
     write-then-commit protocol: a replayed version is a no-op, and a
-    torn write (data, no marker) is invisible to snapshot()."""
+    torn write (data, no marker) is invisible to snapshot(). A spec
+    without keys is rejected at construction."""
     import os
+
+    import pytest as _pytest
 
     from distributed_causal_stream_processing_spark.transactional import (
         MergeSpec,
         ParquetMergeTable,
     )
+
+    with _pytest.raises(ValueError):
+        MergeSpec(keys=())
 
     root = str(tmp_path / "tbl")
     tbl = ParquetMergeTable(root)
@@ -361,20 +339,3 @@ def test_parquet_merge_rejects_duplicate_source_keys(spark, tmp_path):
     assert sorted(
         (r.user_id, r.value) for r in tbl.snapshot(spark).collect()
     ) == [(1, 11.0), (2, 20.0)]
-
-
-def test_format_bindings_gate_loudly(spark, tmp_path):
-    """Neither Delta nor Iceberg exists in this sandbox; the bindings
-    must say so at CONSTRUCTION (not fail mid-merge) and point at the
-    format-free executor."""
-    import pytest as _pytest
-
-    from distributed_causal_stream_processing_spark.transactional import (
-        DeltaMergeTable,
-        IcebergMergeTable,
-    )
-
-    with _pytest.raises(RuntimeError, match="ParquetMergeTable"):
-        DeltaMergeTable(spark, "views")
-    with _pytest.raises(RuntimeError, match="ParquetMergeTable"):
-        IcebergMergeTable(spark, "views", catalog="ice")
