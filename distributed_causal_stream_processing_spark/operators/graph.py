@@ -22,12 +22,13 @@ breaks the value-hash (same lesson as the k-means centroid parity).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Row, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from distributed_causal_stream_processing_spark.io import load
+from distributed_causal_stream_processing_spark.operators.loops import (
+    checkpoint_observed,
+)
 from distributed_causal_stream_processing_spark.plans.registry import query
 
 _DAMP = 0.85
@@ -55,11 +56,9 @@ _ITERS = 3
 # row hashed relation per in-flight superstep — at the 10M ceiling
 # budget ≥ ~1 GiB of executor heap headroom for it (the tested config
 # is a 32 GiB local driver). Deployments with small executors should
-# lower the ceiling to taste; it is a plan-choice knob, not semantics —
-# either side of it computes identical ranks.
-_RANK_BCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_RANK_BCAST_MAX_NODES", 10_000_000)
-)
+# lower this constant; it is a plan choice, not semantics — either
+# side of it computes identical ranks.
+_RANK_BCAST_MAX_NODES = 10_000_000
 
 
 @query(
@@ -149,9 +148,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     # symmetric graph → node set == src set; checkpoint the distinct
-    # node set once — it seeds the rank vector AND supplies the count
-    nodes = contrib_base.select("src").distinct().localCheckpoint()
-    n_nodes = nodes.count()
+    # node set once — it seeds the rank vector, and the checkpoint job
+    # observes the node count
+    nodes, probe = checkpoint_observed(
+        contrib_base.select("src").distinct(), F.count(F.lit(1)).alias("n")
+    )
+    n_nodes = probe.n
     ranks = nodes.select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank"))
     # rank⋈edges is keyed-equi on src. The rank side is broadcast at
     # PLAN time while n_nodes fits the ceiling (see
@@ -186,10 +188,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fused rounds chained LAZILY between checkpoint + certificate probes
-# (optimization round 16, VERDICT r15 item 6 A/B): per-round cost at
-# bench scale is fixed job overhead, so batching amortizes the
-# checkpoint job and the sum probe over several joins. Inside a block
+# Fused rounds chained LAZILY between checkpoints (optimization round
+# 16, VERDICT r15 item 6 A/B): per-round cost at bench scale is fixed
+# job overhead, so batching amortizes the checkpoint job (which also
+# computes the sum certificate) over several joins. Inside a block
 # the previous round's label subtree appears twice (the frontier union
 # branch and the join side); ReuseExchange dedups its shuffles, and the
 # sum certificate still works at block granularity — labels are
@@ -245,12 +247,44 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    labels = (
+    # Convergence: labels are monotone non-increasing, so the exact
+    # decimal label sum strictly decreases iff any label moved. The sum
+    # (with the row count and the castable-label count beside it) is
+    # observed on each block's checkpoint, so the probe adds no action
+    # of its own — no old-vs-new join, no separate count or collect.
+    numeric = F.col("label").try_cast("decimal(38,0)")
+    certificate = (
+        F.count(F.lit(1)).alias("n"),
+        F.count(numeric).alias("c"),
+        F.sum(numeric).alias("s"),
+    )
+
+    def label_sum(probe: Row):
+        # ADVICE r15: the certificate only works for numeric labels. A
+        # label that cannot cast to decimal(38,0) is NULL under try_cast
+        # and sum() skips it, so a non-numeric label could keep moving
+        # while the sum of the numeric ones stands still — the loop
+        # would declare convergence with silently wrong components. All
+        # registered callers use bigint node ids; fail loudly for any
+        # generic caller whose labels do not all cast.
+        if probe.c < probe.n:
+            raise TypeError(
+                "connected_components convergence certificate needs "
+                "numeric (castable to decimal) node ids; "
+                f"{probe.n - probe.c} of {probe.n} labels do not cast — "
+                "map ids to integers first"
+            )
+        return probe.s
+
+    labels, probe = checkpoint_observed(
         sym.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
+        .withColumn("label", F.col("node")),
+        *certificate,
     )
+    prev_sum = label_sum(probe)
+    converged = False
+
     # FUSED propagation + pointer-doubling (optimization round 15,
     # guide §2.4): the previous loop ran three joins per round
     # (neighbor-min, left-join back onto labels, and — from round 2 —
@@ -269,32 +303,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     # 8 rounds → 5 at sf0.1 because doubling now engages from round 0;
     # the early-round star-graph overhead the old rnd>=2 gate avoided
     # is one union of a |V|-row frame — cheaper than the join it
-    # replaced). Convergence: labels are monotone non-increasing, so
-    # the exact decimal label sum strictly decreases iff any label
-    # moved — one scalar agg over the just-checkpointed labels, the
-    # same job the old shrunk-count paid, no extra old-vs-new join.
-    # The fixpoint is unchanged (labels constant across edges, each
-    # component at its min id), so oracle hashes are identical.
-    def _label_sum(lb: DataFrame):
-        # ADVICE r15: the certificate only works for numeric labels. A
-        # label column that cannot cast to decimal(38,0) sums to NULL,
-        # and None == None would declare convergence after round 1 —
-        # silently wrong components. All registered callers use bigint
-        # node ids; fail loudly for any generic caller that doesn't.
-        n, s = lb.agg(
-            F.count(F.lit(1)), F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0]
-        if n > 0 and s is None:
-            raise TypeError(
-                "connected_components convergence certificate needs "
-                "numeric (castable to decimal) node ids; got a label "
-                "column that sums to NULL — map ids to integers first"
-            )
-        return s
-
-    prev_sum = _label_sum(labels)
-    converged = False
-
+    # replaced). The fixpoint is unchanged (labels constant across
+    # edges, each component at its min id), so oracle hashes are
+    # identical.
     def one_round(lb: DataFrame) -> DataFrame:
         frontier = lb.select(
             F.col("node").alias("src"), F.col("label").alias("dst")
@@ -314,8 +325,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     for done in range(0, max_rounds, _CC_ROUNDS_PER_BLOCK):
         for _ in range(min(_CC_ROUNDS_PER_BLOCK, max_rounds - done)):
             labels = one_round(labels)
-        labels = labels.localCheckpoint()
-        new_sum = _label_sum(labels)
+        labels, probe = checkpoint_observed(labels, *certificate)
+        new_sum = label_sum(probe)
         if new_sum == prev_sum:
             converged = True
             break
@@ -439,8 +450,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     e3 = edges.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"]).localCheckpoint()
-    total = tri.count()
+    tri, probe = checkpoint_observed(
+        e1.join(e2, "b").join(e3, ["a", "c"]), F.count(F.lit(1)).alias("total")
+    )
+    total = probe.total
     nodes = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select(F.col("b").alias("node")))

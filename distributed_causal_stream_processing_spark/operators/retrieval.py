@@ -463,7 +463,7 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
-            cosine(F.col("emb"), F.col("qemb")).alias("sim"),
+            cosine("emb", "qemb").alias("sim"),
         )
     )
     wv = W.orderBy(F.desc("sim"), F.asc("doc_id"))

@@ -40,6 +40,9 @@ from distributed_causal_stream_processing_spark.io import (
     load,
     table_path,
 )
+from distributed_causal_stream_processing_spark.operators.loops import (
+    checkpoint_observed,
+)
 from distributed_causal_stream_processing_spark.plans.registry import query
 
 DIM = 64
@@ -141,36 +144,68 @@ def _blocked_cosine_pairs(
     return joined.mapInPandas(gemm, _PAIR_SCHEMA)
 
 
-def as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+# The vector kernels below are each ONE SQL expression over column
+# names, handed to the JVM as text rather than built node by node from
+# Python lambdas (build cost in ``dot``'s docstring). A driver loop
+# that builds a kernel every round (k-center, the Lloyd trainers) pays
+# that cost per round. The ``_sql`` builders return the text for
+# callers that embed a kernel inside a larger expression (the plane
+# signatures, the k-center cover).
 
 
-def dot(a, b) -> Column:
-    # A/B'd in optimization round 15 (guide §1.2 "per-task work"): an
-    # unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` getItem sum — fully
-    # codegen-able where this higher-order fold is CodegenFallback —
-    # MEASURED SLOWER on the heavy pair scorers and was reverted
-    # (q_dedup_embedding_ivf 4.8 → 7.2 s, q_dedup_embedding_pruned
-    # 4.4 → 9.5 s at sf0.1, min-of-2: the 127-node expression tree per
-    # sim column blows generated-method size past JIT limits, and the
-    # scorers evaluate sim twice via filter + select). Same conclusion
-    # as the round-14 vectorization A/B: the fold stays.
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _sq_l2_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, "
+        "(acc, x) -> acc + x)"
     )
 
 
-def norm(a) -> Column:
-    return F.sqrt(dot(a, a))
+def as_double(a: str) -> Column:
+    """Array column ``a`` with its elements cast to double."""
+    return F.expr(f"transform({a}, v -> CAST(v AS DOUBLE))")
 
 
-def cosine(a, b) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def dot(a: str, b: str) -> Column:
+    """Dot product of array columns ``a`` and ``b``: a left fold over the
+    element products.
+
+    A/B'd in optimization round 15 (guide §1.2 "per-task work"): an
+    unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` getItem sum — fully
+    codegen-able where this higher-order fold is CodegenFallback —
+    MEASURED SLOWER on the heavy pair scorers and was reverted
+    (q_dedup_embedding_ivf 4.8 → 7.2 s, q_dedup_embedding_pruned
+    4.4 → 9.5 s at sf0.1, min-of-2: the 127-node expression tree per
+    sim column blows generated-method size past JIT limits, and the
+    scorers evaluate sim twice via filter + select). Same conclusion
+    as the round-14 vectorization A/B: the fold stays.
+
+    Its BUILD cost is a separate matter. Built from Python lambdas
+    through F.aggregate/F.zip_with, a kernel cost a py4j call per
+    expression node and lambda variable: 123 calls and ~31 ms of
+    driver time per ``sq_l2``, against 3 calls and ~0.5 ms as one SQL
+    text (median of 20 builds, Spark 4.1.2, 4-core host). The analyzed
+    tree is identical, down to the generated column name, so values
+    are bit-equal."""
+    return F.expr(_dot_sql(a, b))
 
 
-def sq_l2(a, b) -> Column:
+def norm(a: str) -> Column:
+    """Euclidean norm of array column ``a``."""
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of array columns ``a`` and ``b``."""
+    return F.expr(
+        f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+    )
+
+
+def sq_l2(a: str, b: str) -> Column:
     """Squared L2 distance as a left fold over the per-dimension squared
     differences — bit-equal to the DuckDB oracles' ``list_sum([(a[j] -
     b[j]) ** 2 for j in range(...)])``, so an argmin or a rounded
@@ -178,12 +213,9 @@ def sq_l2(a, b) -> Column:
     fold: k-means, PQ, IVFADC cells and LUTs, k-center and the exact
     L2 yardsticks all call it. Squared, not sqrt'd: sqrt can collapse
     two distinct near-tied sums into one double and flip a tie-break
-    (see _kmeans_duck)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    (see _kmeans_duck). Built as one SQL text like ``dot`` (py4j build
+    cost before/after there)."""
+    return F.expr(_sq_l2_sql(a, b))
 
 
 def scored(na: str, nb: str) -> Column:
@@ -193,7 +225,7 @@ def scored(na: str, nb: str) -> Column:
     norms). Norm stays a plain column (never recomputed inside a
     lambda), and joins materialize their inputs, so each row's norm is
     evaluated exactly once."""
-    return dot(F.col("ea"), F.col("eb")) / (F.col(na) * F.col(nb))
+    return F.expr(f"{_dot_sql('ea', 'eb')} / ({na} * {nb})")
 
 
 @query(
@@ -272,7 +304,7 @@ def q_sim_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken by (votes desc, label asc)."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double("embedding").alias("emb")
-    ).withColumn("nrm", norm(F.col("emb")))
+    ).withColumn("nrm", norm("emb"))
     q = e.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("ea"), F.col("nrm").alias("na")
     )
@@ -342,12 +374,9 @@ def _plane_literal_sql(i: int) -> str:
 def _single_table_sig() -> Column:
     """The 8-bit LSH bucket signature of ``emb`` — all plane dots via
     one higher-order transform over the SQL-parsed plane matrix (see
-    ``_nested_double_literal`` for why not per-plane ``F.lit``)."""
-    bits = F.transform(
-        _nested_double_literal([[float(v) for v in p] for p in _PLANES]),
-        lambda p: F.when(dot(F.col("emb"), p) > 0, F.lit("1")).otherwise(F.lit("0")),
-    )
-    return F.concat_ws("", bits)
+    ``_nested_double_literal_sql`` for why not per-plane ``F.lit``)."""
+    bits = _plane_bits_sql([[float(v) for v in p] for p in _PLANES])
+    return F.concat_ws("", F.expr(bits))
 
 
 _DUCK_SIG = " || ".join(
@@ -401,7 +430,7 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double("embedding").alias("emb")
-    ).withColumn("nrm", norm(F.col("emb")))
+    ).withColumn("nrm", norm("emb"))
     sig = _single_table_sig()
     sigs = e.select("vec_id", "emb", "nrm", sig.alias("bucket"))
     # NARROW bucket join, vectors joined back by id afterwards (the
@@ -503,7 +532,7 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm(F.col("emb")))
+        .withColumn("nrm", norm("emb"))
     )
     cent = e.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cell_id"),
@@ -810,18 +839,27 @@ def q_dedup_embedding_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nested_double_literal(rows: list[list[float]]) -> Column:
-    """A constant ``array<array<double>>`` built as ONE SQL-parsed
-    expression. Building it element-wise with ``F.lit`` costs a py4j
-    round-trip per element — measured ~5 s of pure driver time for the
-    64×64 plane matrix at every query BUILD (before any job ran);
-    ``expr()`` hands the JVM a single string to parse instead."""
-    sql = (
+def _nested_double_literal_sql(rows: list[list[float]]) -> str:
+    """A constant ``array<array<double>>`` as SQL text, for ONE
+    SQL-parsed expression. Building it element-wise with ``F.lit``
+    costs a py4j round-trip per element — measured ~5 s of pure driver
+    time for the 64×64 plane matrix at every query BUILD (before any
+    job ran); one text hands the JVM a single string to parse
+    instead."""
+    return (
         "array("
         + ", ".join("array(" + ", ".join(f"{v}D" for v in r) + ")" for r in rows)
         + ")"
     )
-    return F.expr(sql)
+
+
+def _plane_bits_sql(planes: list[list[float]]) -> str:
+    """The '1'/'0' sign of ``emb``'s dot with each plane, as one
+    higher-order transform over the SQL-parsed plane matrix."""
+    return (
+        f"transform({_nested_double_literal_sql(planes)}, "
+        f"p -> CASE WHEN {_dot_sql('emb', 'p')} > 0 THEN '1' ELSE '0' END)"
+    )
 
 
 def mt_signature_frame(
@@ -838,10 +876,7 @@ def mt_signature_frame(
     localCheckpoint it: without the lineage cut Catalyst re-derives
     the plane expression in every branch — the pruned-dedup query was
     driver-bound (plan/py4j, ~7 s at ANY sf), not data-bound."""
-    bits = F.transform(
-        _nested_double_literal(_mt_planes(N_TABLES * planes_per_table)),
-        lambda p: F.when(dot(F.col("emb"), p) > 0, F.lit("1")).otherwise(F.lit("0")),
-    )
+    bits = F.expr(_plane_bits_sql(_mt_planes(N_TABLES * planes_per_table)))
     return e.select("vec_id", bits.alias("bits")).select(
         "vec_id",
         *[
@@ -872,7 +907,7 @@ def _mt_candidates(
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm(F.col("emb")))
+        .withColumn("nrm", norm("emb"))
     )
     if pred is not None:
         e = e.filter(pred)
@@ -1451,10 +1486,10 @@ def q_sample_diverse_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     round folds exactly ONE new constant center — d2(new_center) as a
     dim-length expression, `least`ed into dmin (no Python, no shuffle
     of vectors, O(K·dim) total work instead of the previous O(K²·dim)
-    full-set recompute) — and the argmax is one min(struct(-dmin,
-    vec_id)) hash agg with map-side partial combine over the
-    checkpointed frame; the driver pulls exactly ONE (id, vector) row
-    per round, so driver state is O(K*dim) — the q_sim_ivf_kmeans
+    full-set recompute) — and the argmax, min(struct(-dmin, vec_id,
+    emb)), is observed on that round's checkpoint, so a round is one
+    Spark job; the driver pulls exactly ONE (id, vector) row per
+    round, so driver state is O(K*dim) — the q_sim_ivf_kmeans
     trainer contract. At 100 TB: K linear passes over a
     broadcast-constant — embarrassingly parallel, nothing quadratic;
     K passes is inherent to the greedy algorithm (each pick depends on
@@ -1469,11 +1504,9 @@ def _kcenter_min_d2(vecs: list[list[float]]) -> Column:
     """Min rounded squared-L2 from column ``emb`` to a constant vector
     set — the k-center cover distance, shared by the greedy loop and
     the coverage eval."""
-    return F.array_min(
-        F.transform(
-            _nested_double_literal(vecs),
-            lambda s: F.round(sq_l2(F.col("emb"), s), 4),
-        )
+    return F.expr(
+        f"array_min(transform({_nested_double_literal_sql(vecs)}, "
+        f"s -> round({_sq_l2_sql('emb', 's')}, 4)))"
     )
 
 
@@ -1506,37 +1539,36 @@ def _kcenter_selection(spark: SparkSession, sf_dir: str):
     seed = e.orderBy("vec_id").select("vec_id", "emb").head()
     out = [(1, int(seed.vec_id), None)]
     sel_vecs = [list(seed.emb)]
-    cur = (
-        e.filter(F.col("vec_id") != int(seed.vec_id))
-        .select("vec_id", "emb", _kcenter_min_d2(sel_vecs).alias("dmin"))
-        .localCheckpoint()
+    # the argmax rides on each pass's checkpoint as an observation, so
+    # a pass is ONE job: checkpoint the updated dmin frame and read the
+    # farthest remaining vector from that same job
+    farthest = F.min(
+        F.struct(
+            (-F.col("dmin")).alias("nd"),
+            F.col("vec_id").alias("vec_id"),
+            F.col("emb").alias("emb"),
+        )
+    ).alias("w")
+    cur, probe = checkpoint_observed(
+        e.filter(F.col("vec_id") != int(seed.vec_id)).select(
+            "vec_id", "emb", _kcenter_min_d2(sel_vecs).alias("dmin")
+        ),
+        farthest,
     )
     for t in range(2, KC_K + 1):
-        win = (
-            cur.agg(
-                F.min(
-                    F.struct(
-                        (-F.col("dmin")).alias("nd"),
-                        F.col("vec_id").alias("vec_id"),
-                        F.col("emb").alias("emb"),
-                    )
-                ).alias("w")
-            )
-            .head()["w"]
-        )
+        win = probe.w
         out.append((t, int(win.vec_id), -float(win.nd)))
         sel_vecs.append(list(win.emb))
         if t < KC_K:
-            cur = (
-                cur.filter(F.col("vec_id") != int(win.vec_id))
-                .select(
+            cur, probe = checkpoint_observed(
+                cur.filter(F.col("vec_id") != int(win.vec_id)).select(
                     "vec_id",
                     "emb",
                     F.least(
                         F.col("dmin"), _kcenter_min_d2([list(win.emb)])
                     ).alias("dmin"),
-                )
-                .localCheckpoint()
+                ),
+                farthest,
             )
     result = (out, sel_vecs)
     if key is not None:
@@ -1802,7 +1834,7 @@ def q_sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes/probe radius further."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
-    ).withColumn("nrm", norm(F.col("emb")))
+    ).withColumn("nrm", norm("emb"))
     sig = _single_table_sig()
     sigs = e.select("vec_id", "emb", "nrm", sig.alias("bucket"))
     q = sigs.filter(F.col("vec_id") < 50).select(
@@ -2150,7 +2182,7 @@ def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("emb"))
-        .withColumn("nrm", norm(F.col("emb")))
+        .withColumn("nrm", norm("emb"))
     )
     cent = e.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cell_id"),

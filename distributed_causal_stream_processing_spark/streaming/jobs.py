@@ -227,6 +227,28 @@ class _CommitMarkers:
         df.write.format("noop").mode("overwrite").save()
         return True
 
+    def _read_committed(
+        self, spark: SparkSession, parent: str, **options
+    ) -> DataFrame:
+        """The committed ``<parent>/batch_id=N`` dirs as one frame.
+
+        COMMITTED batches only: a crash mid-write leaves a torn
+        ``batch_id=N`` with no marker, and Structured Streaming will
+        replay batch N — reading it here would surface those phantom
+        rows once, the exact anomaly write-then-commit exists to
+        prevent. With no batch committed the frame is empty but keeps
+        the torn dirs' schema; an empty sink raises Spark's
+        path-not-found error."""
+        reader = spark.read.options(**options)
+        committed = [
+            os.path.join(parent, f"batch_id={m}")
+            for m in self._committed_ids()
+            if os.path.isdir(os.path.join(parent, f"batch_id={m}"))
+        ]
+        if committed:
+            return reader.parquet(*committed)
+        return reader.parquet(os.path.join(parent, "batch_id=*")).limit(0)
+
     def _write_marker(self, batch_id: int, **payload) -> None:
         # written only AFTER the batch's data write returned — the
         # ordering every reader in this module relies on
@@ -307,22 +329,7 @@ class IdempotentForeachBatchSink(_CommitMarkers):
         self._write_marker(batch_id, rows=obs.get["rows"])
 
     def read_all(self, spark: SparkSession) -> DataFrame:
-        # COMMITTED batches only: a crash mid-write leaves a torn
-        # data/batch_id=N with no marker, and Structured Streaming will
-        # replay batch N — reading the glob here would surface those
-        # phantom rows once, the exact anomaly write-then-commit exists
-        # to prevent (the other readers in this module, CdcMergeSink
-        # .snapshot and _StreamingIndexDedup._live_dirs, already filter
-        # by markers)
-        committed = [
-            os.path.join(self.data_dir, f"batch_id={m}")
-            for m in self._committed_ids()
-            if os.path.isdir(os.path.join(self.data_dir, f"batch_id={m}"))
-        ]
-        if not committed:
-            # preserve the empty-sink error shape of the old glob read
-            return spark.read.parquet(os.path.join(self.data_dir, "batch_id=*"))
-        return spark.read.parquet(*committed)
+        return self._read_committed(spark, self.data_dir)
 
 
 def run_effectively_once_sink(spark: SparkSession, stream_dir: str, sink_root: str) -> "IdempotentForeachBatchSink":
@@ -1142,8 +1149,8 @@ class _StreamingIndexDedup(_CommitMarkers):
         self._write_marker(batch_id)
 
     def read_decisions(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.decisions_dir).parquet(
-            os.path.join(self.decisions_dir, "batch_id=*")
+        return self._read_committed(
+            spark, self.decisions_dir, basePath=self.decisions_dir
         )
 
 

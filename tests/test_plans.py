@@ -975,7 +975,10 @@ def test_iterative_shuffle_records_pinned(spark):
     round un-fusing, an extra exchange sneaking in) from host weather
     without a single wall number. Values measured at sf0.001 on the
     shipped plans (r16); a legitimate plan change should re-measure
-    and re-pin, with the delta explained in that round's notes."""
+    and re-pin, with the delta explained in that round's notes. The
+    graph loops' probes (PageRank's node count, the components
+    certificate) are observed on their checkpoints and shuffle
+    nothing, one partial-count record per probe fewer than r16."""
     from distributed_causal_stream_processing_spark import all_queries
     from distributed_causal_stream_processing_spark.benchlib import shuffle_volume
     from distributed_causal_stream_processing_spark.operators import similarity as S
@@ -983,9 +986,9 @@ def test_iterative_shuffle_records_pinned(spark):
     qs = all_queries()
     sf = SF_SMOKE
     pinned = {
-        "q_graph_pagerank": 24_699,
+        "q_graph_pagerank": 24_698,
         "q_causal_chains": 1_000,
-        "q_graph_components": 91_393,
+        "q_graph_components": 91_390,
     }
     for name, want in pinned.items():
         records, _ = shuffle_volume(qs, name, spark, sf)
@@ -1019,3 +1022,80 @@ def test_iterative_shuffle_records_pinned(spark):
         f"q_dedup_semantic_clusters shuffled {records:,} records at "
         "sf0.001 — outside the 30k-62k band measured on the r16 plan"
     )
+
+
+def _jobs_around_checkpoints(spark, monkeypatch, fn):
+    """Run ``fn`` and count its Spark jobs: (jobs started outside any
+    localCheckpoint, [jobs of each localCheckpoint call]). Each eager
+    checkpoint runs under its own job group, the rest under one outer
+    group, counted through the status tracker."""
+    from distributed_causal_stream_processing_spark.benchlib import (
+        drain_listener_bus,
+    )
+
+    sc = spark.sparkContext
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    outer = f"outside-checkpoints-{id(fn)}"
+    per_checkpoint = []
+
+    def counted(self, *args, **kwargs):
+        group = f"{outer}-{len(per_checkpoint)}"
+        sc.setJobGroup(group, "localCheckpoint")
+        try:
+            return orig(self, *args, **kwargs)
+        finally:
+            drain_listener_bus(spark)
+            per_checkpoint.append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
+            sc.setJobGroup(outer, "outside checkpoints")
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    sc.setJobGroup(outer, "outside checkpoints")
+    try:
+        fn()
+        drain_listener_bus(spark)
+        return len(sc.statusTracker().getJobIdsForGroup(outer)), per_checkpoint
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_kcenter_pass_is_one_job(spark, monkeypatch):
+    """Each greedy pass after the seed is ONE Spark job: the pass's
+    checkpoint also computes the farthest-vector argmax as an
+    observation. An argmax run as its own aggregate after the
+    checkpoint costs two more jobs per pass (map stage + result) and
+    fails here without any timing."""
+    from distributed_causal_stream_processing_spark.operators import similarity as S
+
+    S._emb(spark, SF_SMOKE).count()  # the fixture's load is not a pass
+    S._MEMO.clear()
+    outside, per_pass = _jobs_around_checkpoints(
+        spark, monkeypatch, lambda: S._kcenter_selection(spark, SF_SMOKE)
+    )
+    assert per_pass == [1] * (S.KC_K - 1), per_pass
+    assert outside == 1, f"{outside} jobs besides the passes (want: the seed)"
+
+
+def test_connected_components_runs_only_checkpoint_jobs(spark, monkeypatch):
+    """The components loop starts no job besides its checkpoints: the
+    label-sum certificate is observed on each block's checkpoint (and
+    on the initial labels'), never collected by a separate action."""
+    from distributed_causal_stream_processing_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)] + [(100, 101)], "src long, dst long"
+    )
+    got = {}
+
+    def run():
+        got["comp"] = connected_components(edges)
+
+    outside, per_checkpoint = _jobs_around_checkpoints(spark, monkeypatch, run)
+    assert outside == 0, f"{outside} jobs outside {len(per_checkpoint)} checkpoints"
+    assert len(per_checkpoint) >= 3  # sym, initial labels, >= 1 block
+    comps = {r.node: r.component for r in got["comp"].collect()}
+    assert comps == {**{i: 0 for i in range(41)}, 100: 100, 101: 100}

@@ -591,6 +591,30 @@ def test_connected_components_raises_on_round_exhaustion(spark):
         connected_components(edges, max_rounds=2)
 
 
+def test_connected_components_rejects_non_numeric_labels(spark):
+    """The convergence certificate sums labels as decimal(38,0); a label
+    that cannot cast is skipped by the sum, so non-numeric labels could
+    keep moving while the sum stands still and the loop would stop with
+    wrong components. The observed certificate must raise its TypeError
+    instead (under ANSI casts too) — when every id is non-numeric, and
+    when numeric ids give the sum a value: a 10-node chain 'a'..'j'
+    needs more than one block, and the edge '1'-'2' keeps the sum
+    constant from the first block on."""
+    import pytest as _pytest
+
+    from distributed_causal_stream_processing_spark.operators.graph import (
+        connected_components,
+    )
+
+    all_strings = [("a", "b"), ("b", "c"), ("x", "y")]
+    chain = [(chr(ord("a") + i), chr(ord("a") + i + 1)) for i in range(9)]
+    mixed = chain + [("1", "2")]
+    for rows in (all_strings, mixed):
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        with _pytest.raises(TypeError, match="numeric"):
+            connected_components(edges)
+
+
 def test_connected_components_runs_exactly_max_rounds(spark):
     """``max_rounds`` is the number of fused rounds that run: the loop
     chains rounds in blocks of two and clamps the last block to the

@@ -110,6 +110,51 @@ def test_sink_read_all_excludes_torn_uncommitted_batch(spark, stream_dir, tmp_pa
     assert sink.read_all(spark).count() == total + 33
 
 
+def test_sink_read_all_has_no_rows_before_first_commit(spark, tmp_path):
+    """A crash during the FIRST batch leaves data/batch_id=0 with no
+    marker and nothing committed. read_all must return zero rows with
+    the torn batch's schema, not fall back to reading every batch dir;
+    a sink that never wrote anything still raises."""
+    from pyspark.errors import AnalysisException
+
+    from distributed_causal_stream_processing_spark.io import load
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    sink = jobs.IdempotentForeachBatchSink(str(tmp_path / "sink"))
+    torn = load(spark, SF_SMOKE, "events").limit(33)
+    torn.write.parquet(os.path.join(sink.data_dir, "batch_id=0"))
+    assert not sink.is_committed(0)
+    got = sink.read_all(spark)
+    assert got.count() == 0
+    assert got.columns == torn.columns
+
+    empty = jobs.IdempotentForeachBatchSink(str(tmp_path / "empty"))
+    with pytest.raises(AnalysisException):
+        empty.read_all(spark)
+
+
+def test_index_dedup_read_decisions_skips_uncommitted(spark, tmp_path):
+    """Decisions of a batch without a commit marker (a crash between
+    the decisions write and the marker) are not returned: only the
+    committed batch's decisions are read back."""
+    from distributed_causal_stream_processing_spark.io import load
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    docs = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    sink = jobs.StreamingContentDedup(str(tmp_path / "dedup"))
+    sink.process(docs.filter(F.col("doc_id") < 20), 0)
+    want = sorted(tuple(r) for r in sink.read_decisions(spark).collect())
+    assert len(want) == 20
+
+    torn = sink.read_decisions(spark).drop("batch_id")
+    torn.withColumn("doc_id", F.col("doc_id") + 1000).write.parquet(
+        os.path.join(sink.decisions_dir, "batch_id=1")
+    )
+    assert not sink.is_committed(1)
+    got = sorted(tuple(r) for r in sink.read_decisions(spark).collect())
+    assert got == want
+
+
 def test_cdc_sink_prunes_superseded_snapshots(spark, stream_dir, tmp_path):
     """Only snapshot_{latest_committed} is ever read back; superseded
     snapshot dirs must be pruned after each commit or storage grows
