@@ -291,14 +291,14 @@ def time_index_builds(spark, sf_dir: str, names=None, runs: int = 1) -> dict:
         # sub-table checkpoint + PQ_ITERS Lloyd rounds (driver collects
         # run inside the call; cb_df is local data afterwards)
         "build_pq_codebook": (None, lambda: S._pq_raw_parts(spark, sf_dir), None),
-        # coarse assign + residual encode + codebook train; the memo
-        # path eagerly checkpoints the corpus-sized code table
+        # corpus cut + coarse assign + residual encode + codebook
+        # train; the memo path eagerly checkpoints the code table
         "build_ivfadc_seeded": (None, lambda: S.ivfadc_index(spark, sf_dir), None),
         # adds IVF_TRAIN_ITERS Lloyd rounds over the full corpus for
         # the coarse cells before the same residual-PQ pipeline
         "build_ivfadc_trained": (
             None,
-            lambda: S.ivfadc_index_trained(spark, sf_dir),
+            lambda: S.ivfadc_index(spark, sf_dir, trained=True),
             None,
         ),
         # multi-table hyperplane signatures over the corpus (rebuilt

@@ -54,7 +54,6 @@ from distributed_causal_stream_processing_spark.operators.similarity import (
     _ivfadc_probes,
     _ivfadc_residuals,
     ivfadc_index,
-    ivfadc_index_trained,
     ivfadc_score,
 )
 
@@ -92,10 +91,7 @@ def ivfadc_index_save(
     cells than this fixture's 16, the same call distributes the
     directory fan-out across the final write tasks — the layout cost
     is one shuffle-free pass over the code table."""
-    if trained:
-        _, cent, cb_df, codes = ivfadc_index_trained(spark, sf_dir)
-    else:
-        cent, cb_df, codes = ivfadc_index(spark, sf_dir)
+    cent, cb_df, codes = ivfadc_index(spark, sf_dir, trained=trained)
     codes.write.partitionBy("cell_id").mode("overwrite").parquet(
         os.path.join(out_dir, "codes")
     )

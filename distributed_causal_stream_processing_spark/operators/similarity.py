@@ -31,6 +31,7 @@ computed at a coarser grid than the algorithmic delta.
 from __future__ import annotations
 
 import hashlib
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -678,9 +679,7 @@ def q_dedup_embedding(
                 "vec_a", "vec_b", F.round("sim", 4).alias("cos_sim")
             )
 
-        return _memo_df(
-            _memo_key(spark, sf_dir, "dedup_embedding:yardstick_pairs"), build
-        )
+        return _memo(spark, sf_dir, "dedup_embedding:yardstick_pairs", build)
     return _blocked_cosine_pairs(spark, sf_dir, thresh=0.3, pred=pred).select(
         "vec_a", "vec_b", F.round("sim", 4).alias("cos_sim")
     )
@@ -1144,48 +1143,61 @@ def lloyd(
     return book
 
 
-def _kmeans_duck(k: int, iters: int, dim: int) -> str:
-    """Unrolled Lloyd's iterations as one DuckDB query: assign_t =
-    argmin distance to c_{t-1}; c_t = per-dimension member average
-    rounded to 6 dp (the rounding pins both engines to the same
-    centroids despite differing float-summation orders)."""
+def _kmeans_d2(dim: int) -> str:
     # squared-L2 ordering, NOT list_distance: sqrt halves the spacing
     # between near-tied distances, so two squared distances that are
     # distinct doubles can collapse to one double under sqrt — DuckDB
     # would fall to the cell_id tie-break while Spark (which orders by
     # the raw squared sum) keeps the strict order, and one diverged
-    # assignment cascades through every Lloyd round (review find,
-    # round 9; same rationale as the PQ oracle's comment).
-    d2 = f"list_sum([ (CAST(e.embedding[j] AS DOUBLE) - c.c[j]) ** 2 for j in range(1, {dim + 1}) ])"
+    # assignment cascades through every Lloyd round (same rationale as
+    # the PQ oracle's comment).
+    return f"list_sum([ (CAST(e.embedding[j] AS DOUBLE) - c.c[j]) ** 2 for j in range(1, {dim + 1}) ])"
+
+
+def _lloyd_duck(k: int, iters: int, dim: int, p: str = "") -> list[str]:
+    """``lloyd`` over the ``embeddings`` vectors unrolled as DuckDB CTEs:
+    ``{p}c0`` seeds cell_id = vec_id < k; ``{p}a{t}`` assigns every
+    vector to its argmin squared distance to ``{p}c{t-1}``; ``{p}c{t}``
+    is the per-dimension member average rounded to 6 dp (the rounding
+    pins both engines to the same centroids despite differing
+    float-summation orders). The last CTE, ``{p}c{iters}``, holds
+    (cell_id, c). The prefix keeps a chain clear of the PQ unroll's
+    c*/a* names when both sit in one query."""
+    d2 = _kmeans_d2(dim)
     ctes = [
-        f"""c0 AS (
+        f"""{p}c0 AS (
         SELECT vec_id AS cell_id, CAST(embedding AS DOUBLE[]) AS c
         FROM embeddings WHERE vec_id < {k})"""
     ]
-    prev = "c0"
     for t in range(1, iters + 1):
-        ctes.append(f"""a{t} AS (
+        ctes.append(f"""{p}a{t} AS (
         SELECT vec_id, cell_id FROM (
             SELECT e.vec_id, c.cell_id,
                    row_number() OVER (
                        PARTITION BY e.vec_id
                        ORDER BY {d2},
                                 c.cell_id) AS rn
-            FROM embeddings e CROSS JOIN {prev} c)
+            FROM embeddings e CROSS JOIN {p}c{t - 1} c)
         WHERE rn = 1)""")
-        ctes.append(f"""c{t} AS (
+        ctes.append(f"""{p}c{t} AS (
         SELECT cell_id, list(v ORDER BY i) AS c FROM (
             SELECT a.cell_id, t.i,
                    round(avg(CAST(e.embedding[t.i] AS DOUBLE)), 6) AS v
-            FROM a{t} a
+            FROM {p}a{t} a
             JOIN embeddings e USING (vec_id)
             CROSS JOIN range(1, {dim + 1}) t(i)
             GROUP BY a.cell_id, t.i)
         GROUP BY cell_id)""")
-        prev = f"c{t}"
+    return ctes
+
+
+def _kmeans_duck(k: int, iters: int, dim: int) -> str:
+    """q_sim_ivf_kmeans' oracle: the unrolled Lloyd chain, then each
+    vector's final cell and distance, summarized per cell."""
+    d2 = _kmeans_d2(dim)
     return (
         "WITH "
-        + ",\n    ".join(ctes)
+        + ",\n    ".join(_lloyd_duck(k, iters, dim))
         + f""",
     fin AS (
         SELECT vec_id, cell_id, d2 FROM (
@@ -1195,12 +1207,12 @@ def _kmeans_duck(k: int, iters: int, dim: int) -> str:
                        PARTITION BY e.vec_id
                        ORDER BY {d2},
                                 c.cell_id) AS rn
-            FROM embeddings e CROSS JOIN {prev} c)
+            FROM embeddings e CROSS JOIN c{iters} c)
         WHERE rn = 1)
     SELECT f.cell_id, CAST(count(*) AS BIGINT) AS n_vecs,
            round(sum(f.d2), 2) AS inertia,
            round(any_value(list_sum(c.c)), 3) AS centroid_sum
-    FROM fin f JOIN {prev} c USING (cell_id)
+    FROM fin f JOIN c{iters} c USING (cell_id)
     GROUP BY f.cell_id
     """
     )
@@ -1515,65 +1527,56 @@ def _kcenter_selection(spark: SparkSession, sf_dir: str):
     vectors), memoized per (session, fixture): the selection row and
     the coverage eval share one run of the K-pass loop.
 
-    INCREMENTAL running-dmin (optimization round 16, guide §1/§2.4;
-    VERDICT r15 item 2): pass t used to recompute each remaining
-    vector's min distance to ALL t−1 selected centers via the
-    interpreted ``_kcenter_min_d2`` fold — O(K²·dim) scan work across
-    the loop, with a literal tree that GREW every pass (so Catalyst
-    analysis cost grew too), measured 8.4 s at sf0.1 with rounds at
-    0.28–0.67 s. Farthest-first only ever needs the min against the
-    NEWEST center: carry a ``dmin`` column, localCheckpoint it per
-    pass, and update ``dmin = least(dmin, d2(new_center))`` — each
-    pass now folds ONE constant vector, O(K·dim) total, and the argmax
-    scans the checkpointed (vec_id, emb, dmin) frame with no distance
-    recompute. Exact same values: ``_kcenter_min_d2`` is array_min
-    over per-center round(d2, 4) terms, and iterated least() over the
-    same rounded doubles (no NaN/NULL possible, d2 ≥ 0) is the same
-    min; the winner struct, exclusion set, and tie-breaks are
-    unchanged, so the selection — and every downstream hash — is
-    bit-identical (value-hash re-proven at sf0.001/0.01/0.1)."""
-    key = _memo_key(spark, sf_dir, "kcenter:selection")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    e = _emb(spark, sf_dir)
-    seed = e.orderBy("vec_id").select("vec_id", "emb").head()
-    out = [(1, int(seed.vec_id), None)]
-    sel_vecs = [list(seed.emb)]
-    # the argmax rides on each pass's checkpoint as an observation, so
-    # a pass is ONE job: checkpoint the updated dmin frame and read the
-    # farthest remaining vector from that same job
-    farthest = F.min(
-        F.struct(
-            (-F.col("dmin")).alias("nd"),
-            F.col("vec_id").alias("vec_id"),
-            F.col("emb").alias("emb"),
-        )
-    ).alias("w")
-    cur, probe = checkpoint_observed(
-        e.filter(F.col("vec_id") != int(seed.vec_id)).select(
-            "vec_id", "emb", _kcenter_min_d2(sel_vecs).alias("dmin")
-        ),
-        farthest,
-    )
-    for t in range(2, KC_K + 1):
-        win = probe.w
-        out.append((t, int(win.vec_id), -float(win.nd)))
-        sel_vecs.append(list(win.emb))
-        if t < KC_K:
-            cur, probe = checkpoint_observed(
-                cur.filter(F.col("vec_id") != int(win.vec_id)).select(
-                    "vec_id",
-                    "emb",
-                    F.least(
-                        F.col("dmin"), _kcenter_min_d2([list(win.emb)])
-                    ).alias("dmin"),
-                ),
-                farthest,
+    Farthest-first only ever needs each vector's min distance to the
+    NEWEST center, so each pass carries a ``dmin`` column, cuts it with
+    a localCheckpoint, and updates ``dmin = least(dmin,
+    d2(new_center))``: one constant vector folded per pass, O(K·dim)
+    scan work in total, and a literal tree that does not grow with the
+    pass number. The values equal ``_kcenter_min_d2`` over all selected
+    centers: that is array_min over per-center round(d2, 4) terms, and
+    iterated least() over the same rounded doubles (d2 ≥ 0, never NULL
+    or NaN) is the same min; the winner struct, exclusion set and
+    tie-breaks are those of the full recompute."""
+
+    def build():
+        e = _emb(spark, sf_dir)
+        seed = e.orderBy("vec_id").select("vec_id", "emb").head()
+        out = [(1, int(seed.vec_id), None)]
+        sel_vecs = [list(seed.emb)]
+        # the argmax rides on each pass's checkpoint as an observation,
+        # so a pass is ONE job: checkpoint the updated dmin frame and
+        # read the farthest remaining vector from that same job
+        farthest = F.min(
+            F.struct(
+                (-F.col("dmin")).alias("nd"),
+                F.col("vec_id").alias("vec_id"),
+                F.col("emb").alias("emb"),
             )
-    result = (out, sel_vecs)
-    if key is not None:
-        _memo_put(key, result)
-    return result
+        ).alias("w")
+        cur, probe = checkpoint_observed(
+            e.filter(F.col("vec_id") != int(seed.vec_id)).select(
+                "vec_id", "emb", _kcenter_min_d2(sel_vecs).alias("dmin")
+            ),
+            farthest,
+        )
+        for t in range(2, KC_K + 1):
+            win = probe.w
+            out.append((t, int(win.vec_id), -float(win.nd)))
+            sel_vecs.append(list(win.emb))
+            if t < KC_K:
+                cur, probe = checkpoint_observed(
+                    cur.filter(F.col("vec_id") != int(win.vec_id)).select(
+                        "vec_id",
+                        "emb",
+                        F.least(
+                            F.col("dmin"), _kcenter_min_d2([list(win.emb)])
+                        ).alias("dmin"),
+                    ),
+                    farthest,
+                )
+        return out, sel_vecs
+
+    return _memo(spark, sf_dir, "kcenter:selection", build)
 
 
 def kcenter_selection_violations(
@@ -2357,19 +2360,13 @@ PQ_M = 8  # subspaces
 PQ_DSUB = DIM // PQ_M
 PQ_K = 16  # codewords per subspace (4-bit codes)
 PQ_ITERS = 2  # fixed Lloyd rounds per subspace (oracle-unrollable)
-# The PQ/IVFADC eval QUERY WINDOW. Round 10 found the old window
-# (vec_id < 20) was an eval-bias bug of the shared-design class no
-# parity check can catch: 16 of the 20 query vectors WERE the cell
-# centroids (zero residual — trivially easy queries), so every recall
-# number in the family was dominated by them (measured: rerank@10 read
-# 0.65 on the biased window vs 0.11 on this representative one; the
-# probe "ceiling" read 0.90 vs 0.25). The window now (a) starts past BOTH
+# The PQ/IVFADC eval QUERY WINDOW: PQ_NQ queries starting past both
 # seed families (cell centroids 0..N_CELLS-1 and codebook seeds up to
-# N_CELLS+PQ_K-1), and (b) holds PQ_NQ=100 queries instead of 20, so
-# the recall resolution is 0.01 and comparisons rest on ~tens of
-# queries, not 5-vs-1 counts. The eval cost is index-BUILD-dominated
-# (the exact yardstick is NQ x corpus pairs — trivial), so the suite
-# barely notices.
+# N_CELLS+PQ_K-1). A query that IS a construction vector has a zero
+# residual and is trivially easy on both engines, so parity stays
+# green while every recall reads high; eval_window_seed_violations
+# guards the window. 100 queries give recall a 0.01 resolution; the
+# eval cost is the index build, not the PQ_NQ x corpus exact scan.
 PQ_NQ = 100
 PQ_Q_LO = 32  # = N_CELLS + PQ_K: first eval query id, past both seed families
 PQ_Q_HI = PQ_Q_LO + PQ_NQ
@@ -2392,19 +2389,16 @@ def eval_window_seed_violations(
     lo: int = PQ_Q_LO, hi: int = PQ_Q_HI
 ) -> dict[str, set[int]]:
     """Construction-seed ids inside the eval query window [lo, hi), per
-    seed family — the representativeness guard generalizing round 10's
-    flagship bug (VERDICT r10 item 8): the original window (vec_id < 20)
-    was 80% zero-residual construction vectors, BOTH engines shared the
-    bias, hash parity stayed green, and every published recall number
-    read 3-6x high. The families are derived from the SAME constants
-    the index constructions use, so adding cells/codewords or moving a
-    seed range moves the derived set and the property test re-checks
-    the window against it. Empty dict == clean. (INCR_CUT is not a
-    seed family: ids below it are ordinary training vectors, not
-    vectors the index geometry is BUILT FROM.)"""
+    seed family; an empty dict means the window is clean. A window
+    holding vectors the index geometry is BUILT FROM biases every
+    recall number upward on both engines at once, so hash parity cannot
+    catch it. The families derive from the same constants the
+    constructions use, so moving a seed range moves the derived set.
+    (INCR_CUT is not a seed family: ids below it are ordinary training
+    vectors.)"""
     families: dict[str, range] = {
         # IVFADC coarse cells: centroids ARE vectors vec_id < N_CELLS,
-        # with identically-zero residuals — the round-9/10 bias class
+        # with identically-zero residuals
         "ivfadc_cells": range(N_CELLS),
         # residual-PQ codebook seeds (seed_lo = N_CELLS, see
         # _pq_codebook): Lloyd starts AT these residuals
@@ -2428,44 +2422,29 @@ def eval_window_seed_violations(
     return out
 
 
-# --- per-(session, fixture) memo for index/eval artifacts ----------------
+# --- per-(session, fixture) artifact memo --------------------------------
 #
-# VERDICT r10 item 1: the PQ/IVFADC eval family re-derived the same
-# corpus subvectors, codebooks, code tables, and exact-NN yardstick in
-# every registered row — 14 rows x (PQ_ITERS Lloyd rounds + a
-# PQ_NQ-query exact scan) was 34% of the bench suite, buying nothing:
-# every build is deterministic, so re-deriving it can only reproduce
-# the same rows. Memoize the shared artifacts the way io.load()
-# memoizes table handles — keyed by applicationId (a rebuilt session
-# can't serve stale handles) and the embeddings fixture fingerprint (a
-# regenerated-in-place parquet invalidates) — and cut each artifact's
-# lineage with an eager localCheckpoint so reuse replays materialized
-# partitions instead of the build. At 100 TB this memo IS the
-# architecture, not a bench trick: the index artifacts (cells,
-# codebook, code table) are built offline ONCE and served to every
-# query; rebuilding them per query was the unrealistic shape. Memoized
-# artifacts and their sizes, honestly (review r11 — an earlier version
-# of this comment claimed everything was constant-or-code-sized):
-# codebooks/centroids are constants and the adc/exact eval tables are
-# PQ_NQ-bounded, but the code table is corpus-sized (4-bit codes +
-# keys), the PQ subvector table and the trained/clustered corpus
-# checkpoints are corpus-sized DOUBLE tables (~dim doubles per
-# vector — tens of MB per fixture at sf0.1). All entries are bounded
-# per (session, fixture, variant), live in executor storage for the
-# session, and cannot be recomputed once lineage is cut — acceptable
-# at bench scales and the right trade for eval reuse, but a 100 TB
-# deployment would persist these artifacts to storage (the offline
-# index job) instead of block-manager checkpoints.
+# Every PQ/IVFADC build is deterministic, so the corpus, codebooks, code
+# tables, candidate tables and exact-NN yardsticks are built once per
+# (session, fixture, variant) and shared by every eval row — the shape
+# an offline index has in production. Keys carry the applicationId (a
+# rebuilt session cannot serve stale handles) and the embeddings
+# fixture fingerprint (a parquet rewritten in place misses), and each
+# DataFrame artifact is lineage-cut with an eager localCheckpoint, so
+# reuse replays materialized partitions instead of the build. Sizes:
+# codebooks and centroids are constants and the adc/exact tables are
+# PQ_NQ-bounded, but the corpus, subvector and code tables are
+# corpus-sized DOUBLE or code tables (tens of MB per fixture at sf0.1).
+# Entries live in executor storage for the session and cannot be
+# recomputed once lineage is cut; a 100 TB deployment persists the
+# index instead (operators/index_store.py). The same memo holds the
+# k-center selection and the dedup yardstick's pair table.
 _MEMO: dict[tuple, object] = {}
 
-# Testing seam (review r11): the registry-wide physical-plan audits
-# (no-Python, no-cartesian) must see the CONSTRUCTION plans, not the
-# post-checkpoint ExistingRDD scans a memo hit returns. With this flag
-# set, _memo_key returns None, so every build path runs uncached and
-# uncheckpointed — the plans are the real ones. Mid-pipeline lineage
-# cuts (PQ subvector tables, LSH signature frames) honor the seam via
-# _build_ckpt (ADVICE r11: an unconditional localCheckpoint there kept
-# those stages invisible to the audits even with the seam on).
+# Audit seam: with this flag set, _memo_key returns None and
+# _build_ckpt skips its checkpoint, so every build runs uncached and
+# uncut and the registry-wide plan audits (no Python, no cartesian) see
+# the construction plans, not the ExistingRDD scans a memo hit returns.
 _MEMO_DISABLED = False
 
 
@@ -2481,15 +2460,12 @@ def _memo_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple | None:
 
 def _memo_put(key: tuple, value) -> None:
     """Insert a memo entry, evicting prior entries that share
-    (app_id, sf_dir, tag) but carry a DIFFERENT fixture fingerprint
-    (ADVICE r11): a parquet regenerated in place creates a new key, and
-    the old entry's eagerly-checkpointed corpus-sized blocks would
-    otherwise stay pinned in block-manager storage for the session
-    lifetime — a slow leak for long-lived sessions that rewrite
-    fixtures. Dropping the last Python reference is the release
-    mechanism: localCheckpoint blocks are freed asynchronously by
-    Spark's ContextCleaner once the RDD is unreachable (the same
-    lifecycle bench.py's rdd_storage_blocks_after_suite probe pins)."""
+    (app_id, sf_dir, tag) but carry a DIFFERENT fixture fingerprint: a
+    parquet regenerated in place creates a new key, and the old entry's
+    checkpointed corpus-sized blocks would otherwise stay pinned for
+    the session. Dropping the last Python reference releases them:
+    Spark's ContextCleaner frees localCheckpoint blocks once the RDD is
+    unreachable."""
     for k in [k for k in _MEMO if k[:3] == key[:3] and k != key]:
         del _MEMO[k]
     _MEMO[key] = value
@@ -2497,25 +2473,28 @@ def _memo_put(key: tuple, value) -> None:
 
 def _build_ckpt(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint INSIDE a build pipeline, skipped under the
-    _MEMO_DISABLED audit seam (ADVICE r11): the seam's contract is that
-    every build path runs uncheckpointed so the registry-wide
-    no-Python/no-cartesian plan audits see the full construction plan —
-    an unconditional checkpoint here left the _pq_subvecs stage
-    invisible to them. When the memo is merely unavailable (no
+    _MEMO_DISABLED audit seam so the plan audits see the full
+    construction plan. When the memo is merely unavailable (no
     applicationId) the checkpoint still runs: there it is a performance
     cut, not an audit blind spot."""
     return df if _MEMO_DISABLED else df.localCheckpoint(eager=True)
 
 
-def _memo_df(key: tuple | None, build) -> DataFrame:
-    """Memoize one DataFrame artifact: build, cut lineage, reuse."""
+def _memo(spark: SparkSession, sf_dir: str, tag: str, build):
+    """The one memo entry point: the artifact stored under (session,
+    fixture, ``tag``), else ``build()``'s — lineage-cut with
+    _build_ckpt when it is a DataFrame, stored as built when it is a
+    tuple (whose builder cuts the corpus-sized members it reuses) or
+    driver-side data."""
+    key = _memo_key(spark, sf_dir, tag)
     if key is not None and key in _MEMO:
         return _MEMO[key]
-    df = build()
+    value = build()
+    if isinstance(value, DataFrame):
+        value = _build_ckpt(value)
     if key is not None:
-        df = df.localCheckpoint(eager=True)
-        _memo_put(key, df)
-    return df
+        _memo_put(key, value)
+    return value
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2548,11 +2527,9 @@ def _pq_codebook(sub: DataFrame, seed_lo: int = 0) -> DataFrame:
 
     ``seed_lo`` exists for the residual-PQ (IVFADC) trainer: its input
     subvectors are coarse-cell RESIDUALS, and vectors 0..N_CELLS-1 ARE
-    the cell centroids, so their residuals are identically zero —
-    seeding from vec_id < PQ_K there hands Lloyd K copies of the zero
-    vector and the codebook collapses to a single code (the round-8
-    degeneracy: every ADC distance within a cell was constant and
-    "search" tie-broke on neighbor_id). IVFADC seeds from
+    the seeded cell centroids, so their residuals are identically zero;
+    seeding from them would hand Lloyd K copies of the zero vector and
+    collapse the codebook to a single code. IVFADC seeds from
     seed_lo = N_CELLS, the first K vectors with real residuals."""
     schema = "sub_no int, code bigint, c array<double>"
     return sub.sparkSession.createDataFrame(
@@ -2629,10 +2606,10 @@ def _pq_duck(
     return "WITH " + ",\n    ".join(ctes)
 
 
-# Cross-subspace sums fold in sub_no order on BOTH engines (ADVICE r07:
-# an unordered 8-double SUM can differ from DuckDB's by an ULP, and a
-# sum landing within an ULP of a .00005 boundary would flip the 4-dp
-# rounding — the same class of flake the PCA grid argument closes).
+# Cross-subspace sums fold in sub_no order on BOTH engines: an
+# unordered 8-double SUM can differ from DuckDB's by an ULP, and a sum
+# landing within an ULP of a .00005 boundary would flip the 4-dp
+# rounding — the same class of flake the PCA grid argument closes.
 def _fold_by_sub(val: str) -> Column:
     """Aggregate expression: left-fold sum of ``val`` in sub_no order —
     bit-equal to the oracle's list_sum(list(val ORDER BY sub_no))."""
@@ -2641,19 +2618,15 @@ def _fold_by_sub(val: str) -> Column:
 
 
 def _pq_raw_parts(spark: SparkSession, sf_dir: str):
-    """(sub, cb_df): the raw-corpus PQ subvector table (checkpointed)
-    and trained codebook, memoized per (session, fixture) — q_sim_pq /
-    q_sim_pq_adc / q_sim_pq_recall all train the IDENTICAL codebook,
-    so only the first row of a run pays the PQ_ITERS Lloyd rounds."""
-    key = _memo_key(spark, sf_dir, "pq:raw")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    sub = _build_ckpt(_pq_subvecs(_emb(spark, sf_dir)))
-    cb_df = _pq_codebook(sub)
-    out = (sub, cb_df)
-    if key is not None:
-        _memo_put(key, out)
-    return out
+    """(sub, cb_df): the raw-corpus PQ subvector table (cut) and its
+    trained codebook, memoized — q_sim_pq, q_sim_pq_adc and
+    q_sim_pq_recall share one PQ_ITERS-round training."""
+
+    def build():
+        sub = _build_ckpt(_pq_subvecs(_emb(spark, sf_dir)))
+        return sub, _pq_codebook(sub)
+
+    return _memo(spark, sf_dir, "pq:raw", build)
 
 
 @query(
@@ -2668,16 +2641,15 @@ def _pq_raw_parts(spark: SparkSession, sf_dir: str):
 def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ TRAIN + ENCODE: every vector compressed to its M=8 4-bit
     codes (64x smaller than the float32 array), plus the per-vector
-    reconstruction error the codes imply. Codes AND distortion are
-    value-hash-checked against the full training unrolled in DuckDB —
-    the codebooks themselves are thereby pinned too, since a single
-    diverged centroid would flip codes.
+    reconstruction error the codes imply. The oracle unrolls the whole
+    training, so the codebooks are pinned too: one diverged centroid
+    would flip codes.
 
-    Scale shape: training cost is PQ_ITERS broadcast joins + hash aggs
-    over narrow (vec_id, sub_no) rows; the collected codebook is
-    M*K*dsub doubles — constant. Encoding is one broadcast join; the
-    output table (4 bytes of codes per vector) is what a 100 TB corpus
-    actually stores and scans at search time."""
+    Scale shape: training is PQ_ITERS broadcast joins + hash aggs over
+    narrow (vec_id, sub_no) rows, collecting an M*K*dsub-double
+    codebook per round (constant); encoding is one broadcast join, and
+    its output (4 bytes of codes per vector) is what a 100 TB corpus
+    stores and scans at search time."""
     sub, cb_df = _pq_raw_parts(spark, sf_dir)
     return (
         nearest_code(sub, cb_df, "sv", "c", "code", keys=("sub_no",))
@@ -2690,10 +2662,9 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_sim_pq_adc",
-    oracle=_pq_duck()
-    + f"""
+# The full-scan PQ search's lut + adc CTEs (after _pq_duck()), shared
+# by q_sim_pq_adc and q_sim_pq_recall
+_PQ_ADC_CTES = f"""
     , lut AS (
         SELECT s.vec_id AS query_id, c.sub_no, c.code,
                list_sum([ (s.sv[j] - c.c[j]) ** 2
@@ -2706,7 +2677,14 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM fin f
         JOIN lut l ON l.sub_no = f.sub_no AND l.code = f.code
         WHERE f.vec_id != l.query_id
-        GROUP BY 1, 2)
+        GROUP BY 1, 2)"""
+
+
+@query(
+    "q_sim_pq_adc",
+    oracle=_pq_duck()
+    + _PQ_ADC_CTES
+    + """
     SELECT query_id, neighbor_id, adc_dist FROM (
         SELECT query_id, neighbor_id, adc_dist,
                row_number() OVER (
@@ -2717,27 +2695,35 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ ASYMMETRIC-DISTANCE search: nearest neighbor per query
-    (the PQ_Q_LO..PQ_Q_HI eval window) computed purely from CODES — per query one exact
-    M x K distance lookup table, each candidate scored by M lookups.
-    The search never reads a candidate's float vector, which is the
-    entire point of PQ at 100 TB: the scan side is the 4-byte code
-    table, the LUT is built from the only float vector touched (the
-    query's own).
+    """PQ ASYMMETRIC-DISTANCE search: nearest neighbor per eval-window
+    query computed purely from CODES — per query one exact M x K
+    distance lookup table, each candidate scored by M lookups. The
+    only float vector touched is the query's own.
 
-    Plan: the code table explodes to narrow (vec_id, sub_no, code)
-    rows, equi-joins the BROADCAST lut (NQ*M*K rows — constant), and
-    one hash agg folds the M partial distances per (query, candidate)
-    in sub_no order (_fold_by_sub — bit-equal to the oracle's ordered
-    list_sum, ADVICE r07), so the 4-dp-rounded distance and the
-    (distance, neighbor_id) ranking are identical on both engines."""
+    Scale shape: the code table explodes to narrow (vec_id, sub_no,
+    code) rows and equi-joins the BROADCAST lut (NQ*M*K rows —
+    constant); one hash agg folds the M partial distances per (query,
+    candidate) in sub_no order (_fold_by_sub), so the 4-dp distance and
+    the (distance, neighbor_id) ranking are identical on both
+    engines."""
     return _pq_adc_top1(spark, sf_dir)
+
+
+def _adc_top1(adc: DataFrame) -> DataFrame:
+    """Each query's (query_id, neighbor_id, adc_dist) ADC winner,
+    ties broken on neighbor_id like the oracles' row_number()."""
+    w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
+    return (
+        adc.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("query_id", "neighbor_id", "adc_dist")
+    )
 
 
 def _pq_adc_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full-scan PQ ADC search's per-query top-1 table, memoized —
     q_sim_pq_adc returns it and q_sim_pq_recall judges it, so the
-    6M-pair code scan runs once per session, not once per row."""
+    NQ x corpus code scan runs once per session."""
 
     def build() -> DataFrame:
         sub, cb_df = _pq_raw_parts(spark, sf_dir)
@@ -2756,45 +2742,17 @@ def _pq_adc_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
             .agg(F.round(_fold_by_sub("d2"), 4).alias("adc_dist"))
         )
-        w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-        return (
-            adc.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "neighbor_id", "adc_dist")
-        )
+        return _adc_top1(adc)
 
-    return _memo_df(_memo_key(spark, sf_dir, "pq:adc_top1"), build)
+    return _memo(spark, sf_dir, "pq:adc_top1", build)
 
 
-@query(
-    "q_sim_pq_recall",
-    oracle=_pq_duck()
-    + f"""
-    , lut AS (
-        SELECT s.vec_id AS query_id, c.sub_no, c.code,
-               list_sum([ (s.sv[j] - c.c[j]) ** 2
-                          for j in range(1, {PQ_DSUB + 1}) ]) AS d2
-        FROM sub s JOIN c{PQ_ITERS} c USING (sub_no)
-        WHERE {_q_win_sql('s')}),
-    adc AS (
-        SELECT l.query_id, f.vec_id AS neighbor_id,
-               round(list_sum(list(l.d2 ORDER BY l.sub_no)), 4) AS adc_dist
-        FROM fin f
-        JOIN lut l ON l.sub_no = f.sub_no AND l.code = f.code
-        WHERE f.vec_id != l.query_id
-        GROUP BY 1, 2),
-    adc1 AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY adc_dist, neighbor_id) AS rn
-            FROM adc)
-        WHERE rn = 1),
-    exact1 AS (
-        -- d2 as the same left-fold sum of squared diffs Spark computes
-        -- (sqrt-then-square via list_distance can differ by an ULP and
-        -- flip the 4-dp rounding that orders the candidates)
+# The exact-L2-NN yardstick CTE (PQ_NQ-bounded) — ONE definition shared
+# by every recall oracle, mirroring the Spark side's _exact_nn1. d2 is
+# the same left-fold sum of squared diffs Spark computes: sqrt-then-
+# square via list_distance can differ by an ULP and flip the 4-dp
+# rounding that orders the candidates.
+_EXACT1_CTE = f"""exact1 AS (
         SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
                    row_number() OVER (
@@ -2806,7 +2764,26 @@ def _pq_adc_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
                            e.vec_id) AS rn
             FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
             WHERE {_q_win_sql('q')})
-        WHERE rn = 1)
+        WHERE rn = 1)"""
+
+# each query's ADC top-1 over an ``adc`` CTE
+_ADC1_CTE = """adc1 AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT query_id, neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY query_id
+                       ORDER BY adc_dist, neighbor_id) AS rn
+            FROM adc)
+        WHERE rn = 1)"""
+
+
+@query(
+    "q_sim_pq_recall",
+    oracle=_pq_duck()
+    + _PQ_ADC_CTES
+    + f""",
+    {_ADC1_CTE},
+    {_EXACT1_CTE}
     SELECT CAST(count(*) AS BIGINT) AS n_queries,
            CAST(sum(CASE WHEN a.neighbor_id = x.neighbor_id
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
@@ -2816,49 +2793,15 @@ def _pq_adc_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@1 of PQ's code-only ADC search against the exact L2
-    nearest neighbor — the cost/recall discipline every index in this
-    repo ships with (LSH and IVF have q_sim_recall_eval /
-    q_dedup_embedding_recall). The exact side ranks by the same
-    4-dp-rounded squared distance + id tie-break as the ADC side, so
-    both engines select identical winners and the whole eval is
-    value-hash-checked, one summary row.
+    """Recall@1 of PQ's code-only full-scan ADC search against the
+    exact L2 nearest neighbor, one summary row. The exact side ranks by
+    the same 4-dp-rounded squared distance + id tie-break as the ADC
+    side, so both engines select identical winners.
 
-    Measured on this fixture (representative query window, round 10):
-    recall@1 = 0.10 at sf0.01 / 0.07 at sf0.1 — the isotropic
-    near-random corpus is PQ's worst regime
-    (nearest neighbors are barely nearer than the bulk, so 4-bit cells
-    blur them; same story as the LSH index's documented 0.052-0.224
-    band here vs >0.99 on real near-dup corpora). The eval exists
-    precisely to put that number next to the compression claim.
-
-    Scale: the exact side is quadratic-in-queries-times-corpus — an
-    EVAL, bounded by PQ_NQ, never a serving path; the ADC side is the
-    serving path and stays code-table-only."""
-    adc1 = _pq_adc_top1(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("adc_nn")
-    )
-    # the ONE exact-NN yardstick definition (review find, round 9: an
-    # inline copy here escaped the shared-definition guarantee the
-    # _EXACT1_CTE comment promises), memoized across the eval family
-    exact1 = _exact1_raw(spark, sf_dir)
-    return (
-        adc1.join(exact1, ["query_id"])
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-            F.sum(
-                F.when(F.col("adc_nn") == F.col("exact_nn"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_match"),
-            F.round(
-                F.avg(
-                    F.when(F.col("adc_nn") == F.col("exact_nn"), 1.0).otherwise(0.0)
-                ),
-                4,
-            ).alias("recall_at_1"),
-        )
-    )
+    Scale shape: the ADC side is the serving path and reads the code
+    table only; the exact side is PQ_NQ x corpus — an eval, never a
+    serving path."""
+    return _recall_vs_exact1(_pq_adc_top1(spark, sf_dir), _exact1(spark, sf_dir))
 
 
 # --- IVFADC: coarse IVF cells + PQ on residuals + in-cell ADC ------------
@@ -2878,6 +2821,9 @@ _IVFADC_CD2 = (
     f"for j in range(1, {DIM + 1}) ])"
 )
 
+# seeded cells (cent), every vector's cell distances (cd), its nearest
+# cell (best) and its residual there (res) — cent is swapped for the
+# Lloyd chain on trained variants
 _IVFADC_PRE = (
     f"""cent AS (
         SELECT vec_id AS cell_id,
@@ -2904,6 +2850,7 @@ _IVFADC_SUB = f"""sub AS (
                [r.remb[t.m * {PQ_DSUB} + j]
                 for j in range(1, {PQ_DSUB + 1})] AS sv
         FROM res r CROSS JOIN range(0, {PQ_M}) t(m))"""
+
 
 def _ivfadc_search_sql(n_probe: int = N_PROBE, with_rank: bool = False) -> str:
     """The probe→LUT→ADC search CTE chain, parameterized exactly like
@@ -2949,28 +2896,67 @@ def _ivfadc_search_sql(n_probe: int = N_PROBE, with_rank: bool = False) -> str:
         GROUP BY 1, 2)"""
 
 
-_IVFADC_SEARCH = _ivfadc_search_sql()
+# Clustered corpus: the fixture deterministically re-shaped into
+# N_CLUSTERS well-separated clusters (member = cluster center + 0.2 ×
+# its own vector, centers = the first N_CLUSTERS corpus vectors, so
+# inter-center distance ≈ √2·‖v‖ dwarfs the ≈0.28·‖v‖ intra-cluster
+# spread). Both engines derive it from the same fixture with the same
+# double arithmetic; the oracle's `embeddings` CTE shadows the raw view
+# for every downstream CTE (DuckDB resolves `main.embeddings` to the
+# view inside the shadowing definition).
+N_CLUSTERS = 8
+_CLUSTERED_CTES = (
+    f"""ctr AS (
+        SELECT vec_id AS ctr_id,
+               [CAST(embedding[j] AS DOUBLE)
+                for j in range(1, {DIM + 1})] AS cemb0
+        FROM main.embeddings WHERE vec_id < {N_CLUSTERS})""",
+    f"""embeddings AS (
+        SELECT e.vec_id,
+               [c.cemb0[j] + CAST(0.2 AS DOUBLE) * CAST(e.embedding[j] AS DOUBLE)
+                for j in range(1, {DIM + 1})] AS embedding
+        FROM main.embeddings e JOIN ctr c ON e.vec_id % {N_CLUSTERS} = c.ctr_id)""",
+)
 
 
-def ivfadc_index(spark: SparkSession, sf_dir: str):
-    """Build the IVFADC index over the embeddings corpus: returns
-    (cent, cb_df, codes) — the broadcastable centroid table, the
-    trained residual-PQ codebook (M*K*dsub constants), and the
-    cell-tagged 4-byte code table, the only corpus-sized artifact.
-    This is the offline half of the serving stack; ivfadc_score probes
-    it with any query-vector DataFrame (the registered batch queries
-    and the streaming probe share it). Memoized per (session, fixture)
-    with the code table checkpointed (VERDICT r10 item 1): every
-    seeded-index eval row serves from ONE build, the production shape
-    — an index is built offline once, not per query."""
-    key = _memo_key(spark, sf_dir, "ivfadc:seeded")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    cent, cb_df, codes = ivfadc_index_from(_emb(spark, sf_dir))
-    if key is not None:
-        codes = codes.localCheckpoint(eager=True)
-        _memo_put(key, (cent, cb_df, codes))
-    return cent, cb_df, codes
+def _clustered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived CLUSTERED corpus (vec_id, emb), mirroring the
+    oracle's embeddings-shadowing CTE exactly."""
+    raw = _emb(spark, sf_dir)
+    ctr = raw.filter(F.col("vec_id") < N_CLUSTERS).select(
+        F.col("vec_id").alias("ctr_id"), F.col("emb").alias("cemb0")
+    )
+    return (
+        raw.withColumn("ctr_id", F.col("vec_id") % N_CLUSTERS)
+        .join(F.broadcast(ctr), ["ctr_id"])
+        .select(
+            "vec_id",
+            F.zip_with(
+                "cemb0", "emb", lambda c, x: c + F.lit(0.2) * x
+            ).alias("emb"),
+        )
+    )
+
+
+# Trained coarse cells: IVF_TRAIN_ITERS Lloyd rounds seeded from the
+# same vec_id < N_CELLS vectors the seeded cells use verbatim. Trained
+# cells sit at member means, so residuals shrink and the 4-bit residual
+# codes get more signal per bit. The oracle's chain is _lloyd_duck's
+# (prefix k, clear of the PQ unroll's names) renamed to cent(cell_id, cemb).
+IVF_TRAIN_ITERS = 2
+_TRAINED_CENT_DUCK = (
+    *_lloyd_duck(N_CELLS, IVF_TRAIN_ITERS, DIM, "k"),
+    f"cent AS (SELECT cell_id, c AS cemb FROM kc{IVF_TRAIN_ITERS})",
+)
+
+
+def _trained_cent(e: DataFrame) -> DataFrame:
+    """Lloyd-train the N_CELLS coarse centroids over corpus ``e`` as
+    the ``cent(cell_id, cemb)`` table."""
+    schema = "cell_id bigint, cemb array<double>"
+    return e.sparkSession.createDataFrame(
+        lloyd(e, schema, "emb", 0, N_CELLS, IVF_TRAIN_ITERS), schema
+    )
 
 
 def ivfadc_index_from(
@@ -2978,17 +2964,16 @@ def ivfadc_index_from(
     cent: DataFrame | None = None,
     train_pred: Column | None = None,
 ):
-    """ivfadc_index over a caller-supplied (vec_id, emb double[]) corpus
-    — the clustered-corpus eval indexes a derived corpus through the
-    identical pipeline. ``cent`` substitutes the coarse centroid table
-    (cell_id, cemb double[]): the trained-centroid eval passes Lloyd
-    output instead of the default seeded cells. ``train_pred``
+    """The IVFADC build over a (vec_id, emb double[]) corpus: returns
+    (cent, cb_df, codes) — the broadcastable centroid table, the
+    residual-PQ codebook (M*K*dsub constants), and the cell-tagged
+    4-byte code table, the only corpus-sized artifact. ``cent``
+    substitutes the coarse centroid table (cell_id, cemb double[]) for
+    the default seeded cells (vec_id < N_CELLS). ``train_pred``
     restricts which vectors the CODEBOOK trains on while every vector
-    is still assigned and encoded — the incremental-index eval trains
-    on the pre-existing corpus only and encodes the new batch with the
-    stale codebook (the production corpus-growth pattern: assignment
-    and encoding are per-row map work; retraining is the expensive
-    offline step you avoid per batch)."""
+    is still assigned and encoded — the production corpus-growth
+    pattern: assignment and encoding are per-row map work, retraining
+    is the offline step you avoid per batch."""
     if cent is None:
         cent = e.filter(F.col("vec_id") < N_CELLS).select(
             F.col("vec_id").alias("cell_id"), F.col("emb").alias("cemb")
@@ -3063,9 +3048,8 @@ def ivfadc_score(
     ``with_rank=True`` additionally returns ``crank`` — the probe rank
     of the cell each neighbor was found in (a corpus vector lives in
     exactly ONE cell, so the rank is single-valued per pair). The probe
-    sweep (q_sim_ivfadc_probe_sweep) scores once at the deepest level
-    and derives every shallower level by filtering crank, instead of
-    re-scoring per level."""
+    sweeps score once at the deepest level and derive every shallower
+    level by filtering crank."""
     qres = _ivfadc_probes(queries_df, cent, n_probe).select(
         "query_id",
         "cell_id",
@@ -3088,221 +3072,18 @@ def ivfadc_score(
     )
 
 
-def _adc_memo(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    parts_fn,
-    n_probe: int = N_PROBE,
-    with_rank: bool = False,
-) -> DataFrame:
-    """Memoized eval-window adc candidate table over an index — ONE
-    definition of the query-side wiring shared by the seeded/trained
-    parts helpers, both probe sweeps, and the incremental eval (review
-    r11: three copy-paste build closures drifting apart is exactly how
-    the sweeps' "only the cent table differs" guarantee dies).
-    ``parts_fn`` returns (e, cent, cb_df, codes) and is called lazily,
-    so a memo hit skips the index getter entirely."""
-
-    def build() -> DataFrame:
-        e, cent, cb_df, codes = parts_fn()
-        q = e.filter(_q_win()).select(F.col("vec_id").alias("query_id"), "emb")
-        return ivfadc_score(
-            q, cent, cb_df, codes, n_probe=n_probe, with_rank=with_rank
-        )
-
-    return _memo_df(_memo_key(spark, sf_dir, tag), build)
-
-
-def _ivfadc_parts(spark: SparkSession, sf_dir: str):
-    """Registered-query wiring: index over the corpus, queries =
-    the eval window, per-(query, candidate) adc table. The adc table
-    is memoized too — it is the same PQ_NQ-bounded candidate set for
-    every seeded eval row (search, re-rank, sweeps), so scoring runs
-    once per session instead of once per row."""
-    e = _emb(spark, sf_dir)
-    adc = _adc_memo(
-        spark,
-        sf_dir,
-        "ivfadc:adc:seeded",
-        lambda: (e, *ivfadc_index(spark, sf_dir)),
-    )
-    return e, adc
-
-
-@query(
-    "q_sim_ivfadc",
-    oracle=_pq_duck(pre_ctes=_IVFADC_PRE, sub_cte=_IVFADC_SUB, seed_lo=N_CELLS)
-    + _IVFADC_SEARCH
-    + """
-    SELECT query_id, neighbor_id, adc_dist FROM (
-        SELECT query_id, neighbor_id, adc_dist,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY adc_dist, neighbor_id) AS rn
-        FROM adc)
-    WHERE rn = 1
-    """,
-)
-def q_sim_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC search (VERDICT r07 item 7): nearest neighbor per query
-    (the PQ_Q_LO..PQ_Q_HI eval window) from coarse cells + residual-PQ
-    codes only. The query
-    probes its N_PROBE nearest of N_CELLS cells, builds one LUT per
-    probed cell from its own residual there (the only float vector
-    touched), and scores just the probed cells' candidates by M code
-    lookups — the full Jegou et al. §IV composition of this repo's IVF
-    (q_sim_ann_ivf) and PQ (q_sim_pq_adc) families.
-
-    Scale: assignment/probing broadcast the constant centroid table;
-    codes live cell-partitioned (the join key IS the cell), so a query
-    reads ~N_PROBE/N_CELLS of a 4-byte-per-vector code table; the LUT
-    broadcast is NQ*N_PROBE*M*K rows — constant. Candidate fraction is
-    measured by q_sim_ivfadc_recall.
-
-    SERVING RECOMMENDATION (VERDICT r08 item 5; all numbers re-measured
-    round 10 on the REPRESENTATIVE query window — see the PQ_Q_LO note:
-    the original 20-query eval was dominated by the 16 zero-residual
-    centroid vectors and read 3-6× high): cell pruning only preserves
-    recall when the true neighbor usually lands in a probed cell, and
-    the measured chain of constraints on this isotropic fixture
-    (sf0.01, 100 queries) reads bottom-up:
-    (1) the PROBE CEILING (q_sim_ivfadc_ceiling) is 0.25 — no codebook
-    or shortlist depth can beat it at N_PROBE=2 — and the probe sweep
-    (q_sim_ivfadc_probe_sweep) is FLAT all the way to its asymptote
-    (0.03-0.05 at depths 1-16, i.e. 0.06→1.00 of the corpus scanned:
-    even handing the ADC stage EVERY residual code recovers nothing),
-    so on this corpus the 4-bit ranking itself, not the probe, is the
-    binding constraint for code-only serving;
-    (2) code-only recall hugs the floor under it: seeded cells 0.04 @
-    cand_frac 0.126, PQ full-scan 0.10, clustered corpus 0.08 — the NN
-    margin sits inside the 4-bit quantization noise;
-    (3) the exact re-rank climbs toward the ceiling with shortlist
-    depth (q_sim_ivfadc_rerank_sweep: 0.04/0.05/0.06/0.11/0.17 at
-    R=1/2/5/10/20 vs the 0.25 ceiling) — pick R as the smallest depth
-    meeting the target, and once recall ≈ ceiling stop raising R;
-    (4) TRAINING the coarse centroids (two Lloyd rounds, offline cost
-    only) lifts the whole chain: ceiling 0.25→0.32, code-only
-    0.04→0.08, and trained + re-rank@10 0.25 vs seeded + re-rank@10's
-    0.11 (q_sim_ivfadc_trained_rerank_recall) — the single best
-    recall-per-serving-dollar move measured here;
-    (5) and UNLIKE the seeded index, the trained probe curve is not
-    flat: the trained ceiling climbs 0.21/0.32/0.54/0.79/1.00 at
-    depths 1/2/4/8/16 (q_sim_ivfadc_trained_probe_sweep), so once
-    cells are trained, probe depth buys real headroom for the re-rank
-    stage to cash — size N_PROBE to the recall target off that curve.
-    So: run q_sim_ivfadc_recall and q_sim_ivfadc_ceiling on YOUR
-    corpus; if recall@1 is below ~0.8× the PQ full-scan
-    (q_sim_pq_recall) and the probe curve is flat, train the centroids
-    first, then add re-rank depth read off the measured sweep; deploy
-    code-only IVFADC alone only where the measured recall meets the
-    0.8× rule."""
-    _, adc = _ivfadc_parts(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "neighbor_id", "adc_dist")
-    )
-
-
-# The exact-L2-NN yardstick CTE (PQ_NQ-bounded) — ONE definition shared
-# by every recall oracle, mirroring the Python side's _exact_nn1: a
-# change to the rounding or the query bound reaches all of them.
-_EXACT1_CTE = f"""exact1 AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_sum([
-                           (CAST(q.embedding[j] AS DOUBLE)
-                            - CAST(e.embedding[j] AS DOUBLE)) ** 2
-                           for j in range(1, {DIM + 1})]), 4),
-                           e.vec_id) AS rn
-            FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
-            WHERE {_q_win_sql('q')})
-        WHERE rn = 1)"""
-
-_IVFADC_RECALL_TAIL = f"""
-    , adc1 AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY adc_dist, neighbor_id) AS rn
-            FROM adc)
-        WHERE rn = 1),
-    {_EXACT1_CTE},
-    nc AS (SELECT query_id, count(*) AS n_cand FROM adc GROUP BY 1),
-    ntot AS (SELECT count(*) AS n FROM embeddings)
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           CAST(sum(CASE WHEN a.neighbor_id = x.neighbor_id
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-           round(avg(CASE WHEN a.neighbor_id = x.neighbor_id
-                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1,
-           round(avg(CAST(nc.n_cand AS DOUBLE))
-                 / (SELECT n - 1 FROM ntot), 4) AS cand_frac
-    FROM adc1 a JOIN exact1 x USING (query_id) JOIN nc USING (query_id)
-    """
-
-
-def q_sim_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[FOLDED into q_sim_ivfadc_probe_sweep, VERDICT r10 item 1: this
-    number IS the sweep's n_probe=N_PROBE row — recall_at_1 and
-    cand_frac both — so the standalone registered row re-derived a
-    curve point the sweep already publishes. Kept as an unregistered
-    eval helper: tests/test_properties.py's cross-query consistency
-    test pins sweep@N_PROBE == this row every session.]
-
-    Recall@1 AND measured candidate fraction of IVFADC against the
-    exact L2 nearest neighbor — the cost/recall row beside PQ's
-    (q_sim_pq_recall). cand_frac is the fraction of the corpus the
-    code-only ADC actually scored per query (~N_PROBE/N_CELLS by
-    construction), the pruning the IVF layer buys over q_sim_pq_adc's
-    full-corpus scan. The exact side is PQ_NQ-bounded — an eval,
-    never a serving path.
-
-    Measured on this fixture (sf0.01, representative query window):
-    recall@1 = 0.04 at cand_frac = 0.126 — vs full-scan PQ's 0.10. The
-    isotropic near-random corpus is the worst regime for BOTH layers
-    (q_sim_pq_recall's docstring): the true NN is barely nearer than
-    the bulk, so its margin sits inside the 4-bit code noise —
-    q_sim_ivfadc_probe_sweep shows the curve is FLAT in probe depth,
-    q_sim_ivfadc_clustered_recall shows cell structure alone lifts it
-    only to 0.08, and the exact re-rank ladder climbs to the 0.25
-    probe ceiling (q_sim_ivfadc_rerank_sweep / q_sim_ivfadc_ceiling).
-    The eval exists to surface exactly that trade. (Round 9 found the
-    round-8 codebook was DEGENERATE — seeded from the zero residuals
-    of the centroid vectors, it collapsed to one code and ADC
-    tie-broke on neighbor_id; both engines shared the bug so the
-    value-hash stayed green. tests/test_properties.py now pins all
-    PQ_K codes alive.)
-
-    This row feeds q_sim_ivfadc's SERVING RECOMMENDATION: deploy
-    code-only IVFADC only when this recall@1 is within ~0.8× of
-    q_sim_pq_recall's full-scan number on the target corpus; otherwise
-    raise N_PROBE, fall back to PQ full-scan, or add the exact
-    re-rank (q_sim_ivfadc_rerank)."""
-    e, adc = _ivfadc_parts(spark, sf_dir)
-    return _ivfadc_recall_table(e, adc, exact1=_exact1_raw(spark, sf_dir))
-
-
 def _exact_nn1(e: DataFrame) -> DataFrame:
-    """(query_id, exact_nn) — the exact L2 nearest neighbor per query
-    vector (vec_id < PQ_NQ) over corpus ``e``. PQ_NQ-bounded: the eval
-    yardstick every ANN recall row is judged against, never a serving
-    path."""
+    """(query_id, exact_nn) — the exact L2 nearest neighbor of each
+    eval-window vector over corpus ``e``: the yardstick every ANN
+    recall row is judged against, PQ_NQ-bounded, never a serving path.
+    The bounded query side is broadcast explicitly: on a derived corpus
+    the planner has no stats and would otherwise plan a
+    CartesianProduct."""
     q = e.filter(_q_win()).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
     d2 = F.round(sq_l2("qe", "emb"), 4)
     w2 = W.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    # Broadcast the PQ_NQ-bounded query side explicitly (VERDICT r10
-    # item 5): on a DERIVED corpus (clustered eval) the planner has no
-    # stats and previously chose CartesianProduct — the one cartesian
-    # in the registry. Forcing the broadcast pins the plan to a
-    # broadcast nested-loop with the bounded side built, on every
-    # corpus variant; tests/test_plans.py asserts no cartesian remains.
     return (
         F.broadcast(q)
         .crossJoin(e.select(F.col("vec_id").alias("neighbor_id"), "emb"))
@@ -3314,35 +3095,123 @@ def _exact_nn1(e: DataFrame) -> DataFrame:
     )
 
 
-def _exact1_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact-NN yardstick over the RAW corpus, memoized: every
-    recall eval on the unmodified fixture (seeded, trained,
-    incremental, PQ full-scan) judges against the identical 100-row
-    table, so the PQ_NQ x corpus exact scan runs once per session, not
-    once per eval row. Corpus-variant evals (clustered) compute their
-    own yardstick over their own corpus."""
-    return _memo_df(
-        _memo_key(spark, sf_dir, "ivfadc:exact1"),
-        lambda: _exact_nn1(_emb(spark, sf_dir)),
+def _corpus(spark: SparkSession, sf_dir: str, clustered: bool = False) -> DataFrame:
+    """The eval corpus (vec_id, emb), memoized per ``clustered``: the
+    raw fixture or the derived clustered corpus. Every index build,
+    search and yardstick over that corpus reads this one cut."""
+    return _memo(
+        spark,
+        sf_dir,
+        f"corpus:clustered={clustered}",
+        lambda: _clustered_corpus(spark, sf_dir) if clustered else _emb(spark, sf_dir),
     )
 
 
-def _ivfadc_recall_table(
-    e: DataFrame, adc: DataFrame, exact1: DataFrame | None = None
-) -> DataFrame:
-    """Recall@1 + cand_frac of an adc candidate table against the exact
-    L2 neighbor over corpus ``e`` — shared by the isotropic-fixture
-    eval (q_sim_ivfadc_recall) and the clustered-corpus eval
-    (q_sim_ivfadc_clustered_recall). ``exact1`` substitutes a
-    precomputed (memoized) yardstick; default derives it from ``e``."""
+def _exact1(spark: SparkSession, sf_dir: str, clustered: bool = False) -> DataFrame:
+    """The exact-NN yardstick over the raw or clustered corpus,
+    memoized: every recall eval over one corpus judges against the
+    identical PQ_NQ-row table."""
+    return _memo(
+        spark,
+        sf_dir,
+        f"exact1:clustered={clustered}",
+        lambda: _exact_nn1(_corpus(spark, sf_dir, clustered)),
+    )
+
+
+@dataclass(frozen=True)
+class IvfadcEval:
+    """One IVFADC eval variant: the corpus (raw or CLUSTERED), the
+    coarse cells (seeded from vec_id < N_CELLS, or Lloyd-TRAINED), the
+    vectors the residual codebook trains on (``train_where``, SQL over
+    vec_id; None = all), the search's probe depth and whether each
+    candidate carries its cell's probe rank. It renders both sides of
+    its rows: ``duck()`` is the DuckDB oracle prefix (the build and
+    search CTEs, ending in ``adc``) and ``build()`` the memoized Spark
+    artifacts, so the two sides cannot disagree on the variant."""
+
+    clustered: bool = False
+    trained: bool = False
+    train_where: str | None = None
+    n_probe: int = N_PROBE
+    with_rank: bool = False
+
+    def duck(self) -> str:
+        cells = _TRAINED_CENT_DUCK if self.trained else _IVFADC_PRE[:1]
+        corpus = _CLUSTERED_CTES if self.clustered else ()
+        return _pq_duck(
+            corpus + cells + _IVFADC_PRE[1:], _IVFADC_SUB, N_CELLS, self.train_where
+        ) + _ivfadc_search_sql(self.n_probe, self.with_rank)
+
+    def index(self, spark: SparkSession, sf_dir: str):
+        """(cent, cb_df, codes) over this variant's corpus, cells and
+        codebook training subset, memoized per those three with the
+        code table cut; the search knobs do not enter the key."""
+
+        def build():
+            e = _corpus(spark, sf_dir, self.clustered)
+            cent = _trained_cent(e) if self.trained else None
+            pred = None if self.train_where is None else F.expr(self.train_where)
+            cent, cb_df, codes = ivfadc_index_from(e, cent, pred)
+            return cent, cb_df, _build_ckpt(codes)
+
+        tag = f"ivfadc:index:{self.clustered}:{self.trained}:{self.train_where}"
+        return _memo(spark, sf_dir, tag, build)
+
+    def build(self, spark: SparkSession, sf_dir: str):
+        """(e, adc, exact1): the corpus, the eval window's
+        per-(query_id, neighbor_id) adc table (memoized per variant)
+        and the corpus' exact-NN yardstick."""
+        e = _corpus(spark, sf_dir, self.clustered)
+
+        def score() -> DataFrame:
+            q = e.filter(_q_win()).select(F.col("vec_id").alias("query_id"), "emb")
+            return ivfadc_score(
+                q, *self.index(spark, sf_dir), self.n_probe, self.with_rank
+            )
+
+        adc = _memo(spark, sf_dir, f"ivfadc:adc:{self}", score)
+        return e, adc, _exact1(spark, sf_dir, self.clustered)
+
+
+def ivfadc_index(spark: SparkSession, sf_dir: str, trained: bool = False):
+    """Build the IVFADC index over the embeddings corpus: (cent, cb_df,
+    codes) as ivfadc_index_from returns them. ``trained`` Lloyd-trains
+    the coarse cells (the recommended serving configuration) instead
+    of seeding them. This is the offline half of the serving stack;
+    ivfadc_score probes it with any query-vector DataFrame (the
+    registered rows, the index store and the streaming probe share it).
+    Memoized per (session, fixture, trained) with the code table cut:
+    an index is built offline once, not per query."""
+    return IvfadcEval(trained=trained).index(spark, sf_dir)
+
+
+# Eval tunables, read off the measured curves (see q_sim_ivfadc's SERVING
+# RECOMMENDATION for the numbers).
+PQ_RERANK = 10  # ADC shortlist size handed to the exact re-rank stage
+PROBE_LEVELS = (1, 2, 4, 8, 16)  # probe-sweep depths; 16 = N_CELLS = full scan
+RERANK_LEVELS = (1, 2, 5, 10, 20)  # re-rank-sweep shortlist depths
+# the knee of the trained probe curve: past depth 4, a deeper probe buys
+# ceiling slower than scanning the same candidate fraction at random
+SERVING_PROBE = 4
+SERVING_R = PQ_RERANK  # where the trained re-rank curve flattens
+INCR_CUT = 48  # ids below this are always corpus (covers cell + codebook seeds)
+_INCR_TRAIN_WHERE = f"vec_id < {INCR_CUT} OR vec_id % 5 > 0"
+
+
+# --- eval tables over IvfadcEval.build's (e, adc, exact1) ----------------
+
+
+def _ivfadc_recall_table(e: DataFrame, adc: DataFrame, exact1: DataFrame) -> DataFrame:
+    """(n_queries, n_match, recall_at_1, cand_frac): the ADC top-1's
+    recall against the exact neighbor, and the fraction of the corpus
+    the ADC stage scored per query."""
     w1 = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     adc1 = (
         adc.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select("query_id", F.col("neighbor_id").alias("adc_nn"))
     )
-    if exact1 is None:
-        exact1 = _exact_nn1(e)
     nc = adc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_cand"))
     ntot = e.agg(F.count(F.lit(1)).alias("n"))
     return (
@@ -3369,74 +3238,11 @@ def _ivfadc_recall_table(
     )
 
 
-PQ_RERANK = 10  # ADC shortlist size handed to the exact re-rank stage
-
-# shortlist + exact-rerank CTEs, shared by q_sim_ivfadc_rerank and its
-# recall eval
-_IVFADC_RERANK_CTES = f"""
-    , short AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY adc_dist, neighbor_id) AS rn
-            FROM adc)
-        WHERE rn <= {PQ_RERANK}),
-    rer AS (
-        SELECT s.query_id, s.neighbor_id,
-               round(list_sum([
-                   (CAST(q.embedding[j] AS DOUBLE)
-                    - CAST(n.embedding[j] AS DOUBLE)) ** 2
-                   for j in range(1, {DIM + 1})]), 4) AS l2_dist
-        FROM short s
-        JOIN embeddings q ON q.vec_id = s.query_id
-        JOIN embeddings n ON n.vec_id = s.neighbor_id),
-    rr1 AS (
-        SELECT query_id, neighbor_id, l2_dist FROM (
-            SELECT query_id, neighbor_id, l2_dist,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY l2_dist, neighbor_id) AS rn
-            FROM rer)
-        WHERE rn = 1)"""
-
-
-@query(
-    "q_sim_ivfadc_rerank",
-    oracle=_pq_duck(pre_ctes=_IVFADC_PRE, sub_cte=_IVFADC_SUB, seed_lo=N_CELLS)
-    + _IVFADC_SEARCH
-    + _IVFADC_RERANK_CTES
-    + """
-    SELECT query_id, neighbor_id, l2_dist FROM rr1
-    """,
-)
-def q_sim_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC + exact RE-RANK — the full two-stage production serving
-    pattern: the code-only ADC pass shortlists PQ_RERANK candidates
-    per query, and only those NQ*PQ_RERANK float vectors are fetched
-    for an exact L2 re-rank (Jegou et al. §V's "re-ranking with source
-    coding" simplified to exact distances, as FAISS's IVFADC+refine
-    does). Quantization error then only matters if it pushes the true
-    neighbor out of the top-R entirely, so recall approaches the cell
-    hit-rate ceiling while the scan stays codes-only.
-
-    Scale: the re-rank join touches R rows per query — the shortlist
-    is broadcast against the corpus (equi join on vec_id, pruned by
-    the parquet reader at 100 TB via the runtime bloom/DPP machinery),
-    never a second pass over the code table."""
-    _, nn = _ivfadc_rerank_parts(spark, sf_dir)
-    return nn
-
-
 def _rerank_l2(e: DataFrame, adc: DataFrame, r: int) -> DataFrame:
     """(query_id, neighbor_id, rn, l2_dist): exact L2 over the ADC
     top-``r`` shortlist with the ADC rank attached — the SINGLE
-    definition of the two-stage search's second stage. The rerank row,
-    its recall eval, the depth sweep, and the trained variant all call
-    this, so the cross-row equalities test_ivfadc_family_cross_query_
-    consistency pins (sweep@R == dedicated row) hold by construction,
-    and a fix to the tie-break or the rounded fold reaches every
-    site."""
+    definition of the two-stage search's second stage, so the sweeps'
+    levels equal the dedicated rows by construction."""
     ws = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     short = (
         adc.withColumn("rn", F.row_number().over(ws))
@@ -3468,16 +3274,12 @@ def _rerank_nn1(e: DataFrame, adc: DataFrame, r: int = PQ_RERANK) -> DataFrame:
     )
 
 
-def _recall_vs_exact1(
-    e: DataFrame, nn: DataFrame, exact1: DataFrame | None = None
-) -> DataFrame:
-    """(n_queries, n_match, recall_at_1) of a per-query NN table
-    against the exact yardstick — shared by the rerank recall eval and
-    its trained variant. ``exact1`` substitutes a precomputed
-    (memoized) yardstick; default derives it from ``e``."""
+def _recall_vs_exact1(nn: DataFrame, exact1: DataFrame) -> DataFrame:
+    """(n_queries, n_match, recall_at_1) of a per-query (query_id,
+    neighbor_id) NN table against the exact yardstick."""
     return (
         nn.select("query_id", F.col("neighbor_id").alias("rr_nn"))
-        .join(_exact_nn1(e) if exact1 is None else exact1, ["query_id"])
+        .join(exact1, ["query_id"])
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_queries"),
             F.sum(F.when(F.col("rr_nn") == F.col("exact_nn"), 1).otherwise(0))
@@ -3493,135 +3295,10 @@ def _recall_vs_exact1(
     )
 
 
-def _ivfadc_rerank_parts(spark: SparkSession, sf_dir: str):
-    """(corpus, rerank-NN table): the two-stage search's final
-    per-query winner with its exact distance — shared by
-    q_sim_ivfadc_rerank and its recall eval."""
-    e, adc = _ivfadc_parts(spark, sf_dir)
-    return e, _rerank_nn1(e, adc)
-
-
-def q_sim_ivfadc_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[FOLDED into q_sim_ivfadc_rerank_sweep, VERDICT r10 item 1: this
-    number IS the sweep's r_depth=PQ_RERANK row, and the sweep is the
-    registered value-hash surface (driver-green r10 for this row is
-    banked in CORRECTNESS_r10). Kept as an unregistered eval helper:
-    the cross-query consistency test pins sweep@PQ_RERANK == this row
-    every session.]
-
-    Recall@1 of the full two-stage IVFADC+re-rank search against the
-    exact L2 neighbor — the deployed point on the serving ladder
-    (sf0.01, representative window: ADC-only 0.04 / clustered 0.08 /
-    PQ full-scan 0.10 / THIS row 0.11 at R={PQ_RERANK}, vs the 0.25
-    probe ceiling): quantization error now only costs recall when it
-    pushes the true neighbor out of the ADC top-{PQ_RERANK} entirely,
-    and the remaining gap to the ceiling is bought with R
-    (q_sim_ivfadc_rerank_sweep) or erased by centroid training
-    (trained + re-rank@10 = 0.25, q_sim_ivfadc_trained_rerank_recall). Pinned as a
-    registered value-hash row so the serving recommendation's headline
-    number is reproducible, not a docstring claim. The exact side is
-    PQ_NQ-bounded — an eval, never a serving path."""
-    e, nn = _ivfadc_rerank_parts(spark, sf_dir)
-    return _recall_vs_exact1(e, nn, exact1=_exact1_raw(spark, sf_dir))
-
-
-# Probe sweep (supports q_sim_ivfadc's SERVING RECOMMENDATION): the
-# recall/cost curve across N_PROBE settings, measured in ONE pass —
-# score at the deepest level, then derive each shallower level by
-# filtering on the probe rank of the cell each candidate came from.
-PROBE_LEVELS = (1, 2, 4, 8, 16)
-
-_PROBE_SWEEP_TAIL = f"""
-    , levels AS (SELECT unnest({list(PROBE_LEVELS)}) AS n_probe),
-    cand AS (
-        SELECT lv.n_probe, a.query_id, a.neighbor_id, a.adc_dist
-        FROM adc a JOIN levels lv ON a.crank <= lv.n_probe),
-    adc1 AS (
-        SELECT n_probe, query_id, neighbor_id AS adc_nn FROM (
-            SELECT n_probe, query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY n_probe, query_id
-                       ORDER BY adc_dist, neighbor_id) AS rn
-            FROM cand)
-        WHERE rn = 1),
-    nc AS (
-        SELECT n_probe, query_id, count(*) AS n_cand
-        FROM cand GROUP BY 1, 2),
-    {_EXACT1_CTE},
-    hits AS (
-        SELECT c.n_probe, c.query_id,
-               max(CASE WHEN c.neighbor_id = x.neighbor_id
-                        THEN 1 ELSE 0 END) AS hit
-        FROM cand c JOIN exact1 x USING (query_id)
-        GROUP BY 1, 2),
-    ntot AS (SELECT count(*) AS n FROM embeddings)
-    SELECT a.n_probe,
-           CAST(count(*) AS BIGINT) AS n_queries,
-           round(avg(CASE WHEN a.adc_nn = x.neighbor_id
-                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1,
-           round(avg(CAST(nc.n_cand AS DOUBLE))
-                 / (SELECT n - 1 FROM ntot), 4) AS cand_frac,
-           round(avg(CAST(h.hit AS DOUBLE)), 4) AS ceiling_at_probe
-    FROM adc1 a JOIN exact1 x USING (query_id)
-    JOIN nc USING (n_probe, query_id)
-    JOIN hits h USING (n_probe, query_id)
-    GROUP BY a.n_probe
-    """
-
-
-@query(
-    "q_sim_ivfadc_probe_sweep",
-    oracle=_pq_duck(pre_ctes=_IVFADC_PRE, sub_cte=_IVFADC_SUB, seed_lo=N_CELLS)
-    + _ivfadc_search_sql(n_probe=max(PROBE_LEVELS), with_rank=True)
-    + _PROBE_SWEEP_TAIL,
-)
-def q_sim_ivfadc_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVFADC recall/cost CURVE across probe depths — the measured
-    basis for q_sim_ivfadc's SERVING RECOMMENDATION ("raise N_PROBE or
-    full-scan"): one row per probe level in PROBE_LEVELS with recall@1
-    vs the exact L2 neighbor and the candidate fraction actually
-    scored, making the trade explicit on THIS corpus
-    instead of asking the reader to extrapolate from the single
-    N_PROBE=2 point — and the deepest level IS the full scan
-    (N_PROBE = N_CELLS, cand_frac 1.0), so the curve's asymptote is
-    measured, not extrapolated: flat to the end here (0.04 at
-    cand_frac 1.0), i.e. probing is exonerated and the codes are the
-    constraint.
-
-    One scoring pass, not len(PROBE_LEVELS): candidates are scored at
-    the deepest level with their cell's probe rank attached, and each
-    shallower level is a filter on that rank (a corpus vector lives in
-    exactly one cell, so rank is single-valued per candidate) — the
-    derived levels cost an explode + re-aggregation of an
-    already-small candidate table, never another code-table scan. The
-    exact side is PQ_NQ-bounded: an eval, never a serving path.
-
-    ceiling_at_probe (VERDICT r10 item 1 — folds the standalone
-    q_sim_ivfadc_ceiling row): the probe HIT-RATE per level — the
-    fraction of queries whose exact NN landed in a probed cell at all.
-    Every recall number at a level is bounded above by it; the
-    n_probe=N_PROBE row is the deployed configuration's ceiling (0.25
-    seeded at sf0.01), and the gap recall→ceiling at each level is
-    what re-rank depth (q_sim_ivfadc_rerank_sweep) can still buy."""
-    e = _emb(spark, sf_dir)
-    adc = _adc_memo(
-        spark,
-        sf_dir,
-        "ivfadc:adc:probe_max",
-        lambda: (e, *ivfadc_index(spark, sf_dir)),
-        n_probe=max(PROBE_LEVELS),
-        with_rank=True,
-    )
-    return _probe_sweep_table(e, adc, _exact1_raw(spark, sf_dir))
-
-
-def _probe_sweep_table(
-    e: DataFrame, adc: DataFrame, exact1: DataFrame
-) -> DataFrame:
+def _probe_sweep_table(e: DataFrame, adc: DataFrame, exact1: DataFrame) -> DataFrame:
     """The recall/cost/ceiling-vs-probe-depth curve over PROBE_LEVELS
-    for a crank-tagged adc candidate table — ONE definition shared by
-    the seeded sweep and the trained-centroid sweep, so the curves
-    differ only by the cent table that produced ``adc``."""
+    for a crank-tagged adc table scored at the deepest level: each
+    shallower level is a filter on crank, never another code scan."""
     cand = (
         adc.withColumn(
             "n_probe",
@@ -3635,8 +3312,8 @@ def _probe_sweep_table(
         .agg(
             F.min(F.struct("adc_dist", "neighbor_id")).alias("bn"),
             F.count(F.lit(1)).alias("n_cand"),
-            # the probe hit-rate (folded q_sim_ivfadc_ceiling): did the
-            # true NN land among this level's candidates at all?
+            # the probe hit-rate: did the true NN land among this
+            # level's candidates at all?
             F.max(
                 F.when(F.col("neighbor_id") == F.col("exact_nn"), 1).otherwise(0)
             ).alias("hit"),
@@ -3676,111 +3353,168 @@ def _probe_sweep_table(
     )
 
 
-# Clustered-corpus eval: the OTHER branch of the serving rule. The
-# corpus is deterministically re-shaped into N_CLUSTERS well-separated
-# clusters (member = cluster center + CLUSTER_SPREAD × its own vector,
-# centers = the first N_CLUSTERS corpus vectors, so inter-center
-# distance ≈ √2·‖v‖ dwarfs the ≈0.28·‖v‖ intra-cluster spread) and the
-# IDENTICAL index/search pipeline runs on it. Both engines derive the
-# clustered corpus from the same fixture with the same double
-# arithmetic — the `embeddings` CTE shadows the raw view for every
-# downstream CTE (DuckDB resolves `main.embeddings` to the view inside
-# the shadowing definition).
-N_CLUSTERS = 8
-_CLUSTERED_CTES = (
-    f"""ctr AS (
-        SELECT vec_id AS ctr_id,
-               [CAST(embedding[j] AS DOUBLE)
-                for j in range(1, {DIM + 1})] AS cemb0
-        FROM main.embeddings WHERE vec_id < {N_CLUSTERS})""",
-    f"""embeddings AS (
-        SELECT e.vec_id,
-               [c.cemb0[j] + CAST(0.2 AS DOUBLE) * CAST(e.embedding[j] AS DOUBLE)
-                for j in range(1, {DIM + 1})] AS embedding
-        FROM main.embeddings e JOIN ctr c ON e.vec_id % {N_CLUSTERS} = c.ctr_id)""",
-)
-
-
-@query(
-    "q_sim_ivfadc_clustered_recall",
-    oracle=_pq_duck(pre_ctes=_CLUSTERED_CTES + _IVFADC_PRE, sub_cte=_IVFADC_SUB, seed_lo=N_CELLS)
-    + _IVFADC_SEARCH
-    + _IVFADC_RECALL_TAIL,
-)
-def q_sim_ivfadc_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ivfadc_recall on a CLUSTERED corpus — the measured
-    evidence for the other branch of q_sim_ivfadc's SERVING
-    RECOMMENDATION ("IVFADC's pruning pays off on clustered corpora"):
-    the same fixture re-shaped into N_CLUSTERS well-separated clusters,
-    the same deterministic index and N_PROBE=2 search, the same
-    recall@1/cand_frac row. Beside the isotropic eval's flat 0.04 this
-    row shows what cell probing buys when the corpus actually has cell
-    structure — a user can compare the two rows and place their own
-    corpus on the spectrum. Measured (sf0.01, representative window):
-    0.08 vs isotropic 0.04 — cell structure guarantees the true NN is
-    among the candidates, but with every same-cluster member nearly
-    equidistant the 4-bit codes still can't rank them; top-1 on such
-    corpora needs the re-rank stage and/or trained centroids
-    (q_sim_ivfadc's recommendation).
-
-    The clustered corpus is derived in-query (member = center +
-    0.2×own-vector, centers = first N_CLUSTERS vectors) identically on
-    both engines, so the row is value-hash checked end to end; the
-    exact side stays PQ_NQ-bounded."""
-    e, adc = _ivfadc_clustered_parts(spark, sf_dir)
-    return _ivfadc_recall_table(e, adc)
-
-
-def _clustered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived CLUSTERED corpus (member = center + 0.2×own-vector,
-    centers = the first N_CLUSTERS vectors) — one definition shared by
-    the clustered recall eval and the clustered serving row, mirroring
-    the oracle's embeddings-shadowing CTE exactly."""
-    raw = _emb(spark, sf_dir)
-    ctr = raw.filter(F.col("vec_id") < N_CLUSTERS).select(
-        F.col("vec_id").alias("ctr_id"), F.col("emb").alias("cemb0")
+def _rerank_sweep_table(e: DataFrame, adc: DataFrame, exact1: DataFrame) -> DataFrame:
+    """The recall@1-vs-shortlist-depth curve over RERANK_LEVELS: one
+    exact-distance join at the deepest level, each shallower level a
+    filter on the ADC rank before the per-level argmin."""
+    rl2 = _rerank_l2(e, adc, max(RERANK_LEVELS))
+    per = (
+        rl2.withColumn(
+            "r_depth", F.explode(F.array(*[F.lit(r) for r in RERANK_LEVELS]))
+        )
+        .filter(F.col("rn") <= F.col("r_depth"))
+        .groupBy("r_depth", "query_id")
+        .agg(F.min(F.struct("l2_dist", "neighbor_id")).alias("bn"))
+        .select("r_depth", "query_id", F.col("bn.neighbor_id").alias("rr_nn"))
     )
     return (
-        raw.withColumn("ctr_id", F.col("vec_id") % N_CLUSTERS)
-        .join(F.broadcast(ctr), ["ctr_id"])
+        per.join(exact1, ["query_id"])
+        .groupBy("r_depth")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
+            F.sum(F.when(F.col("rr_nn") == F.col("exact_nn"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_match"),
+            F.round(
+                F.avg(
+                    F.when(F.col("rr_nn") == F.col("exact_nn"), 1.0).otherwise(0.0)
+                ),
+                4,
+            ).alias("recall_at_1"),
+        )
+        .orderBy("r_depth")
+    )
+
+
+def _serving_table(e: DataFrame, adc: DataFrame, exact1: DataFrame) -> DataFrame:
+    """Per-query served neighbor (the exact winner of the SERVING_R
+    shortlist) with its exact distance and hit flag, plus the config's
+    aggregate recall@1/cand_frac as constant columns."""
+    nn = _rerank_nn1(e, adc, r=SERVING_R)
+    per = (
+        nn.join(exact1, ["query_id"])
         .select(
-            "vec_id",
-            F.zip_with(
-                "cemb0", "emb", lambda c, x: c + F.lit(0.2) * x
-            ).alias("emb"),
+            "query_id",
+            F.col("neighbor_id").alias("served_nn"),
+            "l2_dist",
+            F.when(F.col("neighbor_id") == F.col("exact_nn"), 1)
+            .otherwise(0)
+            .cast("bigint")
+            .alias("hit"),
         )
     )
-
-
-def _ivfadc_clustered_parts(spark: SparkSession, sf_dir: str):
-    """Clustered-corpus twin of _ivfadc_parts: the derived corpus is
-    checkpointed (it feeds the index build, the search, AND the exact
-    yardstick) and the adc table memoized, same policy as the raw
-    variants — a corpus variant is its own offline index build."""
-    key = _memo_key(spark, sf_dir, "ivfadc:clustered")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    e = _clustered_corpus(spark, sf_dir)
-    if key is not None:
-        e = e.localCheckpoint(eager=True)
-    cent, cb_df, codes = ivfadc_index_from(e)
-    q = e.filter(_q_win()).select(
-        F.col("vec_id").alias("query_id"), "emb"
+    nc = adc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_cand"))
+    ntot = e.agg(F.count(F.lit(1)).alias("n"))
+    stats = (
+        per.join(nc, ["query_id"])
+        .crossJoin(F.broadcast(ntot))
+        .agg(
+            F.round(F.avg(F.col("hit").cast("double")), 4).alias("recall_at_1"),
+            F.round(
+                F.avg(F.col("n_cand").cast("double")) / (F.first("n") - F.lit(1)),
+                4,
+            ).alias("cand_frac"),
+        )
     )
-    adc = ivfadc_score(q, cent, cb_df, codes)
-    if key is not None:
-        adc = adc.localCheckpoint(eager=True)
-        _memo_put(key, (e, adc))
-    return e, adc
+    return per.crossJoin(F.broadcast(stats))
 
 
-# Re-rank depth sweep (VERDICT r09 item 2): the dedicated re-rank row
-# is a single point (R=PQ_RERANK=10); this measures the whole recall@1
-# curve over shortlist depths so a user tuning R toward the probe
-# ceiling reads a curve, not a point. ONE ADC pass and ONE exact-distance
-# join at the deepest level; every shallower level is a filter on the
-# candidate's ADC rank (rank is single-valued per (query, candidate)).
-RERANK_LEVELS = (1, 2, 5, 10, 20)
+# --- the registered eval rows ---------------------------------------------
+#
+# The eval variants, each named once; a row's oracle is V.duck() + its
+# tail and its Spark side reads V.build().
+IVFADC_SEEDED = IvfadcEval()
+IVFADC_PROBE_SWEEP = IvfadcEval(n_probe=max(PROBE_LEVELS), with_rank=True)
+IVFADC_CLUSTERED = IvfadcEval(clustered=True)
+IVFADC_TRAINED = IvfadcEval(trained=True)
+IVFADC_TRAINED_PROBE_SWEEP = IvfadcEval(
+    trained=True, n_probe=max(PROBE_LEVELS), with_rank=True
+)
+IVFADC_SERVING = IvfadcEval(trained=True, n_probe=SERVING_PROBE)
+IVFADC_SERVING_CLUSTERED = IvfadcEval(
+    clustered=True, trained=True, n_probe=SERVING_PROBE
+)
+IVFADC_INCREMENTAL = IvfadcEval(train_where=_INCR_TRAIN_WHERE)
+
+_IVFADC_RECALL_TAIL = f"""
+    , {_ADC1_CTE},
+    {_EXACT1_CTE},
+    nc AS (SELECT query_id, count(*) AS n_cand FROM adc GROUP BY 1),
+    ntot AS (SELECT count(*) AS n FROM embeddings)
+    SELECT CAST(count(*) AS BIGINT) AS n_queries,
+           CAST(sum(CASE WHEN a.neighbor_id = x.neighbor_id
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
+           round(avg(CASE WHEN a.neighbor_id = x.neighbor_id
+                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1,
+           round(avg(CAST(nc.n_cand AS DOUBLE))
+                 / (SELECT n - 1 FROM ntot), 4) AS cand_frac
+    FROM adc1 a JOIN exact1 x USING (query_id) JOIN nc USING (query_id)
+    """
+
+# shortlist + exact-rerank CTEs
+_IVFADC_RERANK_CTES = f"""
+    , short AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT query_id, neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY query_id
+                       ORDER BY adc_dist, neighbor_id) AS rn
+            FROM adc)
+        WHERE rn <= {PQ_RERANK}),
+    rer AS (
+        SELECT s.query_id, s.neighbor_id,
+               round(list_sum([
+                   (CAST(q.embedding[j] AS DOUBLE)
+                    - CAST(n.embedding[j] AS DOUBLE)) ** 2
+                   for j in range(1, {DIM + 1})]), 4) AS l2_dist
+        FROM short s
+        JOIN embeddings q ON q.vec_id = s.query_id
+        JOIN embeddings n ON n.vec_id = s.neighbor_id),
+    rr1 AS (
+        SELECT query_id, neighbor_id, l2_dist FROM (
+            SELECT query_id, neighbor_id, l2_dist,
+                   row_number() OVER (
+                       PARTITION BY query_id
+                       ORDER BY l2_dist, neighbor_id) AS rn
+            FROM rer)
+        WHERE rn = 1)"""
+
+_PROBE_SWEEP_TAIL = f"""
+    , levels AS (SELECT unnest({list(PROBE_LEVELS)}) AS n_probe),
+    cand AS (
+        SELECT lv.n_probe, a.query_id, a.neighbor_id, a.adc_dist
+        FROM adc a JOIN levels lv ON a.crank <= lv.n_probe),
+    adc1 AS (
+        SELECT n_probe, query_id, neighbor_id AS adc_nn FROM (
+            SELECT n_probe, query_id, neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY n_probe, query_id
+                       ORDER BY adc_dist, neighbor_id) AS rn
+            FROM cand)
+        WHERE rn = 1),
+    nc AS (
+        SELECT n_probe, query_id, count(*) AS n_cand
+        FROM cand GROUP BY 1, 2),
+    {_EXACT1_CTE},
+    hits AS (
+        SELECT c.n_probe, c.query_id,
+               max(CASE WHEN c.neighbor_id = x.neighbor_id
+                        THEN 1 ELSE 0 END) AS hit
+        FROM cand c JOIN exact1 x USING (query_id)
+        GROUP BY 1, 2),
+    ntot AS (SELECT count(*) AS n FROM embeddings)
+    SELECT a.n_probe,
+           CAST(count(*) AS BIGINT) AS n_queries,
+           round(avg(CASE WHEN a.adc_nn = x.neighbor_id
+                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1,
+           round(avg(CAST(nc.n_cand AS DOUBLE))
+                 / (SELECT n - 1 FROM ntot), 4) AS cand_frac,
+           round(avg(CAST(h.hit AS DOUBLE)), 4) AS ceiling_at_probe
+    FROM adc1 a JOIN exact1 x USING (query_id)
+    JOIN nc USING (n_probe, query_id)
+    JOIN hits h USING (n_probe, query_id)
+    GROUP BY a.n_probe
+    """
 
 _RERANK_SWEEP_TAIL = f"""
     , rshort AS (
@@ -3820,365 +3554,6 @@ _RERANK_SWEEP_TAIL = f"""
     GROUP BY w.r_depth
     """
 
-
-@query(
-    "q_sim_ivfadc_rerank_sweep",
-    oracle=_pq_duck(pre_ctes=_IVFADC_PRE, sub_cte=_IVFADC_SUB, seed_lo=N_CELLS)
-    + _IVFADC_SEARCH
-    + _RERANK_SWEEP_TAIL,
-)
-def q_sim_ivfadc_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@1 of IVFADC + exact re-rank across shortlist depths
-    R ∈ RERANK_LEVELS — the measured curve behind the serving
-    recommendation's re-rank branch (the probe sweep's mirror for the
-    OTHER tunable). q_sim_ivfadc_rerank_recall pins the single deployed
-    point (R=10); this row answers "what does raising R buy": recall
-    climbs toward the probe hit-rate ceiling (the fraction of queries
-    whose true NN landed in a probed cell at all — no shortlist depth
-    recovers a neighbor the coarse probe never scored).
-
-    One scoring pass, not len(RERANK_LEVELS): the ADC table is ranked
-    once, exact L2 is computed once for the max(R)-deep shortlist (the
-    only float fetches — max(R) rows per query), and each shallower
-    level is a filter on that rank before the per-level argmin. Scale:
-    identical to q_sim_ivfadc_rerank — broadcast shortlist vs the
-    corpus on vec_id, parquet-prunable; the exact side stays
-    PQ_NQ-bounded (an eval, never a serving path)."""
-    e, adc = _ivfadc_parts(spark, sf_dir)
-    return _rerank_sweep_table(e, adc, exact1=_exact1_raw(spark, sf_dir))
-
-
-def _rerank_sweep_table(
-    e: DataFrame, adc: DataFrame, exact1: DataFrame | None = None
-) -> DataFrame:
-    """The recall@1-vs-shortlist-depth curve over RERANK_LEVELS for an
-    adc candidate table — ONE definition shared by the seeded sweep and
-    the trained-centroid sweep, so the curves differ only by the cent
-    table that produced ``adc``."""
-    rl2 = _rerank_l2(e, adc, max(RERANK_LEVELS))
-    per = (
-        rl2.withColumn(
-            "r_depth", F.explode(F.array(*[F.lit(r) for r in RERANK_LEVELS]))
-        )
-        .filter(F.col("rn") <= F.col("r_depth"))
-        .groupBy("r_depth", "query_id")
-        .agg(F.min(F.struct("l2_dist", "neighbor_id")).alias("bn"))
-        .select("r_depth", "query_id", F.col("bn.neighbor_id").alias("rr_nn"))
-    )
-    if exact1 is None:
-        exact1 = _exact_nn1(e)
-    return (
-        per.join(exact1, ["query_id"])
-        .groupBy("r_depth")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-            F.sum(F.when(F.col("rr_nn") == F.col("exact_nn"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_match"),
-            F.round(
-                F.avg(
-                    F.when(F.col("rr_nn") == F.col("exact_nn"), 1.0).otherwise(0.0)
-                ),
-                4,
-            ).alias("recall_at_1"),
-        )
-        .orderBy("r_depth")
-    )
-
-
-# Trained-centroid IVFADC (VERDICT r09 item 3): the serving stack's
-# coarse layer with Lloyd-trained cells instead of the seeded
-# vec_id < N_CELLS ones. Trained cells shrink residual magnitude —
-# exactly what 4-bit residual codes need to rank (the clustered-corpus
-# eval's own diagnosis) — so this row measures what centroid training
-# buys the END-TO-END recall, beside q_sim_ivfadc_recall's seeded row.
-IVF_TRAIN_ITERS = 2  # fixed Lloyd rounds for the coarse cells
-
-
-def _trained_cent_duck(iters: int) -> tuple[str, ...]:
-    """The coarse-cell Lloyd trainer unrolled as DuckDB CTEs producing
-    the ``cent(cell_id, cemb)`` table _IVFADC_PRE's downstream CTEs
-    expect — kc*/ka* names keep clear of the PQ unroll's c*/a* chain."""
-    d2 = (
-        f"list_sum([ (CAST(e.embedding[j] AS DOUBLE) - c.cemb[j]) ** 2 "
-        f"for j in range(1, {DIM + 1}) ])"
-    )
-    ctes = [
-        f"""kc0 AS (
-        SELECT vec_id AS cell_id,
-               [CAST(embedding[j] AS DOUBLE) for j in range(1, {DIM + 1})] AS cemb
-        FROM embeddings WHERE vec_id < {N_CELLS})"""
-    ]
-    prev = "kc0"
-    for t in range(1, iters + 1):
-        ctes.append(f"""ka{t} AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT e.vec_id, c.cell_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {d2}, c.cell_id) AS rn
-            FROM embeddings e CROSS JOIN {prev} c)
-        WHERE rn = 1)""")
-        ctes.append(f"""kc{t} AS (
-        SELECT cell_id, list(v ORDER BY i) AS cemb FROM (
-            SELECT a.cell_id, t.i,
-                   round(avg(CAST(e.embedding[t.i] AS DOUBLE)), 6) AS v
-            FROM ka{t} a
-            JOIN embeddings e USING (vec_id)
-            CROSS JOIN range(1, {DIM + 1}) t(i)
-            GROUP BY a.cell_id, t.i)
-        GROUP BY cell_id)""")
-        prev = f"kc{t}"
-    ctes.append(f"cent AS (SELECT cell_id, cemb FROM {prev})")
-    return tuple(ctes)
-
-
-def _trained_cent(e: DataFrame) -> DataFrame:
-    """Lloyd-train the N_CELLS coarse centroids over corpus ``e``
-    (IVF_TRAIN_ITERS rounds of the shared trainer, seeded from
-    vec_id < N_CELLS) as the ``cent(cell_id, cemb)`` table."""
-    schema = "cell_id bigint, cemb array<double>"
-    return e.sparkSession.createDataFrame(
-        lloyd(e, schema, "emb", 0, N_CELLS, IVF_TRAIN_ITERS), schema
-    )
-
-
-def ivfadc_index_trained(spark: SparkSession, sf_dir: str):
-    """(e, cent, cb_df, codes): the IVFADC index with Lloyd-TRAINED
-    coarse centroids — the recommended serving configuration — memoized
-    per (session, fixture) like the seeded index: the trained recall
-    row, the trained re-rank row, and the trained re-rank sweep all
-    serve from ONE Lloyd run + ONE codebook training. ``e`` rides along
-    checkpointed because the trainer makes IVF_TRAIN_ITERS passes over
-    it and every consumer reuses the same materialization."""
-    key = _memo_key(spark, sf_dir, "ivfadc:trained")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    e = _emb(spark, sf_dir)
-    if key is not None:
-        e = e.localCheckpoint(eager=True)
-    cent = _trained_cent(e)
-    _, cb_df, codes = ivfadc_index_from(e, cent=cent)
-    if key is not None:
-        codes = codes.localCheckpoint(eager=True)
-    out = (e, cent, cb_df, codes)
-    if key is not None:
-        _memo_put(key, out)
-    return out
-
-
-def _ivfadc_trained_parts(spark: SparkSession, sf_dir: str):
-    """Trained-index twin of _ivfadc_parts: corpus + memoized
-    PQ_NQ-bounded adc candidate table over the trained index."""
-    e, *_ = parts = ivfadc_index_trained(spark, sf_dir)
-    return e, _adc_memo(spark, sf_dir, "ivfadc:adc:trained", lambda: parts)
-
-
-@query(
-    "q_sim_ivfadc_trained_recall",
-    oracle=_pq_duck(
-        pre_ctes=_trained_cent_duck(IVF_TRAIN_ITERS) + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _IVFADC_SEARCH
-    + _IVFADC_RECALL_TAIL,
-)
-def q_sim_ivfadc_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ivfadc_recall with k-means-TRAINED coarse centroids
-    (IVF_TRAIN_ITERS Lloyd rounds, seeded from the same vec_id < N_CELLS
-    vectors the seeded index uses verbatim) — measures whether training
-    the coarse layer lifts end-to-end code-only recall: trained cells
-    sit at member means, so residual magnitude shrinks and the 4-bit
-    residual codes get more signal per bit. The whole downstream
-    pipeline (residual PQ trainer, code table, probe, LUT, ADC) is the
-    identical machinery — only the ``cent`` table differs — so any
-    recall delta vs q_sim_ivfadc_recall is attributable to centroid
-    training alone. Measured (sf0.01, representative window): 0.08 @
-    cand_frac 0.1257 vs the seeded 0.04 @ 0.126 — training doubles
-    code-only recall at the same candidate budget, and lifts the probe
-    ceiling 0.25→0.32. Scale: training collects N_CELLS*DIM doubles per
-    round (constant); everything else inherits q_sim_ivfadc's shape.
-    The exact side is PQ_NQ-bounded — an eval, never a serving path."""
-    e, adc = _ivfadc_trained_parts(spark, sf_dir)
-    return _ivfadc_recall_table(e, adc, exact1=_exact1_raw(spark, sf_dir))
-
-
-# Probe hit-rate ceiling: the number every downstream stage is bounded
-# by — no shortlist depth, codebook, or re-rank recovers a true NN the
-# coarse probe never scored. Published per probe level as the probe
-# sweep's ceiling_at_probe column; this helper is the N_PROBE point.
-def q_sim_ivfadc_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[FOLDED into q_sim_ivfadc_probe_sweep, VERDICT r10 item 1: the
-    sweep now carries a ceiling_at_probe column — the probe hit-rate
-    per level — whose n_probe=N_PROBE row is exactly this number. Kept
-    as an unregistered eval helper: the cross-query consistency test
-    pins sweep@N_PROBE's ceiling == this row every session.]
-
-    The coarse probe's HIT-RATE CEILING: the fraction of queries
-    whose exact L2 nearest neighbor lands among the ADC candidates at
-    all (i.e. in one of the N_PROBE probed cells). Every recall number
-    in the IVFADC family is bounded above by this row — ADC ranking,
-    codebook quality, and re-rank depth only decide how much of the
-    ceiling is realized, never more — so the serving recommendation's
-    "R climbs toward the ceiling" and "raise N_PROBE vs re-rank" calls
-    are decided by comparing q_sim_ivfadc_rerank_sweep's tail against
-    THIS number: rerank recall ≈ ceiling means deeper shortlists are
-    spent; recall ≪ ceiling means R (or the codebook) is the problem,
-    not the probe. Scale: one broadcast-sized anti-join-shaped lookup
-    over the candidate table; the exact side stays PQ_NQ-bounded (an
-    eval, never a serving path)."""
-    e, adc = _ivfadc_parts(spark, sf_dir)
-    exact1 = _exact1_raw(spark, sf_dir)
-    hit = adc.select(
-        "query_id", F.col("neighbor_id").alias("exact_nn"), F.lit(1).alias("found")
-    )
-    return (
-        exact1.join(hit, ["query_id", "exact_nn"], "left")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-            F.sum(F.coalesce(F.col("found"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hit"),
-            F.round(
-                F.avg(F.coalesce(F.col("found"), F.lit(0)).cast("double")), 4
-            ).alias("ceiling_at_probe"),
-        )
-    )
-
-
-@query(
-    "q_sim_ivfadc_trained_rerank_recall",
-    oracle=_pq_duck(
-        pre_ctes=_trained_cent_duck(IVF_TRAIN_ITERS) + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _IVFADC_SEARCH
-    + _IVFADC_RERANK_CTES
-    + f"""
-    , {_EXACT1_CTE}
-    SELECT CAST(count(*) AS BIGINT) AS n_queries,
-           CAST(sum(CASE WHEN r.neighbor_id = x.neighbor_id
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-           round(avg(CASE WHEN r.neighbor_id = x.neighbor_id
-                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1
-    FROM rr1 r JOIN exact1 x USING (query_id)
-    """,
-)
-def q_sim_ivfadc_trained_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@1 of trained coarse centroids AND the exact re-rank
-    stage together — the recommended deployment, measured end to end
-    because the lifts need not compose additively. Measured (sf0.01,
-    representative window): 0.25 vs seeded + re-rank's 0.11 at the
-    same R=10 — training more than doubles the two-stage number, and
-    the composed search lands ON the seeded probe ceiling (0.25) while
-    the trained ceiling sits at 0.32 (measured in-session), so further
-    gains come from R or probe depth, read off the sweeps. This row
-    also pinned the round's eval-bias lesson: on the ORIGINAL biased
-    query window (80% zero-residual centroid vectors) the same two
-    configurations measured 0.45 vs 0.65 — inverted — which is why
-    every number in this family now runs on the representative window
-    and why combinations must be measured end to end on the target
-    corpus, never argued from separate deltas. Same machinery as
-    q_sim_ivfadc_rerank_recall with the cent table swapped for
-    _trained_cent's Lloyd output. The exact side stays PQ_NQ-bounded
-    (an eval, never a serving path)."""
-    e, adc = _ivfadc_trained_parts(spark, sf_dir)
-    return _recall_vs_exact1(
-        e, _rerank_nn1(e, adc), exact1=_exact1_raw(spark, sf_dir)
-    )
-
-
-@query(
-    "q_sim_ivfadc_trained_rerank_sweep",
-    oracle=_pq_duck(
-        pre_ctes=_trained_cent_duck(IVF_TRAIN_ITERS) + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _IVFADC_SEARCH
-    + _RERANK_SWEEP_TAIL,
-)
-def q_sim_ivfadc_trained_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The re-rank depth curve on the TRAINED index (VERDICT r10 item
-    3): q_sim_ivfadc's serving recommendation deploys trained centroids
-    + exact re-rank, but round 10 measured the R-curve only on the
-    seeded index and the trained configuration at a single point
-    (R=10, recall 0.25) — a user tuning R on the RECOMMENDED config had
-    no curve. This row is q_sim_ivfadc_rerank_sweep with the cent table
-    swapped for _trained_cent's Lloyd output (the same one-ADC-pass /
-    filter-by-rank derivation, the same _rerank_sweep_table
-    definition), so its R=PQ_RERANK level must equal
-    q_sim_ivfadc_trained_rerank_recall by construction — pinned by the
-    cross-query consistency test. Read the deployment R off THIS curve,
-    stop where it flattens against the trained ceiling (0.32 at
-    sf0.01). The exact side stays PQ_NQ-bounded — an eval, never a
-    serving path."""
-    e, adc = _ivfadc_trained_parts(spark, sf_dir)
-    return _rerank_sweep_table(e, adc, exact1=_exact1_raw(spark, sf_dir))
-
-
-@query(
-    "q_sim_ivfadc_trained_probe_sweep",
-    oracle=_pq_duck(
-        pre_ctes=_trained_cent_duck(IVF_TRAIN_ITERS) + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _ivfadc_search_sql(n_probe=max(PROBE_LEVELS), with_rank=True)
-    + _PROBE_SWEEP_TAIL,
-)
-def q_sim_ivfadc_trained_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The probe-depth curve on the TRAINED index — completes the
-    serving matrix: both tunables (probe depth here, re-rank depth in
-    q_sim_ivfadc_trained_rerank_sweep) now have measured curves on
-    BOTH index configurations. The trained ceiling lift the single
-    N_PROBE=2 point showed (0.25 -> 0.32) is here a ceiling-vs-depth
-    CURVE beside the seeded sweep's, so "raise N_PROBE vs train vs
-    re-rank" is decided by comparing measured curves, not
-    extrapolating from two points. Measured (sf0.01): ceiling climbs
-    0.21/0.32/0.54/0.79/1.00 at depths 1/2/4/8/16 while code-only
-    recall crawls 0.04->0.12 — i.e. on TRAINED cells deeper probing
-    buys real headroom (the seeded curve is flat: its cells don't
-    separate neighbors), but only the re-rank stage can cash it; the
-    serving consequence is trained cells + probe depth sized to the
-    recall target + re-rank, exactly the recommendation's shape. Same
-    one-pass derivation as
-    q_sim_ivfadc_probe_sweep (_probe_sweep_table — score once at the
-    deepest level, filter by probe rank); only the cent table differs.
-    The exact side stays PQ_NQ-bounded — an eval, never a serving
-    path."""
-    e, *_ = parts = ivfadc_index_trained(spark, sf_dir)
-    adc = _adc_memo(
-        spark,
-        sf_dir,
-        "ivfadc:adc:trained_probe_max",
-        lambda: parts,
-        n_probe=max(PROBE_LEVELS),
-        with_rank=True,
-    )
-    return _probe_sweep_table(e, adc, _exact1_raw(spark, sf_dir))
-
-
-# The RECOMMENDED serving configuration, end to end (VERDICT r11 item
-# 4): the serving matrix gives a user four measured curves, but the
-# deployer's question is "what do I actually run" — this is that row.
-# Both tunables are read off the committed trained-index curves:
-# - SERVING_PROBE = 4: the knee of q_sim_ivfadc_trained_probe_sweep's
-#   ceiling-vs-cand_frac curve — marginal ceiling per marginal
-#   candidate fraction holds ~1.7 through depth 4 (1→2: +0.11/+0.064,
-#   2→4: +0.22/+0.127) then collapses below 1.0 (4→8: +0.25/+0.258,
-#   8→16: +0.21/+0.489 — past the knee, probing buys recall SLOWER
-#   than scanning uniformly at random would), so depth 4 is the last
-#   level where the coarse quantizer still out-prunes chance.
-# - SERVING_R = PQ_RERANK = 10: where the trained re-rank curve
-#   flattens (q_sim_ivfadc_trained_rerank_sweep: +0.016/step from R=5
-#   to 10, +0.004/step from 10 to 20 against the 0.32 probe-2
-#   ceiling).
-SERVING_PROBE = 4
-SERVING_R = PQ_RERANK  # read off the sweep; == the shared rerank CTE depth
-
 _SERVING_TAIL = f"""
     , {_EXACT1_CTE},
     nc AS (SELECT query_id, count(*) AS n_cand FROM adc GROUP BY 1),
@@ -4198,188 +3573,289 @@ _SERVING_TAIL = f"""
 
 
 @query(
-    "q_sim_ivfadc_serving",
-    oracle=_pq_duck(
-        pre_ctes=_trained_cent_duck(IVF_TRAIN_ITERS) + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _ivfadc_search_sql(n_probe=SERVING_PROBE)
+    "q_sim_ivfadc",
+    oracle=IVFADC_SEEDED.duck()
+    + """
+    SELECT query_id, neighbor_id, adc_dist FROM (
+        SELECT query_id, neighbor_id, adc_dist,
+               row_number() OVER (
+                   PARTITION BY query_id
+                   ORDER BY adc_dist, neighbor_id) AS rn
+        FROM adc)
+    WHERE rn = 1
+    """,
+)
+def q_sim_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFADC search: nearest neighbor per eval-window query from
+    seeded coarse cells + residual-PQ codes only. The query probes its
+    N_PROBE nearest of N_CELLS cells, builds one LUT per probed cell
+    from its own residual there (the only float vector touched), and
+    scores just the probed cells' candidates by M code lookups.
+
+    Scale shape: assignment and probing broadcast the constant
+    centroid table; codes live cell-partitioned (the join key IS the
+    cell), so a query reads ~N_PROBE/N_CELLS of a 4-byte-per-vector
+    code table; the LUT broadcast is NQ*N_PROBE*M*K rows — constant.
+
+    SERVING RECOMMENDATION — the family's measured ladder (sf0.01, the
+    100-query eval window; recall@1 against the exact L2 neighbor):
+
+    ===================================  =========  =========  =======
+    configuration                        recall@1   cand_frac  ceiling
+    ===================================  =========  =========  =======
+    PQ full scan (q_sim_pq_recall)       0.10       1.0
+    seeded cells, code-only              0.04       0.126      0.25
+    seeded, clustered corpus             0.08       0.1233
+    seeded, incremental (stale codebook) 0.04       0.126
+    trained cells, code-only             0.08       0.1257     0.32
+    seeded + re-rank@10                  0.11                  0.25
+    trained + re-rank@10                 0.25                  0.32
+    serving: trained, probe 4, R=10      0.34       0.2528     0.54
+    serving on the clustered corpus      0.77       0.2485
+    ===================================  =========  =========  =======
+
+    Curves: the seeded probe sweep is FLAT (recall 0.03-0.05 at depths
+    1-16, i.e. cand_frac 0.06 → 1.00), so on this isotropic corpus the
+    4-bit ranking, not the probe, binds code-only serving. Seeded
+    re-rank climbs 0.04/0.05/0.06/0.11/0.17 at R = 1/2/5/10/20. The
+    trained probe ceiling climbs 0.21/0.32/0.54/0.79/1.00 at depths
+    1/2/4/8/16 (code-only recall only 0.04 → 0.12): trained cells give
+    probe depth real headroom that only the re-rank stage cashes. Its
+    marginal ceiling per marginal cand_frac holds ~1.7 through depth 4
+    and falls below 1.0 after it (SERVING_PROBE); the trained re-rank
+    curve gains +0.016/step from R=5 to 10 and +0.004/step from 10 to
+    20 (SERVING_R). Deferring codebook retraining costs nothing
+    measurable here.
+
+    So: run the probe sweep and the recall rows on YOUR corpus; if
+    code-only recall@1 is below ~0.8× the PQ full scan and the probe
+    curve is flat, train the centroids, then add re-rank depth read
+    off the measured sweep; deploy code-only IVFADC alone only where
+    its measured recall meets the 0.8× rule."""
+    _, adc, _ = IVFADC_SEEDED.build(spark, sf_dir)
+    return _adc_top1(adc)
+
+
+def q_sim_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unregistered: the seeded index's recall@1 and cand_frac at
+    N_PROBE — the probe sweep's n_probe=N_PROBE row, which the
+    cross-query consistency test pins equal to this."""
+    return _ivfadc_recall_table(*IVFADC_SEEDED.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_rerank",
+    oracle=IVFADC_SEEDED.duck()
     + _IVFADC_RERANK_CTES
-    + _SERVING_TAIL,
+    + """
+    SELECT query_id, neighbor_id, l2_dist FROM rr1
+    """,
+)
+def q_sim_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFADC + exact RE-RANK, the two-stage serving pattern: the
+    code-only ADC pass shortlists PQ_RERANK candidates per query, and
+    only those NQ*PQ_RERANK float vectors are fetched for an exact L2
+    re-rank (FAISS's IVFADC+refine). Quantization error then only costs
+    recall when it pushes the true neighbor out of the shortlist.
+
+    Scale shape: the re-rank join touches R rows per query — an equi
+    join on vec_id against the corpus, never a second pass over the
+    code table."""
+    e, adc, _ = IVFADC_SEEDED.build(spark, sf_dir)
+    return _rerank_nn1(e, adc)
+
+
+def q_sim_ivfadc_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unregistered: recall@1 of the seeded two-stage search at
+    R=PQ_RERANK — the re-rank sweep's r_depth=PQ_RERANK row, which the
+    cross-query consistency test pins equal to this."""
+    e, adc, exact1 = IVFADC_SEEDED.build(spark, sf_dir)
+    return _recall_vs_exact1(_rerank_nn1(e, adc), exact1)
+
+
+@query(
+    "q_sim_ivfadc_probe_sweep",
+    oracle=IVFADC_PROBE_SWEEP.duck() + _PROBE_SWEEP_TAIL,
+)
+def q_sim_ivfadc_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The seeded index's recall/cost curve: one row per probe depth in
+    PROBE_LEVELS with recall@1, the candidate fraction scored, and
+    ceiling_at_probe — the fraction of queries whose exact NN landed in
+    a probed cell at all, which bounds every recall at that depth. The
+    deepest level is the full scan (cand_frac 1.0), so the curve's
+    asymptote is measured.
+
+    Scale shape: one scoring pass at the deepest level with each
+    candidate's cell probe rank attached; each shallower level is a
+    filter on that rank over the small candidate table. The exact side
+    is PQ_NQ-bounded."""
+    return _probe_sweep_table(*IVFADC_PROBE_SWEEP.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_clustered_recall",
+    oracle=IVFADC_CLUSTERED.duck() + _IVFADC_RECALL_TAIL,
+)
+def q_sim_ivfadc_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The seeded index's recall@1 and cand_frac on the CLUSTERED
+    corpus: the same build and N_PROBE search where the corpus has
+    cell structure to find. Beside the isotropic rows it brackets the
+    corpus spectrum a user places their own corpus on.
+
+    Scale shape: q_sim_ivfadc's, plus the PQ_NQ-bounded exact side
+    over the derived corpus."""
+    return _ivfadc_recall_table(*IVFADC_CLUSTERED.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_rerank_sweep",
+    oracle=IVFADC_SEEDED.duck() + _RERANK_SWEEP_TAIL,
+)
+def q_sim_ivfadc_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@1 of the seeded IVFADC + exact re-rank across shortlist
+    depths R in RERANK_LEVELS: what raising R buys on the way to the
+    probe ceiling.
+
+    Scale shape: one ADC ranking and one exact-distance join for the
+    max(R)-deep shortlist (the only float fetches); each shallower
+    level is a filter on the ADC rank. The exact side is
+    PQ_NQ-bounded."""
+    return _rerank_sweep_table(*IVFADC_SEEDED.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_trained_recall",
+    oracle=IVFADC_TRAINED.duck() + _IVFADC_RECALL_TAIL,
+)
+def q_sim_ivfadc_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@1 and cand_frac of the index with Lloyd-TRAINED coarse
+    cells at N_PROBE. Only the cent table differs from the seeded row,
+    so the delta is centroid training's alone.
+
+    Scale shape: training collects N_CELLS*DIM doubles per round
+    (constant); the rest is q_sim_ivfadc's."""
+    return _ivfadc_recall_table(*IVFADC_TRAINED.build(spark, sf_dir))
+
+
+def q_sim_ivfadc_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unregistered: the seeded probe's hit-rate ceiling at N_PROBE —
+    the fraction of queries whose exact NN is among the ADC candidates
+    at all; the probe sweep's ceiling_at_probe at n_probe=N_PROBE,
+    which the cross-query consistency test pins equal to this."""
+    _, adc, exact1 = IVFADC_SEEDED.build(spark, sf_dir)
+    hit = adc.select(
+        "query_id", F.col("neighbor_id").alias("exact_nn"), F.lit(1).alias("found")
+    )
+    return (
+        exact1.join(hit, ["query_id", "exact_nn"], "left")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
+            F.sum(F.coalesce(F.col("found"), F.lit(0)))
+            .cast("bigint")
+            .alias("n_hit"),
+            F.round(
+                F.avg(F.coalesce(F.col("found"), F.lit(0)).cast("double")), 4
+            ).alias("ceiling_at_probe"),
+        )
+    )
+
+
+@query(
+    "q_sim_ivfadc_trained_rerank_recall",
+    oracle=IVFADC_TRAINED.duck()
+    + _IVFADC_RERANK_CTES
+    + f"""
+    , {_EXACT1_CTE}
+    SELECT CAST(count(*) AS BIGINT) AS n_queries,
+           CAST(sum(CASE WHEN r.neighbor_id = x.neighbor_id
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
+           round(avg(CASE WHEN r.neighbor_id = x.neighbor_id
+                          THEN 1.0 ELSE 0.0 END), 4) AS recall_at_1
+    FROM rr1 r JOIN exact1 x USING (query_id)
+    """,
+)
+def q_sim_ivfadc_trained_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@1 of trained coarse cells AND the exact re-rank at
+    R=PQ_RERANK, measured end to end because the two lifts need not
+    compose additively.
+
+    Scale shape: q_sim_ivfadc_rerank's; the exact side is
+    PQ_NQ-bounded."""
+    e, adc, exact1 = IVFADC_TRAINED.build(spark, sf_dir)
+    return _recall_vs_exact1(_rerank_nn1(e, adc), exact1)
+
+
+@query(
+    "q_sim_ivfadc_trained_rerank_sweep",
+    oracle=IVFADC_TRAINED.duck() + _RERANK_SWEEP_TAIL,
+)
+def q_sim_ivfadc_trained_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The re-rank depth curve on the TRAINED index — the recommended
+    deployment's R tuning surface; its R=PQ_RERANK level equals
+    q_sim_ivfadc_trained_rerank_recall by construction.
+
+    Scale shape: q_sim_ivfadc_rerank_sweep's."""
+    return _rerank_sweep_table(*IVFADC_TRAINED.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_trained_probe_sweep",
+    oracle=IVFADC_TRAINED_PROBE_SWEEP.duck() + _PROBE_SWEEP_TAIL,
+)
+def q_sim_ivfadc_trained_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The probe-depth curve (recall@1, cand_frac, ceiling_at_probe)
+    on the TRAINED index, beside the seeded sweep: with both curves
+    measured, "raise N_PROBE vs train vs re-rank" is read off curves.
+
+    Scale shape: q_sim_ivfadc_probe_sweep's."""
+    return _probe_sweep_table(*IVFADC_TRAINED_PROBE_SWEEP.build(spark, sf_dir))
+
+
+@query(
+    "q_sim_ivfadc_serving",
+    oracle=IVFADC_SERVING.duck() + _IVFADC_RERANK_CTES + _SERVING_TAIL,
 )
 def q_sim_ivfadc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE RECOMMENDED IVFADC SERVING CONFIG, end to end — trained
-    coarse centroids (IVF_TRAIN_ITERS Lloyd rounds), probe depth
-    SERVING_PROBE read off the trained probe sweep's knee, exact
-    re-rank depth SERVING_R read off the trained re-rank sweep's
-    flattening point (constants block above derives both from the
-    committed curves). One row per eval query: the served neighbor and
-    its exact distance (the shortlist a deployment returns), whether
-    it matched the exact NN, and the config's aggregate recall@1 and
-    candidate fraction riding along as constant columns — the single
-    table a deployer copies instead of assembling
-    trained+probe+re-rank from four sweep curves themselves. Measured
-    (sf0.01, representative window): recall@1 0.34 at cand_frac 0.2528
-    — vs 0.25 @ 0.126 for the probe-2 deployment and the 0.54 probe-4
-    ceiling; the residual gap to the ceiling is R's (the sweep says
-    ~+0.04 for doubling R) or the codebook's.
+    """THE RECOMMENDED SERVING CONFIG, end to end: trained coarse
+    cells, probe depth SERVING_PROBE, exact re-rank depth SERVING_R.
+    One row per eval query: the served neighbor and its exact distance,
+    whether it matched the exact NN, and the config's recall@1 and
+    cand_frac as constant columns.
 
-    Scale: the serving path is exactly q_sim_ivfadc_rerank's shape at
-    n_probe=SERVING_PROBE — broadcast centroid probe, constant LUT,
-    cell-partitioned code scan of ~SERVING_PROBE/N_CELLS of the
-    corpus, R float fetches per query. The stats columns and the exact
-    side are the PQ_NQ-bounded eval harness, never the serving path
-    (a one-row broadcast join, not a global window)."""
-    e, *_ = parts = ivfadc_index_trained(spark, sf_dir)
-    adc = _adc_memo(
-        spark,
-        sf_dir,
-        "ivfadc:adc:serving",
-        lambda: parts,
-        n_probe=SERVING_PROBE,
-    )
-    return _serving_table(e, adc, _exact1_raw(spark, sf_dir))
-
-
-def _serving_table(e: DataFrame, adc: DataFrame, exact1: DataFrame) -> DataFrame:
-    """The serving row's output: per-query served neighbor + exact
-    distance, hit flag, and the config's aggregate recall@1/cand_frac
-    as constant columns — ONE definition shared by the isotropic and
-    clustered serving rows, so the two differ only by the corpus and
-    adc table that produced them."""
-    nn = _rerank_nn1(e, adc, r=SERVING_R)
-    per = (
-        nn.join(exact1, ["query_id"])
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("served_nn"),
-            "l2_dist",
-            F.when(F.col("neighbor_id") == F.col("exact_nn"), 1)
-            .otherwise(0)
-            .cast("bigint")
-            .alias("hit"),
-        )
-    )
-    nc = adc.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_cand"))
-    ntot = e.agg(F.count(F.lit(1)).alias("n"))
-    stats = (
-        per.join(nc, ["query_id"])
-        .crossJoin(F.broadcast(ntot))
-        .agg(
-            F.round(F.avg(F.col("hit").cast("double")), 4).alias("recall_at_1"),
-            F.round(
-                F.avg(F.col("n_cand").cast("double")) / (F.first("n") - F.lit(1)),
-                4,
-            ).alias("cand_frac"),
-        )
-    )
-    return per.crossJoin(F.broadcast(stats))
+    Scale shape: q_sim_ivfadc_rerank's at n_probe=SERVING_PROBE — a
+    code scan of ~SERVING_PROBE/N_CELLS of the corpus and R float
+    fetches per query. The stats columns and the exact side are the
+    PQ_NQ-bounded eval harness (a one-row broadcast join, not a global
+    window)."""
+    return _serving_table(*IVFADC_SERVING.build(spark, sf_dir))
 
 
 @query(
     "q_sim_ivfadc_serving_clustered",
-    oracle=_pq_duck(
-        pre_ctes=_CLUSTERED_CTES
-        + _trained_cent_duck(IVF_TRAIN_ITERS)
-        + _IVFADC_PRE[1:],
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-    )
-    + _ivfadc_search_sql(n_probe=SERVING_PROBE)
-    + _IVFADC_RERANK_CTES
-    + _SERVING_TAIL,
+    oracle=IVFADC_SERVING_CLUSTERED.duck() + _IVFADC_RERANK_CTES + _SERVING_TAIL,
 )
 def q_sim_ivfadc_serving_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RECOMMENDED serving config (trained cells, probe
-    SERVING_PROBE, re-rank SERVING_R — q_sim_ivfadc_serving's exact
-    machinery via _serving_table) measured on the CLUSTERED corpus —
-    the other end of the corpus spectrum, where the coarse layer has
-    real structure to find. q_sim_ivfadc_serving's 0.34 on the
-    isotropic worst case is the recommendation's FLOOR; this row is
-    what the same deployment achieves when the corpus actually
-    clusters — measured (sf0.01, representative window): recall@1
-    0.77 at cand_frac 0.2485, vs the clustered seeded/probe-2/
-    code-only 0.08 — and a user places their corpus between the two
-    rows. The derived corpus, the Lloyd trainer, the residual PQ, the
-    probe, and the exact side all run on the clustered table
-    identically on both engines (the oracle's clustered CTE shadows
-    ``embeddings``, so every downstream stage — trainer included —
-    sees the derived corpus), so the row is value-hash checked end to
-    end. Scale shape: identical to q_sim_ivfadc_serving; the exact
-    side stays PQ_NQ-bounded (an eval, never a serving path)."""
-    e, adc = _ivfadc_clustered_trained_parts(spark, sf_dir)
-    return _serving_table(e, adc, _exact_nn1(e))
+    """The recommended serving config on the CLUSTERED corpus — the
+    other end of the corpus spectrum. The trainer, residual PQ, probe
+    and exact side all run on the derived corpus on both engines (the
+    oracle's clustered CTE shadows ``embeddings``).
 
-
-def _ivfadc_clustered_trained_parts(spark: SparkSession, sf_dir: str):
-    """Clustered-corpus twin of the SERVING wiring: trained centroids
-    over the derived corpus, adc at SERVING_PROBE, everything memoized
-    per (session, fixture) — the clustered serving row is its own
-    offline index build."""
-    key = _memo_key(spark, sf_dir, "ivfadc:clustered_trained_serving")
-    if key is not None and key in _MEMO:
-        return _MEMO[key]
-    e = _clustered_corpus(spark, sf_dir)
-    if key is not None:
-        e = e.localCheckpoint(eager=True)
-    cent = _trained_cent(e)
-    _, cb_df, codes = ivfadc_index_from(e, cent=cent)
-    q = e.filter(_q_win()).select(F.col("vec_id").alias("query_id"), "emb")
-    adc = ivfadc_score(q, cent, cb_df, codes, n_probe=SERVING_PROBE)
-    if key is not None:
-        adc = adc.localCheckpoint(eager=True)
-        _memo_put(key, (e, adc))
-    return e, adc
-
-
-# Incremental index growth (round 10): at 100 TB the corpus grows in
-# batches and nobody retrains the codebook per batch — new vectors are
-# assigned to the EXISTING cells and encoded with the EXISTING codebook
-# (both are per-row map work over broadcast constants); retraining is
-# the scheduled offline job. This eval runs exactly that: train on the
-# pre-existing corpus, encode everything, search the combined table,
-# and measure what the stale codebook costs vs the full rebuild.
-INCR_CUT = 48  # ids below this are always corpus (covers cell + codebook seeds)
-_INCR_TRAIN_WHERE = f"vec_id < {INCR_CUT} OR vec_id % 5 > 0"
+    Scale shape: q_sim_ivfadc_serving's."""
+    return _serving_table(*IVFADC_SERVING_CLUSTERED.build(spark, sf_dir))
 
 
 @query(
     "q_sim_ivfadc_incremental_recall",
-    oracle=_pq_duck(
-        pre_ctes=_IVFADC_PRE,
-        sub_cte=_IVFADC_SUB,
-        seed_lo=N_CELLS,
-        train_where=_INCR_TRAIN_WHERE,
-    )
-    + _IVFADC_SEARCH
-    + _IVFADC_RECALL_TAIL,
+    oracle=IVFADC_INCREMENTAL.duck() + _IVFADC_RECALL_TAIL,
 )
 def q_sim_ivfadc_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@1 of an INCREMENTALLY GROWN IVFADC index: the codebook
-    trains only on the pre-existing corpus (vec_id < INCR_CUT or
-    vec_id % 5 > 0 — ~80% of vectors, chosen so the cell and codebook
-    seeds are always corpus), the remaining ~20% arrive as a new batch
-    that is cell-assigned and residual-encoded with the STALE codebook,
-    and search runs over the combined code table against the exact NN
-    over the combined corpus. The delta vs q_sim_ivfadc_recall (full
-    rebuild) is the measured price of deferring retraining — the
-    number that decides the retrain cadence at scale, where assignment
-    and encoding are per-batch map work over broadcast constants but
-    retraining re-reads the corpus. Measured (sf0.01, representative
-    window): 0.04 at cand_frac 0.126 — identical to the full rebuild's
-    0.04, i.e. deferring retraining costs nothing measurable on this
-    corpus.
+    """Recall@1 and cand_frac of an INCREMENTALLY GROWN index: the
+    codebook trains only on the pre-existing corpus (_INCR_TRAIN_WHERE,
+    ~80% of vectors, always including the cell and codebook seeds); the
+    remaining ~20% arrive as a new batch, cell-assigned and encoded
+    with the stale codebook. The delta to the full rebuild is the price
+    of deferring retraining.
 
-    Scale: identical serving shape to q_sim_ivfadc; the training
-    restriction is one filter on the subvector table. The exact side
-    stays PQ_NQ-bounded — an eval, never a serving path."""
-    e = _emb(spark, sf_dir)
-    train_pred = (F.col("vec_id") < INCR_CUT) | (F.col("vec_id") % 5 > 0)
-    adc = _adc_memo(
-        spark,
-        sf_dir,
-        "ivfadc:adc:incr",
-        lambda: (e, *ivfadc_index_from(e, train_pred=train_pred)),
-    )
-    return _ivfadc_recall_table(e, adc, exact1=_exact1_raw(spark, sf_dir))
+    Scale shape: q_sim_ivfadc's; the training restriction is one filter
+    on the subvector table."""
+    return _ivfadc_recall_table(*IVFADC_INCREMENTAL.build(spark, sf_dir))

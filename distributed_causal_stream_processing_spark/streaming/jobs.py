@@ -1271,7 +1271,7 @@ def run_streaming_ivfadc(
     (both pytest-pinned in tests/test_streaming.py).
 
     ``trained=True`` serves the RECOMMENDED configuration instead: the
-    Lloyd-trained coarse cells (ivfadc_index_trained — the config the
+    Lloyd-trained coarse cells (ivfadc_index(trained=True) — the config the
     batch recall ladder measures best), same probe path, bit-identical
     to the batch trained search. Training happens once at job start,
     exactly where the offline/online split puts it.
@@ -1298,7 +1298,6 @@ def run_streaming_ivfadc(
     from distributed_causal_stream_processing_spark.operators.similarity import (
         as_double,
         ivfadc_index,
-        ivfadc_index_trained,
         ivfadc_score,
     )
 
@@ -1321,23 +1320,16 @@ def run_streaming_ivfadc(
                 "the wrong index variant"
             )
         cent, cb_df, codes = ivfadc_index_open(spark, index_dir)
-    elif trained:
-        _, cent, cb_df, codes = ivfadc_index_trained(spark, sf_dir)
     else:
-        cent, cb_df, codes = ivfadc_index(spark, sf_dir)
-    # the memoized index builders return `codes` already eagerly
-    # localCheckpointed (similarity._memo_key) — re-checkpointing it
-    # here paid an extra full pass and held a duplicate corpus-sized
-    # block set per job (review r11). But the builders only checkpoint
-    # when the memo key resolves (memo enabled + applicationId
-    # reachable); with the memo off, lazy `codes` would re-run the full
-    # encode — and Lloyd training on the trained path — EVERY
-    # micro-batch, so checkpoint defensively in exactly that case
-    # (ADVICE r11). A saved store needs neither: its codes ARE a
-    # parquet scan, pruned per batch below.
-    if not from_store and _sim._memo_key(
-        spark, sf_dir, "ivfadc:trained" if trained else "ivfadc:seeded"
-    ) is None:
+        cent, cb_df, codes = ivfadc_index(spark, sf_dir, trained=trained)
+    # the index builder returns `codes` already cut by an eager
+    # localCheckpoint, so re-checkpointing it here would pay a full pass
+    # and hold a duplicate corpus-sized block set per job. Only the
+    # _MEMO_DISABLED audit seam skips that cut; lazy `codes` would then
+    # re-run the full residual encode EVERY micro-batch, so checkpoint
+    # in exactly that case. A saved store needs neither: its codes ARE
+    # a parquet scan, pruned per batch below.
+    if not from_store and _sim._MEMO_DISABLED:
         codes = codes.localCheckpoint(eager=True)
     # cent is lazy-tiny for the seeded index (a 16-row filter) and
     # local data for the trained one; one cheap checkpoint keeps

@@ -126,7 +126,7 @@ def test_trained_variant_round_trips(spark, tmp_path):
     manifest = ix.ivfadc_index_save(spark, SF, d, trained=True)
     assert manifest["trained"] is True
     q = _eval_queries(spark)
-    _, cent, cb_df, codes = S.ivfadc_index_trained(spark, SF)
+    cent, cb_df, codes = S.ivfadc_index(spark, SF, trained=True)
     mem = sorted(map(tuple, S.ivfadc_score(q, cent, cb_df, codes).collect()))
     dcent, dcb, dcodes = ix.ivfadc_index_open(spark, d)
     dsk = sorted(map(tuple, S.ivfadc_score(q, dcent, dcb, dcodes).collect()))

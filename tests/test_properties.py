@@ -1261,6 +1261,63 @@ def test_ivfadc_memo_serves_identical_rows_and_invalidates(spark):
     assert k1 is not None and k2 is not None and k1 != k2
 
 
+def test_ivfadc_family_builds_each_artifact_once(spark, monkeypatch):
+    """The PQ/IVFADC eval family shares its builds: one row per variant
+    trains every Lloyd artifact exactly once and derives the clustered
+    corpus once, and a second pass over all of the family's registered
+    rows trains nothing and memoizes nothing new."""
+    from distributed_causal_stream_processing_spark import all_queries
+    from distributed_causal_stream_processing_spark.operators import (
+        similarity as S,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    qs = all_queries()
+    family = [n for n in qs if n.startswith(("q_sim_pq", "q_sim_ivfadc"))]
+    assert len(family) == 15
+    one_per_variant = (
+        "q_sim_pq_recall",  # raw PQ codebook + full-scan ADC + raw yardstick
+        "q_sim_ivfadc",  # seeded
+        "q_sim_ivfadc_probe_sweep",
+        "q_sim_ivfadc_clustered_recall",
+        "q_sim_ivfadc_trained_recall",
+        "q_sim_ivfadc_trained_probe_sweep",
+        "q_sim_ivfadc_serving",
+        "q_sim_ivfadc_serving_clustered",
+        "q_sim_ivfadc_incremental_recall",
+    )
+    calls = {"lloyd": 0, "clustered_corpus": 0}
+    lloyd, clustered_corpus = S.lloyd, S._clustered_corpus
+
+    def counted_lloyd(*a, **k):
+        calls["lloyd"] += 1
+        return lloyd(*a, **k)
+
+    def counted_clustered_corpus(*a, **k):
+        calls["clustered_corpus"] += 1
+        return clustered_corpus(*a, **k)
+
+    monkeypatch.setattr(S, "lloyd", counted_lloyd)
+    monkeypatch.setattr(S, "_clustered_corpus", counted_clustered_corpus)
+    saved = dict(S._MEMO)
+    try:
+        S._MEMO.clear()
+        for name in one_per_variant:
+            qs[name](spark, sf)
+        # raw PQ, then the seeded, clustered and incremental residual
+        # codebooks, then cells + codebook for trained and clustered
+        # trained: 1 + 3 + 2 * 2
+        assert calls == {"lloyd": 8, "clustered_corpus": 1}, calls
+        n_memo = len(S._MEMO)
+        for name in family:
+            qs[name](spark, sf)
+        assert calls == {"lloyd": 8, "clustered_corpus": 1}, calls
+        assert len(S._MEMO) == n_memo
+    finally:
+        S._MEMO.clear()
+        S._MEMO.update(saved)
+
+
 def test_ann_eval_window_excludes_construction_seeds(spark):
     """Round 10's flagship bug, generalized into a standing guard
     (VERDICT r10 item 8): the ANN eval window must not contain any

@@ -1527,14 +1527,14 @@ def test_streaming_ivfadc_trained_matches_batch(spark, tmp_path):
     serving configuration (Lloyd-trained coarse cells) — must be
     bit-identical to the batch trained search over the same query
     stream: train once at job start, probe per micro-batch. Built from
-    the same _ivfadc_trained_parts the registered trained rows use, so
+    the same IVFADC_TRAINED variant the registered trained rows use, so
     a divergence here means the streaming path re-derived something
     the offline/online split says it must not."""
     from pyspark.sql import Window as W
 
     from distributed_causal_stream_processing_spark.operators.similarity import (
+        IVFADC_TRAINED,
         PQ_NQ,
-        _ivfadc_trained_parts,
     )
     from distributed_causal_stream_processing_spark.streaming import jobs
 
@@ -1554,7 +1554,7 @@ def test_streaming_ivfadc_trained_matches_batch(spark, tmp_path):
         for r in sink.read_all(spark).collect()
     }
     # batch twin: top-1 of the trained index's adc table
-    _, adc = _ivfadc_trained_parts(spark, SF_SMOKE)
+    _, adc, _ = IVFADC_TRAINED.build(spark, SF_SMOKE)
     w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     want = {
         (r.query_id, r.neighbor_id, r.adc_dist)

@@ -489,3 +489,19 @@ def test_volume_drift_annotation_pure():
     }
     for k in ("steady", "tiny", "new", "novolume"):
         assert "volume_drift_from_prior" not in rows[k]
+
+
+def test_parity_one_rejects_unknown_names_before_spark(monkeypatch, capsys):
+    """A misspelled query name fails the run up front (exit 2, the
+    unknown names on stderr) instead of raising KeyError after every
+    earlier query has run; no Spark session is started for it."""
+    from distributed_causal_stream_processing_spark import session
+    from tools import parity_one
+
+    def boom(*a, **k):
+        raise AssertionError("get_spark called for an unknown query name")
+
+    monkeypatch.setattr(session, "get_spark", boom)
+    assert parity_one.main(["q_sim_pq", "q_no_such_query"]) == 2
+    err = capsys.readouterr().err
+    assert "q_no_such_query" in err and "q_sim_pq " not in err

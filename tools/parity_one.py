@@ -6,7 +6,8 @@ an optimization touching one query needs its oracle re-proven at every
 graded scale, not the whole registry's).
 
 Usage: python tools/parity_one.py q_a q_b [--sf sf0.001,sf0.01,sf0.1]
-Exit 1 on any mismatch.
+Exit 1 on any mismatch, 2 on a name the registry does not hold (checked
+before any Spark session starts).
 """
 
 from __future__ import annotations
@@ -20,11 +21,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("--sf", default="sf0.001,sf0.01,sf0.1")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     import duckdb
 
@@ -36,7 +37,11 @@ def main() -> int:
     from tests.parity import compare, register_duck_views
 
     _load_all()
-    spark = get_spark(app_name="dcsp-parity-one", cpus=16)
+    unknown = [n for n in args.names if n not in REGISTRY]
+    if unknown:
+        print("unknown query names:", " ".join(unknown), file=sys.stderr)
+        return 2
+    spark = get_spark(app_name="dcsp-parity-one")
     fails: list[str] = []
     for sf in args.sf.split(","):
         sf_dir = f"/root/testdata/{sf}"
