@@ -213,8 +213,8 @@ def main() -> None:
     # Streaming throughput probe: the reference is a stream processor,
     # so the bench also records events/sec through the causal sequencer
     # and its cross-key deps twin (keyed applyInPandasWithState, 4
-    # micro-batches, noop sink) under the shipped stateful config,
-    # session.recommended_streaming_state. Wall time includes
+    # micro-batches, noop sink) through jobs.run_stream, i.e. under the
+    # shipped stateful config. Wall time includes
     # micro-batch scheduling and state commits — the end-to-end number
     # a consumer of the sequenced view experiences.
     streaming = None
@@ -222,9 +222,6 @@ def main() -> None:
         import shutil
         import tempfile
 
-        from distributed_causal_stream_processing_spark.session import (
-            recommended_streaming_state,
-        )
         from distributed_causal_stream_processing_spark.streaming import jobs
         from distributed_causal_stream_processing_spark.streaming.causal import (
             causal_deps_stream,
@@ -239,18 +236,12 @@ def main() -> None:
             """Wall of one run of ``job`` over the staged events."""
             src = jobs.events_stream(spark, sdir, watermark="35 days").select(*cols)
             t0 = time.perf_counter()
-            with recommended_streaming_state(spark):
-                q = (
-                    job(src)
-                    .writeStream.format("noop")
-                    .outputMode("append")
-                    .option("checkpointLocation", os.path.join(sdir, ck))
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
+            jobs.run_stream(
+                job(src)
+                .writeStream.format("noop")
+                .outputMode("append")
+                .option("checkpointLocation", os.path.join(sdir, ck))
+            )
             return time.perf_counter() - t0
 
         # a probe failure at ANY point after mkdtemp must not leak the

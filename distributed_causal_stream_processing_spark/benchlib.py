@@ -8,6 +8,7 @@ measure the same thing — three hand-rolled copies drifted once
 
 from __future__ import annotations
 
+import contextlib
 import re
 import time
 
@@ -98,6 +99,29 @@ def drain_listener_bus(spark) -> None:
         bus.waitUntilEmpty(30_000)
 
 
+@contextlib.contextmanager
+def execution_window(spark):
+    """Collect the SQL executions the ``with`` block triggers: drain the
+    listener bus (a prior action's trailing events must not count), mark
+    the newest execution id in the shared SQLAppStatusStore, run the
+    block, drain again (the block's own executions must be stored), and
+    fill the yielded list with every execution newer than the mark.
+    Robust to the store evicting OLD entries
+    (spark.sql.ui.retainedExecutions): new executions are always present
+    right after they run."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    drain_listener_bus(spark)
+    lst = store.executionsList()
+    mark = lst.apply(lst.size() - 1).executionId() if lst.size() else -1
+    execs: list = []
+    yield execs
+    drain_listener_bus(spark)
+    lst = store.executionsList()
+    execs.extend(
+        e for e in (lst.apply(i) for i in range(lst.size())) if e.executionId() > mark
+    )
+
+
 _SIZE_UNIT = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
 
 
@@ -130,23 +154,13 @@ def shuffle_volume(queries, name: str, spark, sf_dir: str):
     if name not in queries:
         return None
     store = spark._jsparkSession.sharedState().statusStore()
-    drain_listener_bus(spark)  # a prior query's trailing events
-    lst = store.executionsList()
-    mark = lst.apply(lst.size() - 1).executionId() if lst.size() else -1
     try:
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        with execution_window(spark) as execs:
+            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     except Exception:  # noqa: BLE001 — callers decide how to report
         return None
-    drain_listener_bus(spark)
-    records = nbytes = 0
-    lst = store.executionsList()
-    for i in range(lst.size()):
-        e = lst.apply(i)
-        if e.executionId() > mark:
-            r, b = execution_exchange_volume(store, e.executionId())
-            records += r
-            nbytes += b
-    return records, nbytes
+    vols = [execution_exchange_volume(store, e.executionId()) for e in execs]
+    return sum(r for r, _ in vols), sum(b for _, b in vols)
 
 
 def execution_exchange_volume(store, execution_id: int):

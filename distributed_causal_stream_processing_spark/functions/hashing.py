@@ -36,16 +36,11 @@ def hex_u32_sql(hex_expr: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def md5_bit_sql(expr: str, bit: int) -> str:
-    """Bit ``bit`` (0..127, 0 = low bit of first hex char) of md5(expr)."""
-    return hex_bit_sql(f"md5({expr})", bit)
-
-
 def hex_bit_sql(hex_expr: str, bit: int) -> str:
-    """Same, over an ALREADY-COMPUTED hex string column. Use this form
-    inside multi-bit aggregates, materializing the md5 once in a prior
-    projection — 16 bits × md5-per-bit was the dominant cost of the
-    SimHash aggregate."""
+    """Bit ``bit`` (0..127, 0 = low bit of the first hex char) of an
+    ALREADY-COMPUTED hex string column such as md5(x). Multi-bit
+    aggregates materialize the md5 once in a prior projection — 16 bits
+    × md5-per-bit was the dominant cost of the SimHash aggregate."""
     pos = bit // 4 + 1  # 1-based hex char index
     k = bit % 4
     d = hex_digit_sql(hex_expr, pos)

@@ -62,8 +62,8 @@ def causal_sequence_stream(events: DataFrame) -> DataFrame:
     Throughput levers: (1) the sequencing itself is vectorized (see
     the in-kernel comment). (2) Every state partition pays a fixed cost
     per micro-batch (a state-store load, an fsync'd changelog commit
-    and a Python round trip) whatever its key count, so the job
-    builders run the operator under session.recommended_streaming_state:
+    and a Python round trip) whatever its key count, so jobs.run_stream
+    runs every query under session.recommended_streaming_state:
     RocksDB with one state partition per core, one wave of tasks per
     batch. The partition count is pinned in the checkpoint at first
     start. On a 4-core host (~1,667 rows per batch, 150 keys) this took

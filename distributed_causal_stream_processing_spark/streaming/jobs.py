@@ -5,17 +5,20 @@ this module runs the same logic as real unbounded jobs:
 
 - ``events_stream``: file-based streaming source over the events
   fixture (parquet dir), with watermarking.
-- ``run_tumbling_stream`` / ``run_dedup_stream`` /
-  ``run_stateful_agg_stream``: streaming counterparts of
-  q_stream_tumbling / q_stream_dedup / q_stream_stateful_agg.
+- ``run_stream`` / ``collect_stream``: the one run path. Every
+  streaming query the engine starts goes through ``run_stream``, which
+  starts it under ``session.recommended_streaming_state`` (RocksDB, one
+  state partition per core), drains what its sources hold and always
+  stops it; ``collect_stream`` returns a memory sink's rows through it.
+  The state rule is therefore applied at one site, for every query.
+- ``run_tumbling_stream`` / ``run_dedup_stream`` / ...: streaming
+  counterparts of q_stream_tumbling / q_stream_dedup / ..., each a
+  streaming DataFrame shaped to its output columns and collected.
 - ``IdempotentForeachBatchSink``: the reference's effectively-once
   contract — idempotent write keyed by batch id, commit marker written
   AFTER the data (write-then-commit), so at-least-once redelivery of a
-  batch cannot duplicate output.
-
-Every runner whose query keeps state starts it under
-``session.recommended_streaming_state`` (RocksDB, one state partition
-per core), so all stateful builders run on one state rule.
+  batch cannot duplicate output. Every sink runner drains its source
+  through ``_run_sink``, checkpointed under the sink's root.
 
 Tests (tests/test_streaming.py) assert the semantic invariants the
 oracle can't: late-data drop past the watermark, replay idempotence,
@@ -28,11 +31,12 @@ import datetime
 import json
 import os
 import shutil
-import tempfile
+import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from distributed_causal_stream_processing_spark.session import recommended_streaming_state
 
@@ -56,18 +60,53 @@ def stage_events_as_stream_dir(spark: SparkSession, sf_dir: str, out_dir: str, n
     load(spark, sf_dir, "events").repartition(n_files).write.mode("overwrite").parquet(out_dir)
 
 
-def events_stream(spark: SparkSession, stream_dir: str, watermark: str = "10 minutes") -> DataFrame:
-    """Unbounded read of the staged events dir, watermarked on ts.
+def _file_stream(spark: SparkSession, schema: T.StructType, stream_dir: str) -> DataFrame:
+    """Unbounded read of a staged parquet dir, one file per micro-batch,
+    so cross-batch state (dedup, running aggs, sink commits) is actually
+    exercised."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stream_dir)
 
-    maxFilesPerTrigger=1 forces multiple micro-batches so cross-batch
-    state (dedup, running aggs) is actually exercised.
-    """
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .withWatermark("ts", watermark)
-    )
+
+def events_stream(spark: SparkSession, stream_dir: str, watermark: str = "10 minutes") -> DataFrame:
+    """Unbounded read of the staged events dir, watermarked on ts."""
+    return _file_stream(spark, EVENT_SCHEMA, stream_dir).withWatermark("ts", watermark)
+
+
+def run_stream(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` under ``session.recommended_streaming_state``,
+    process everything its sources hold, and stop the query even when
+    a batch raises (the error propagates). Returns the stopped query:
+    its ``recentProgress``/``lastProgress`` and a memory sink's table
+    stay readable after ``stop()``.
+
+    The one place the engine starts a streaming query, so the state
+    rule holds for every query. On ``get_spark`` sessions it changes
+    nothing for a stateless query: they already run
+    ``defaultParallelism`` shuffle partitions, and only stateful
+    operators read the state-store provider."""
+    with recommended_streaming_state(writer._spark):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return q
+
+
+def collect_stream(
+    df: DataFrame, output_mode: str = "append"
+) -> tuple[list[Row], StreamingQuery]:
+    """Run ``df`` into a memory sink through ``run_stream``; returns its
+    rows and the stopped query. The sink's table gets a fresh name and
+    is dropped after the collect, so no two runs share a table and the
+    session holds no finished run's rows."""
+    spark = df.sparkSession
+    name = f"collect_{uuid.uuid4().hex}"
+    q = run_stream(df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    try:
+        return spark.table(name).collect(), q
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_tumbling_stream(spark: SparkSession, stream_dir: str) -> list:
@@ -77,20 +116,10 @@ def run_tumbling_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with recommended_streaming_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("tumbling_out")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT w.start AS window_start, event_type, n_events FROM tumbling_out"
-            ).collect()
-        finally:
-            q.stop()
+    return collect_stream(
+        agg.select(F.col("w.start").alias("window_start"), "event_type", "n_events"),
+        "complete",
+    )[0]
 
 
 def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
@@ -107,20 +136,9 @@ def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("n_users"))
     )
-    with recommended_streaming_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("win_distinct_out")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT w.start AS window_start, n_users FROM win_distinct_out"
-            ).collect()
-        finally:
-            q.stop()
+    return collect_stream(
+        agg.select(F.col("w.start").alias("window_start"), "n_users"), "complete"
+    )[0]
 
 
 def run_dedup_stream(spark: SparkSession, stream_dir: str, watermark: str = "35 days") -> list:
@@ -133,18 +151,7 @@ def run_dedup_stream(spark: SparkSession, stream_dir: str, watermark: str = "35 
     deduped = events_stream(spark, stream_dir, watermark=watermark).dropDuplicates(
         ["event_id"]
     )
-    with recommended_streaming_state(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql("SELECT event_id FROM dedup_out").collect()
-        finally:
-            q.stop()
+    return collect_stream(deduped.select("event_id"))[0]
 
 
 def run_dedup_stream_bounded(
@@ -167,27 +174,12 @@ def run_dedup_stream_bounded(
     deduped = events_stream(
         spark, stream_dir, watermark=watermark
     ).dropDuplicatesWithinWatermark(["event_id"])
-    with recommended_streaming_state(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_bounded_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = max(
-                (
-                    op["numRowsTotal"]
-                    for p in q.recentProgress
-                    for op in p.get("stateOperators", [])
-                ),
-                default=0,
-            )
-            rows = spark.sql("SELECT event_id FROM dedup_bounded_out").collect()
-            return rows, state_rows
-        finally:
-            q.stop()
+    rows, q = collect_stream(deduped.select("event_id"))
+    state_rows = max(
+        (op["numRowsTotal"] for p in q.recentProgress for op in p.get("stateOperators", [])),
+        default=0,
+    )
+    return rows, state_rows
 
 
 class _CommitMarkers:
@@ -332,55 +324,23 @@ class IdempotentForeachBatchSink(_CommitMarkers):
         return self._read_committed(spark, self.data_dir)
 
 
-def run_effectively_once_sink(spark: SparkSession, stream_dir: str, sink_root: str) -> "IdempotentForeachBatchSink":
-    """Stream events into the idempotent sink with checkpointing."""
-    sink = IdempotentForeachBatchSink(sink_root)
-    checkpoint = os.path.join(sink_root, "_checkpoint")
-    q = (
-        events_stream(spark, stream_dir)
-        .writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", checkpoint)
+def _run_sink(source: DataFrame, sink, process=None):
+    """Drain ``source`` through a foreachBatch callback (``process``,
+    default ``sink.process``) with the checkpoint under ``sink.root``,
+    and return the sink: the one body of every effectively-once sink
+    runner, so a sink's commit markers and the query's offsets always
+    live side by side."""
+    run_stream(
+        source.writeStream.foreachBatch(process or sink.process)
+        .option("checkpointLocation", os.path.join(sink.root, "_checkpoint"))
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return sink
 
 
-def run_stateful_agg_stream(spark: SparkSession, stream_dir: str) -> list:
-    """Streaming q_stream_stateful_agg: per-user view (count + sum) —
-    the reference's per-key materialized view. This runner uses
-    COMPLETE mode (the memory sink re-materializes the full view each
-    micro-batch, O(|keys|) output per batch — fine for a queryable
-    in-memory table); the incremental-emission form of the same
-    aggregate — update mode, only changed keys per batch — is exercised
-    by tests/test_streaming.py's update-mode test, and a real upsert
-    sink would pair update mode with foreachBatch MERGE
-    (CdcMergeSink)."""
-    agg = (
-        events_stream(spark, stream_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    with recommended_streaming_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stateful_out")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql("SELECT * FROM stateful_out").collect()
-        finally:
-            q.stop()
+def run_effectively_once_sink(spark: SparkSession, stream_dir: str, sink_root: str) -> "IdempotentForeachBatchSink":
+    """Stream events into the idempotent sink with checkpointing."""
+    return _run_sink(events_stream(spark, stream_dir), IdempotentForeachBatchSink(sink_root))
 
 
 def run_stream_stream_join(
@@ -402,23 +362,11 @@ def run_stream_stream_join(
     deployment with mostly-ordered arrival would run "2 hours"-ish and
     hold state proportional to rate × (watermark + band).
     """
-    return _click_purchase_join(
-        spark,
-        stream_dir,
-        watermark,
-        how="inner",
-        query_name="ss_join_out",
-        result_sql="SELECT c_id, p_id FROM ss_join_out",
-    )
+    return _click_purchase_join(spark, stream_dir, watermark, how="inner")
 
 
 def _click_purchase_join(
-    spark: SparkSession,
-    stream_dir: str,
-    watermark: str,
-    how: str,
-    query_name: str,
-    result_sql: str,
+    spark: SparkSession, stream_dir: str, watermark: str, how: str
 ) -> list:
     """Shared body of the inner/left-outer click→purchase attribution
     runners: same two filtered sides, same 3-clause time-band join
@@ -445,18 +393,7 @@ def _click_purchase_join(
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         how,
     )
-    with recommended_streaming_state(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(result_sql).collect()
-        finally:
-            q.stop()
+    return collect_stream(joined.select("c_id", "p_id"))[0]
 
 
 def stage_events_split_sources(
@@ -515,36 +452,17 @@ def run_multi_source_causal_stream(
     (ts, event_id), i.e. happened-before, regardless of which source a
     row arrived on. The shuffle to `groupBy(user_id)` is the merge
     point; no global coordination, state O(keys).
-
-    Runs under session.recommended_streaming_state (RocksDB, one state
-    partition per core).
     """
     from distributed_causal_stream_processing_spark.streaming.causal import (
         causal_sequence_stream,
     )
 
-    with recommended_streaming_state(spark):
-        streams = [
-            events_stream(spark, d, watermark=watermark).select(
-                "event_id", "ts", "user_id"
-            )
-            for d in (dir_a, dir_b)
-        ]
-        merged = streams[0].unionByName(streams[1])
-        seq = causal_sequence_stream(merged)
-        q = (
-            seq.writeStream.format("memory")
-            .queryName("multi_causal_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT user_id, event_id, ts, seq, late FROM multi_causal_out"
-            ).collect()
-        finally:
-            q.stop()
+    streams = [
+        events_stream(spark, d, watermark=watermark).select("event_id", "ts", "user_id")
+        for d in (dir_a, dir_b)
+    ]
+    seq = causal_sequence_stream(streams[0].unionByName(streams[1]))
+    return collect_stream(seq.select("user_id", "event_id", "ts", "seq", "late"))[0]
 
 
 def run_session_window_stream(
@@ -561,29 +479,15 @@ def run_session_window_stream(
         .groupBy(F.session_window("ts", "15 minutes").alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with recommended_streaming_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("session_out")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT user_id, sw.start AS session_start, sw.end AS session_end,"
-                " n_events FROM session_out"
-            ).collect()
-        finally:
-            q.stop()
-
-
-def temp_dir(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix)
-
-
-def cleanup(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
+    return collect_stream(
+        agg.select(
+            "user_id",
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "n_events",
+        ),
+        "complete",
+    )[0]
 
 
 class CdcMergeSink(_SnapshotTable):
@@ -641,20 +545,7 @@ class CdcMergeSink(_SnapshotTable):
 
 def run_cdc_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str) -> "CdcMergeSink":
     """Stream events through the CDC-merge sink with checkpointing."""
-    sink = CdcMergeSink(sink_root)
-    checkpoint = os.path.join(sink_root, "_checkpoint")
-    q = (
-        events_stream(spark, stream_dir)
-        .writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return sink
+    return _run_sink(events_stream(spark, stream_dir), CdcMergeSink(sink_root))
 
 
 def run_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str):
@@ -698,19 +589,7 @@ def run_merge_stream(spark: SparkSession, stream_dir: str, sink_root: str):
         )
         table.merge(latest, spec, version=batch_id)
 
-    checkpoint = os.path.join(sink_root, "_checkpoint")
-    q = (
-        events_stream(spark, stream_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return table
+    return _run_sink(events_stream(spark, stream_dir), table, apply_batch)
 
 
 def stage_events_time_ordered(
@@ -818,14 +697,12 @@ def run_stream_stream_join_outer(
     (watermark + band) because the time-band condition bounds both
     buffers — the same contract as the inner join.
     """
-    return _click_purchase_join(
-        spark,
-        stream_dir,
-        watermark,
-        how="left_outer",
-        query_name="ss_join_outer_out",
-        result_sql="SELECT c_id, p_id FROM ss_join_outer_out WHERE c_id >= 0",
-    )
+    # sentinel clicks (c_id < 0) are dropped after the collect: Catalyst
+    # pushes a `c_id >= 0` stream filter through the outer join and below
+    # the click side's watermark, which then stops short of the last real
+    # clicks, and their NULL rows never emit
+    rows = _click_purchase_join(spark, stream_dir, watermark, how="left_outer")
+    return [r for r in rows if r.c_id >= 0]
 
 
 def run_chain_assign_stream(
@@ -838,30 +715,15 @@ def run_chain_assign_stream(
     over the staged events log; memory-sink collect for tests.
     Sentinel rows (negative event_id), if staged, are excluded from
     the returned rows but still flow through state — harmless: they
-    use reserved user ids. Runs under
-    session.recommended_streaming_state."""
+    use reserved user ids."""
     from distributed_causal_stream_processing_spark.streaming.causal import (
         chain_assign_stream,
     )
 
-    with recommended_streaming_state(spark):
-        chains = chain_assign_stream(
-            events_stream(spark, stream_dir, watermark=watermark), gap_us
-        )
-        q = (
-            chains.writeStream.format("memory")
-            .queryName("chain_assign_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT user_id, event_id, root_id, depth FROM chain_assign_out "
-                "WHERE event_id >= 0"
-            ).collect()
-        finally:
-            q.stop()
+    chains = chain_assign_stream(events_stream(spark, stream_dir, watermark=watermark), gap_us)
+    return collect_stream(
+        chains.filter("event_id >= 0").select("user_id", "event_id", "root_id", "depth")
+    )[0]
 
 
 def run_sliding_stream(spark: SparkSession, stream_dir: str) -> list:
@@ -873,20 +735,10 @@ def run_sliding_stream(spark: SparkSession, stream_dir: str) -> list:
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with recommended_streaming_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("sliding_out")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT w.start AS window_start, event_type, n_events FROM sliding_out"
-            ).collect()
-        finally:
-            q.stop()
+    return collect_stream(
+        agg.select(F.col("w.start").alias("window_start"), "event_type", "n_events"),
+        "complete",
+    )[0]
 
 
 # --- Streaming content dedup (MinHash bands vs accumulating index) -------
@@ -1187,36 +1039,12 @@ class StreamingEmbeddingDedup(_StreamingIndexDedup):
         return mt_sig_rows_for(df)
 
 
-def _run_index_dedup(
-    sink: _StreamingIndexDedup,
-    spark: SparkSession,
-    stream_dir: str,
-    schema: T.StructType,
-) -> _StreamingIndexDedup:
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", os.path.join(sink.root, "_checkpoint"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return sink
-
-
 def run_streaming_content_dedup(
     spark: SparkSession, doc_stream_dir: str, root: str
 ) -> StreamingContentDedup:
     """Stream staged documents through the content-dedup kernel, one
     file per micro-batch, checkpointed under root."""
-    return _run_index_dedup(
-        StreamingContentDedup(root), spark, doc_stream_dir, DOC_SCHEMA
-    )
+    return _run_sink(_file_stream(spark, DOC_SCHEMA, doc_stream_dir), StreamingContentDedup(root))
 
 
 EMBEDDING_SCHEMA = T.StructType(
@@ -1244,8 +1072,8 @@ def run_streaming_embedding_dedup(
 ) -> StreamingEmbeddingDedup:
     """Stream staged embeddings through the semantic-dedup kernel, one
     file per micro-batch, checkpointed under root."""
-    return _run_index_dedup(
-        StreamingEmbeddingDedup(root), spark, emb_stream_dir, EMBEDDING_SCHEMA
+    return _run_sink(
+        _file_stream(spark, EMBEDDING_SCHEMA, emb_stream_dir), StreamingEmbeddingDedup(root)
     )
 
 
@@ -1254,7 +1082,6 @@ def run_streaming_ivfadc(
     query_stream_dir: str,
     sf_dir: str,
     out_root: str,
-    checkpoint_dir: str,
     k: int = 1,
     trained: bool = False,
     index_dir: str | None = None,
@@ -1267,8 +1094,9 @@ def run_streaming_ivfadc(
     constants the registered batch queries use, so streaming results
     are BIT-IDENTICAL to q_sim_ivfadc on the same query set, and the
     results land through IdempotentForeachBatchSink's write-then-commit
-    protocol — a replayed batch after a crash cannot duplicate answers
-    (both pytest-pinned in tests/test_streaming.py).
+    protocol under ``out_root`` (checkpoint included) — a replayed batch
+    after a crash cannot duplicate answers (both pytest-pinned in
+    tests/test_streaming.py).
 
     ``trained=True`` serves the RECOMMENDED configuration instead: the
     Lloyd-trained coarse cells (ivfadc_index(trained=True) — the config the
@@ -1368,22 +1196,7 @@ def run_streaming_ivfadc(
         )
         sink.process(top, batch_id)
 
-    src = (
-        spark.readStream.schema(EMBEDDING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(query_stream_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return sink
+    return _run_sink(_file_stream(spark, EMBEDDING_SCHEMA, query_stream_dir), sink, probe)
 
 
 class PostingsIngestSink(_CommitMarkers):
@@ -1445,21 +1258,9 @@ def run_streaming_postings_ingest(
     tests/test_streaming.py) — the postings twin of
     run_streaming_ivfadc's serve-from-store path, completing the
     build-once/grow-per-batch story for all three persisted indexes."""
-    sink = PostingsIngestSink(root, store_dir)
-    q = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(doc_stream_dir)
-        .writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", os.path.join(root, "_checkpoint"))
-        .outputMode("append")
-        .start()
+    return _run_sink(
+        _file_stream(spark, DOC_SCHEMA, doc_stream_dir), PostingsIngestSink(root, store_dir)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return sink
 
 
 def run_causal_deps_stream(
@@ -1474,31 +1275,21 @@ def run_causal_deps_stream(
     respecting replay asserted in tests/test_streaming.py. Sentinel
     rows (negative event_id) are excluded from the returned rows but
     flow through state harmlessly (reserved user ids → their own
-    pairs). Runs under session.recommended_streaming_state."""
+    pairs)."""
     from distributed_causal_stream_processing_spark.streaming.causal import (
         causal_deps_stream,
     )
 
-    with recommended_streaming_state(spark):
-        deps = causal_deps_stream(
-            events_stream(spark, stream_dir, watermark=watermark).select(
-                "event_id", "ts", "user_id", "event_type"
-            )
+    deps = causal_deps_stream(
+        events_stream(spark, stream_dir, watermark=watermark).select(
+            "event_id", "ts", "user_id", "event_type"
         )
-        q = (
-            deps.writeStream.format("memory")
-            .queryName("causal_deps_out")
-            .outputMode("append")
-            .start()
+    )
+    return collect_stream(
+        deps.filter("event_id >= 0").select(
+            "event_id", "user_id", "event_type", "dep_id", "causal_layer", "late"
         )
-        try:
-            q.processAllAvailable()
-            return spark.sql(
-                "SELECT event_id, user_id, event_type, dep_id, causal_layer, late "
-                "FROM causal_deps_out WHERE event_id >= 0"
-            ).collect()
-        finally:
-            q.stop()
+    )[0]
 
 
 # --- Kafka-shaped decode (broker-free) -----------------------------------

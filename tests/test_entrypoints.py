@@ -234,18 +234,12 @@ def test_observe_streaming_metrics_in_progress(spark, tmp_path):
     stream = jobs.events_stream(spark, d, watermark="35 days").observe(
         "batch_metrics", F.count(F.lit(1)).alias("n_rows")
     )
-    q = (
-        stream.writeStream.format("noop").start()
-    )
-    try:
-        q.processAllAvailable()
-        total = 0
-        for p in q.recentProgress:
-            m = p.get("observedMetrics", {}).get("batch_metrics")
-            if m:
-                total += m["n_rows"]
-    finally:
-        q.stop()
+    q = jobs.run_stream(stream.writeStream.format("noop"))
+    total = 0
+    for p in q.recentProgress:
+        m = p.get("observedMetrics", {}).get("batch_metrics")
+        if m:
+            total += m["n_rows"]
     from distributed_causal_stream_processing_spark.io import load
 
     assert total == load(spark, SF_SMOKE, "events").count()

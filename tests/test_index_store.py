@@ -310,7 +310,6 @@ def test_streaming_refuses_store_variant_mismatch(spark, tmp_path, saved_index):
             str(tmp_path / "unused_q"),
             SF,
             str(tmp_path / "unused_out"),
-            str(tmp_path / "unused_ck"),
             trained=True,
             index_dir=d,
         )

@@ -220,17 +220,8 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_out")
-        .outputMode("append")  # append mode only emits finalized windows
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        finalized = spark.sql("SELECT window.start AS s, n FROM late_out").collect()
-    finally:
-        q.stop()
+    # append mode only emits finalized windows
+    finalized, _ = jobs.collect_stream(agg.select(F.col("window.start").alias("s"), "n"))
 
     # the 09:00 window (where the late row would land) must not contain it
     for r in finalized:
@@ -474,20 +465,8 @@ def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
             os.utime(f, (t, t))
 
     seq = causal.causal_sequence_stream(jobs.events_stream(spark, d, watermark="1 day"))
-    q = (
-        seq.writeStream.format("memory")
-        .queryName("causal_late_flags_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT user_id, event_id, seq, late FROM causal_late_flags_out"
-        ).collect()
-        n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    finally:
-        q.stop()
+    rows, q = jobs.collect_stream(seq.select("user_id", "event_id", "seq", "late"))
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
 
     assert n_batches == 3
     assert sorted((r.user_id, r.seq, r.event_id, r.late) for r in rows) == [
@@ -500,73 +479,26 @@ def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
     ]
 
 
-def test_causal_sequence_stream_rocksdb_state(spark, stream_dir):
-    """The per-key causal sequencer runs with its state in RocksDB
-    (session.enable_rocksdb_state) — the provider that makes 100 GB+
-    streaming state practical — with the same gapless-sequence result as
-    the default heap-backed store, and the progress metrics prove RocksDB
-    actually held the state."""
-    from distributed_causal_stream_processing_spark.io import load
-    from distributed_causal_stream_processing_spark.session import enable_rocksdb_state
-    from distributed_causal_stream_processing_spark.streaming import causal, jobs
-
-    enable_rocksdb_state(spark)
-    try:
-        events = jobs.events_stream(spark, stream_dir, watermark="1 day")
-        seq = causal.causal_sequence_stream(events)
-        q = (
-            seq.writeStream.format("memory")
-            .queryName("causal_rocksdb_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.sql("SELECT user_id, seq FROM causal_rocksdb_out").collect()
-            progress = q.lastProgress
-        finally:
-            q.stop()
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
-
-    # RocksDB-specific metrics appear in stateOperators only when the
-    # RocksDB provider is the one backing the query's state.
-    state_ops = progress["stateOperators"]
-    assert state_ops, "no stateful operator in progress"
-    assert any(
-        k.startswith("rocksdb") for k in state_ops[0].get("customMetrics", {})
-    ), f"RocksDB metrics absent: {sorted(state_ops[0].get('customMetrics', {}))[:5]}"
-
-    assert len(rows) == load(spark, SF_SMOKE, "events").count()
-    by_user: dict[int, list[int]] = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append(r.seq)
-    for user, seqs in by_user.items():
-        assert sorted(seqs) == list(range(1, len(seqs) + 1)), f"user {user} gap"
-
-
 def test_causal_sequence_stream(spark, stream_dir):
     """Per-key sequences are 1..n, gapless, exactly one per event,
-    accumulated correctly across micro-batches."""
+    accumulated correctly across micro-batches — with the state in
+    RocksDB, the provider run_stream's state rule ships (the one that
+    makes 100 GB+ streaming state practical), and the progress metrics
+    prove RocksDB actually held the state."""
     from distributed_causal_stream_processing_spark.io import load
     from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
     events = jobs.events_stream(spark, stream_dir, watermark="1 day")
     seq = causal.causal_sequence_stream(events)
-    q = (
-        seq.writeStream.format("memory")
-        .queryName("causal_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT user_id, event_id, seq FROM causal_out").collect()
-    finally:
-        q.stop()
+    rows, q = jobs.collect_stream(seq.select("user_id", "event_id", "seq"))
+
+    # RocksDB-specific metrics appear in stateOperators only when the
+    # RocksDB provider is the one backing the query's state.
+    state_ops = q.lastProgress["stateOperators"]
+    assert state_ops, "no stateful operator in progress"
+    assert any(
+        k.startswith("rocksdb") for k in state_ops[0].get("customMetrics", {})
+    ), f"RocksDB metrics absent: {sorted(state_ops[0].get('customMetrics', {}))[:5]}"
 
     n_events = load(spark, SF_SMOKE, "events").count()
     assert len(rows) == n_events  # each event sequenced exactly once
@@ -649,6 +581,7 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path):
     from distributed_causal_stream_processing_spark.operators.text import (
         with_quality_score,
     )
+    from distributed_causal_stream_processing_spark.streaming import jobs
 
     docs = load(spark, SF_SMOKE, "documents")
     stream_dir = str(tmp_path / "docs_stream")
@@ -668,20 +601,7 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path):
         .withColumn("text_md5", F.md5("text"))
         .dropDuplicates(["text_md5"])
     )
-    q = (
-        kept.writeStream.format("memory")
-        .queryName("stream_quality_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r.text_md5
-            for r in spark.sql("SELECT text_md5 FROM stream_quality_out").collect()
-        }
-    finally:
-        q.stop()
+    got = {r.text_md5 for r in jobs.collect_stream(kept.select("text_md5"))[0]}
 
     want = {
         r.text_md5
@@ -731,6 +651,7 @@ def test_streaming_ingest_pipeline_to_shards(spark, tmp_path):
         chunk_documents,
         with_quality_score,
     )
+    from distributed_causal_stream_processing_spark.streaming import jobs
 
     docs = load(spark, SF_SMOKE, "documents")
     stream_dir = str(tmp_path / "docs_in")
@@ -746,17 +667,12 @@ def test_streaming_ingest_pipeline_to_shards(spark, tmp_path):
     chunks = chunk_documents(
         with_quality_score(stream).filter(F.col("quality_score") >= 0.5)
     )
-    q = (
+    jobs.run_stream(
         chunks.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     got = sorted(
         map(tuple, spark.read.parquet(out_dir).select(
@@ -782,23 +698,14 @@ def test_pattern_match_stream_matches_batch(spark, tmp_path):
     d = str(tmp_path / "ordered_events")
     jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=4)
 
-    stream = jobs.events_stream(spark, d, watermark="35 days")
-    q = (
-        causal.pattern_match_stream(stream)
-        .writeStream.format("memory")
-        .queryName("pattern_out")
-        .outputMode("append")
-        .start()
+    matches = causal.pattern_match_stream(jobs.events_stream(spark, d, watermark="35 days"))
+    emitted, _ = jobs.collect_stream(matches)
+    rows = (
+        spark.createDataFrame(emitted, matches.schema)
+        .groupBy("user_id")
+        .agg(*[F.max(c).alias(c) for c in ("n_events", "n_matches", "n_late")])
+        .collect()
     )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            """SELECT user_id, max(n_events) AS n_events,
-                      max(n_matches) AS n_matches, max(n_late) AS n_late
-               FROM pattern_out GROUP BY user_id"""
-        ).collect()
-    finally:
-        q.stop()
 
     got_matches = {r.user_id: r.n_matches for r in rows}
     assert sum(r.n_late for r in rows) == 0  # ordered replay -> nothing late
@@ -934,18 +841,13 @@ def test_update_mode_emits_incremental_group_changes(spark, stream_dir):
     def capture(df, batch_id):
         updates.extend((batch_id, r.user_id, r.n) for r in df.collect())
 
-    q = (
+    jobs.run_stream(
         jobs.events_stream(spark, stream_dir, watermark="35 days")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.outputMode("update")
         .foreachBatch(capture)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     last: dict[int, int] = {}
     for _, uid, n in sorted(updates):
@@ -1006,19 +908,9 @@ def test_append_mode_emits_only_finalized_windows(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("append_windows_out")
-        .outputMode("append")
-        .start()
+    rows, _ = jobs.collect_stream(
+        agg.select(F.col("w.start").alias("ws"), "event_type", "n_events")
     )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT w.start AS ws, event_type, n_events FROM append_windows_out"
-        ).collect()
-    finally:
-        q.stop()
     batch = (
         load(spark, SF_SMOKE, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1503,9 +1395,7 @@ def test_streaming_ivfadc_matches_batch(spark, tmp_path):
     qdir = _stage_eval_query_stream(spark, tmp_path)
 
     out = str(tmp_path / "results")
-    sink = jobs.run_streaming_ivfadc(
-        spark, qdir, SF_SMOKE, out, str(tmp_path / "ck"), k=1
-    )
+    sink = jobs.run_streaming_ivfadc(spark, qdir, SF_SMOKE, out, k=1)
     got = {
         (r.query_id, r.neighbor_id, r.adc_dist)
         for r in sink.read_all(spark).collect()
@@ -1545,7 +1435,6 @@ def test_streaming_ivfadc_trained_matches_batch(spark, tmp_path):
         qdir,
         SF_SMOKE,
         str(tmp_path / "results"),
-        str(tmp_path / "ck"),
         k=1,
         trained=True,
     )
@@ -1592,7 +1481,6 @@ def test_streaming_ivfadc_from_saved_store_matches_batch(spark, tmp_path):
         qdir,
         SF_SMOKE,
         str(tmp_path / "results"),
-        str(tmp_path / "ck"),
         k=1,
         index_dir=idx,
     )
@@ -1879,6 +1767,47 @@ _STATE_CONFS = (
 )
 
 
+def test_run_stream_propagates_batch_error_and_restores_state(spark, stream_dir, tmp_path):
+    """A foreachBatch callback that raises fails run_stream with its
+    error, the query is stopped (no active stream is left behind), and
+    every conf the state rule set is restored — including a shuffle
+    partition count that differs from the rule's."""
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    def fail(df, batch_id):
+        raise RuntimeError(f"batch {batch_id} failed on purpose")
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        before = {k: spark.conf.get(k, None) for k in _STATE_CONFS}
+        with pytest.raises(Exception, match="failed on purpose"):
+            jobs.run_stream(
+                jobs.events_stream(spark, stream_dir)
+                .writeStream.foreachBatch(fail)
+                .option("checkpointLocation", str(tmp_path / "checkpoint"))
+            )
+        assert spark.streams.active == []
+        assert {k: spark.conf.get(k, None) for k in _STATE_CONFS} == before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_collect_stream_returns_rows_and_progress(spark, stream_dir):
+    """A memory-sink run returns every row its stream held; the stopped
+    query's progress is still readable, and the sink's table is gone."""
+    from distributed_causal_stream_processing_spark.io import load
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    rows, q = jobs.collect_stream(jobs.events_stream(spark, stream_dir).select("event_id"))
+    want = [r.event_id for r in load(spark, SF_SMOKE, "events").select("event_id").collect()]
+    assert sorted(r.event_id for r in rows) == sorted(want)
+    assert not q.isActive
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(want)
+    assert q.lastProgress["name"] == q.name
+    assert not spark.catalog.tableExists(q.name)
+
+
 def test_recommended_state_sizes_partitions_to_cores(spark, stream_dir):
     """Under recommended_streaming_state the sequencer's stateful
     operator gets one state partition per core, and every conf the
@@ -1925,17 +1854,12 @@ def test_idempotent_sink_commits_batch_in_one_job(spark, stream_dir, tmp_path):
         sink.process(df, batch_id)
         jobs_per_batch[batch_id] = len(sc.statusTracker().getJobIdsForGroup(group))
 
-    q = (
+    jobs.run_stream(
         causal.causal_sequence_stream(jobs.events_stream(spark, stream_dir))
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", str(tmp_path / "checkpoint"))
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert len(jobs_per_batch) >= 4
     assert set(jobs_per_batch.values()) == {1}, jobs_per_batch
     for b in jobs_per_batch:
@@ -1951,9 +1875,6 @@ def test_stateful_stream_restarts_after_crash_past_sink_marker(spark, tmp_path):
     sequencer's state stores commit. Every event then lands exactly once
     with the batch oracle's seq."""
     from distributed_causal_stream_processing_spark import all_queries
-    from distributed_causal_stream_processing_spark.session import (
-        recommended_streaming_state,
-    )
     from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
     staged = str(tmp_path / "staged")
@@ -1968,20 +1889,14 @@ def test_stateful_stream_restarts_after_crash_past_sink_marker(spark, tmp_path):
             raise RuntimeError(f"injected crash after the marker of batch {batch_id}")
 
     def run() -> None:
-        with recommended_streaming_state(spark):
-            q = (
-                causal.causal_sequence_stream(
-                    jobs.events_stream(spark, staged, watermark="35 days")
-                )
-                .writeStream.foreachBatch(process)
-                .option("checkpointLocation", str(tmp_path / "checkpoint"))
-                .outputMode("append")
-                .start()
+        jobs.run_stream(
+            causal.causal_sequence_stream(
+                jobs.events_stream(spark, staged, watermark="35 days")
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", str(tmp_path / "checkpoint"))
+            .outputMode("append")
+        )
 
     with pytest.raises(Exception, match="injected crash"):
         run()

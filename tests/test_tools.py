@@ -505,3 +505,14 @@ def test_parity_one_rejects_unknown_names_before_spark(monkeypatch, capsys):
     assert parity_one.main(["q_sim_pq", "q_no_such_query"]) == 2
     err = capsys.readouterr().err
     assert "q_no_such_query" in err and "q_sim_pq " not in err
+
+
+def test_coverage_extras_section_matches_registry():
+    """COVERAGE.md's extensions inventory is exactly what
+    tools/gen_extras.py renders from the live registry: a query added,
+    removed or re-documented without regenerating the table fails here.
+    No Spark session is started."""
+    from tools import gen_extras
+
+    with open(gen_extras.COVERAGE) as fh:
+        assert gen_extras.committed(fh.read()) == gen_extras.render()

@@ -32,8 +32,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.01")
 def main() -> None:
     from distributed_causal_stream_processing_spark import all_queries
     from distributed_causal_stream_processing_spark.benchlib import (
-        drain_listener_bus,
         execution_exchange_volume,
+        execution_window,
     )
     from distributed_causal_stream_processing_spark.session import get_spark
 
@@ -41,21 +41,16 @@ def main() -> None:
     out_dir = os.path.join(REPO_DIR, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name="dcsp-dump-plan", cpus=8)
+    spark = get_spark(app_name="dcsp-dump-plan")
     queries = all_queries()
     store = spark._jsparkSession.sharedState().statusStore()
     for name in names:
-        fn = queries[name]
-        drain_listener_bus(spark)
-        lst = store.executionsList()
-        mark = lst.apply(lst.size() - 1).executionId() if lst.size() else -1
-        df = fn(spark, SF_DIR)
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        df.collect()
-        drain_listener_bus(spark)
-        lst = store.executionsList()
+        with execution_window(spark) as execs:
+            df = queries[name](spark, SF_DIR)
+            formatted = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            df.collect()
         chunks = [
             f"# {name} — {suffix} (plans at {SF_DIR})",
             "",
@@ -64,10 +59,7 @@ def main() -> None:
             formatted,
         ]
         total_rec = 0
-        for i in range(lst.size()):
-            e = lst.apply(i)
-            if e.executionId() <= mark:
-                continue
+        for e in execs:
             rec, nbytes = execution_exchange_volume(store, e.executionId())
             total_rec += rec
             chunks += [

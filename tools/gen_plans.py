@@ -23,6 +23,10 @@ window detection likewise scans every execution in the chain, so a
 broadcast join inside a checkpointed superstep still shows.
 
 Usage: python tools/gen_plans.py  (writes PLANS.md at the repo root)
+
+The session takes get_spark's host CPU default; shuffle-record counts
+of partial aggregates depend on the partition count, so regenerate the
+committed file with SPARK_GRAFT_CPUS=8, the count it was written at.
 """
 
 from __future__ import annotations
@@ -51,40 +55,9 @@ _PYTHON_RE = re.compile(
 )
 
 
-def _executions_since(store, mark: int) -> list:
-    """All SQL executions with executionId > mark, robust to the UI
-    store evicting OLD entries (spark.sql.ui.retainedExecutions): new
-    executions are always present immediately after they run."""
-    lst = store.executionsList()
-    out = []
-    for i in range(lst.size()):
-        e = lst.apply(i)
-        if e.executionId() > mark:
-            out.append(e)
-    return out
-
-
-def _last_execution_id(store) -> int:
-    lst = store.executionsList()
-    return lst.apply(lst.size() - 1).executionId() if lst.size() else -1
-
-
-def _drain_listener_bus(spark) -> None:
-    """Block until the async listener bus has delivered every queued
-    event. The SQLAppStatusStore is fed by a LISTENER — snapshotting it
-    right after collect() can miss executions (undercounted exchanges)
-    or, at mark time, attribute a prior query's trailing executions to
-    the next row (ADVICE r14). Spark 4's LiveListenerBus has a no-arg
-    waitUntilEmpty(); older builds take a timeout — try both."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    try:
-        bus.waitUntilEmpty()
-    except Exception:
-        bus.waitUntilEmpty(30_000)
-
-
 from distributed_causal_stream_processing_spark.benchlib import (  # noqa: E402
     execution_exchange_volume,
+    execution_window,
 )
 
 
@@ -98,14 +71,11 @@ def chain_plan_stats(spark, fn, sf_dir: str) -> dict:
     counts ReusedExchange nodes (a reused shuffle output, not a new
     write) so reuse is visible but never double counted."""
     store = spark._jsparkSession.sharedState().statusStore()
-    _drain_listener_bus(spark)  # flush the PRIOR query's trailing events
-    mark = _last_execution_id(store)
-    df = fn(spark, sf_dir)
-    # collect() executes df's OWN QueryExecution (a noop write would
-    # spawn a separate one), so AQE finalizes and codegen ids exist
-    df.collect()
-    _drain_listener_bus(spark)  # this query's executions must be stored
-    execs = _executions_since(store, mark)
+    with execution_window(spark) as execs:
+        # collect() executes the frame's OWN QueryExecution (a noop
+        # write would spawn a separate one), so AQE finalizes and
+        # codegen ids exist
+        fn(spark, sf_dir).collect()
     n_exchange = n_reused = 0
     shuffle_records = 0
     codegen = False
@@ -149,7 +119,7 @@ def main() -> None:
     from distributed_causal_stream_processing_spark import all_queries
     from distributed_causal_stream_processing_spark.session import get_spark
 
-    spark = get_spark(app_name="dcsp-plans", cpus=8)
+    spark = get_spark(app_name="dcsp-plans")
     rows = []
     for name, fn in sorted(all_queries().items()):
         s = chain_plan_stats(spark, fn, SF_DIR)

@@ -16,6 +16,7 @@ host shows roving interference windows (BASELINE.md), so single-shot
 numbers lie.
 
 Usage: python tools/profile_query.py [-n 2] [--sf DIR] q_a q_b ...
+(task slots: get_spark's host CPU default; SPARK_GRAFT_CPUS overrides)
 """
 
 from __future__ import annotations
@@ -35,19 +36,18 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("-n", type=int, default=2, help="passes (min kept)")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
     args = ap.parse_args()
 
     from distributed_causal_stream_processing_spark import all_queries
     from distributed_causal_stream_processing_spark.benchlib import (
-        drain_listener_bus,
         execution_exchange_volume,
+        execution_window,
         release_storage,
         warm_session,
     )
     from distributed_causal_stream_processing_spark.session import get_spark
 
-    spark = get_spark(app_name="dcsp-profile", cpus=args.cpus)
+    spark = get_spark(app_name="dcsp-profile")
     queries = all_queries()
     warm_session(spark, queries, args.sf)
     store = spark._jsparkSession.sharedState().statusStore()
@@ -57,23 +57,16 @@ def main() -> None:
         best = None
         for p in range(args.n):
             release_storage(spark, settle_s=0.5)
-            drain_listener_bus(spark)
-            lst = store.executionsList()
-            mark = lst.apply(lst.size() - 1).executionId() if lst.size() else -1
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            spark.sparkContext.setJobDescription(None)
-            drain_listener_bus(spark)
+            with execution_window(spark) as execs:
+                spark.sparkContext.setJobDescription(f"profile:{name}")
+                t0 = time.perf_counter()
+                df = fn(spark, args.sf)
+                t1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+                spark.sparkContext.setJobDescription(None)
             rows = []
-            lst = store.executionsList()
-            for i in range(lst.size()):
-                e = lst.apply(i)
-                if e.executionId() <= mark:
-                    continue
+            for e in execs:
                 sub = e.submissionTime()
                 comp = e.completionTime()
                 dur = (
