@@ -479,18 +479,26 @@ def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
     ]
 
 
-def test_causal_sequence_stream(spark, stream_dir):
-    """Per-key sequences are 1..n, gapless, exactly one per event,
-    accumulated correctly across micro-batches — with the state in
-    RocksDB, the provider run_stream's state rule ships (the one that
-    makes 100 GB+ streaming state practical), and the progress metrics
-    prove RocksDB actually held the state."""
+def test_causal_sequence_stream_rocksdb_state(spark, stream_dir):
+    """The per-key causal sequencer runs with its state in RocksDB — the
+    provider run_stream's state rule ships, the one that makes 100 GB+
+    streaming state practical — even when the session names the
+    heap-backed provider; the progress metrics prove RocksDB actually
+    held the state, the sequences stay gapless, and the session's own
+    provider is back in force after the run."""
     from distributed_causal_stream_processing_spark.io import load
     from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
-    events = jobs.events_stream(spark, stream_dir, watermark="1 day")
-    seq = causal.causal_sequence_stream(events)
-    rows, q = jobs.collect_stream(seq.select("user_id", "event_id", "seq"))
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    spark.conf.set(provider, hdfs)
+    try:
+        events = jobs.events_stream(spark, stream_dir, watermark="1 day")
+        seq = causal.causal_sequence_stream(events)
+        rows, q = jobs.collect_stream(seq.select("user_id", "seq"))
+        assert spark.conf.get(provider) == hdfs
+    finally:
+        spark.conf.unset(provider)
 
     # RocksDB-specific metrics appear in stateOperators only when the
     # RocksDB provider is the one backing the query's state.
@@ -499,6 +507,24 @@ def test_causal_sequence_stream(spark, stream_dir):
     assert any(
         k.startswith("rocksdb") for k in state_ops[0].get("customMetrics", {})
     ), f"RocksDB metrics absent: {sorted(state_ops[0].get('customMetrics', {}))[:5]}"
+
+    assert len(rows) == load(spark, SF_SMOKE, "events").count()
+    by_user: dict[int, list[int]] = {}
+    for r in rows:
+        by_user.setdefault(r.user_id, []).append(r.seq)
+    for user, seqs in by_user.items():
+        assert sorted(seqs) == list(range(1, len(seqs) + 1)), f"user {user} gap"
+
+
+def test_causal_sequence_stream(spark, stream_dir):
+    """Per-key sequences are 1..n, gapless, exactly one per event,
+    accumulated correctly across micro-batches."""
+    from distributed_causal_stream_processing_spark.io import load
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    events = jobs.events_stream(spark, stream_dir, watermark="1 day")
+    seq = causal.causal_sequence_stream(events)
+    rows, _ = jobs.collect_stream(seq.select("user_id", "event_id", "seq"))
 
     n_events = load(spark, SF_SMOKE, "events").count()
     assert len(rows) == n_events  # each event sequenced exactly once
