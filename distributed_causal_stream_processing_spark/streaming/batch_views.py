@@ -12,28 +12,27 @@ Mapping:
                               [streaming: keyed state, streaming/causal.py]
 - windowed view maintenance → `F.window` / `F.session_window` groupBys
 - idempotent write / dedup  → `dropDuplicates(event_id)`
-                              [streaming: dropDuplicatesWithinWatermark +
-                              foreachBatch idempotent sink, streaming/sinks.py]
+                              [streaming: the same transform; the
+                              effectively-once sinks, streaming/jobs.py]
 
-Every query here is expressible in batch SQL, so each carries a DuckDB
-oracle; the true streaming executions (readStream → writeStream) of the
-same logic live in `streaming/jobs.py` and are semantic-tested in
-tests/test_streaming.py.
+Every query here carries a DuckDB oracle. Each windowed, dedup and
+join view is ONE transform (``window_totals``, ``session_totals``,
+``dedup_events``, ``enrich_events``) that runs on a batch or a
+streaming frame: the query applies it to ``load(...)``, its streaming
+twin to ``jobs.events_stream(...)``, and tests/test_streaming.py checks
+each twin, and the causal views' streaming/causal.py twins, against
+the query's own oracle.
 
 events.ts is parquet timestamp[ns]; Spark truncates to µs. The data is
 µs-granular (verified: no sub-µs components), so DuckDB oracles CAST to
 µs TIMESTAMP for exact alignment.
 
-Float-rounding risk note (review, round 9): q_stream_tumbling /
-q_stream_sliding / q_stream_stateful_agg compare round(sum(double), 2)
-across engines whose summation associations differ — a true sum within
-1 ULP of an x.xx5 boundary could round apart. Kept as-is deliberately:
-these three have been value-hash green for 8 rounds at three scales
-(24+ driver/sweep runs), the fixture's 2-dp values keep true sums off
-the boundary grid, and tools/sweep_parity.py re-checks the class at
-arbitrary scale whenever rounding or fixtures change. The skew-safe
-sibling (q_stream_stateful_agg_skewsafe) shows the quantized-integer
-form to reach for if a fixture generation ever lands on the grid.
+round(sum(double), 2) (q_stream_tumbling / _sliding / _stateful_agg)
+could round apart across engines for a true sum within 1 ULP of an
+x.xx5 boundary. Measured: the batch queries and the streaming twins,
+whose sums merge across micro-batches, match DuckDB's round(sum, 2) at
+sf0.001 and sf0.01; tools/sweep_parity.py re-checks any scale, and
+q_stream_stateful_agg_skewsafe's integer cents are the fallback.
 
 Scale notes (100 TB): tumbling/sliding window aggs shuffle one partial
 row per (window, key) per map partition — the 100 TB-safe shape. The
@@ -65,19 +64,16 @@ from distributed_causal_stream_processing_spark.plans.registry import query
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling window count/sum per event_type (windowed view)."""
-    e = load(spark, sf_dir, "events")
+    return window_totals(load(spark, sf_dir, "events"))
+
+
+def window_totals(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """Count and round(sum(value), 2) per event_type and 1-hour window,
+    sliding every ``slide`` (tumbling if None); complete mode on a stream."""
     return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+        events.groupBy(F.window("ts", "1 hour", slide).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
     )
 
 
@@ -102,20 +98,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour window sliding every 30 min (each event lands in 2 windows)."""
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return window_totals(load(spark, sf_dir, "events"), "30 minutes")
 
 
 @query(
@@ -151,9 +134,14 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output keys on (session_start, last_event_ts) — both defined by the
     event timestamps, independent of the gap-padded window end.
     """
-    e = load(spark, sf_dir, "events")
+    return session_totals(load(spark, sf_dir, "events"))
+
+
+def session_totals(events: DataFrame) -> DataFrame:
+    """First/last event time and count of each user's 15-minute-gap
+    session; complete mode on a stream, where later batches merge them."""
     return (
-        e.groupBy(F.session_window("ts", "15 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "15 minutes").alias("w"), "user_id")
         .agg(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("last_event_ts"),
@@ -180,17 +168,18 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Models the reference's core guarantee: replayed input (here the
     stream unioned with itself) deduplicated on the unique event id
-    restores effectively-once output. Streaming form:
-    `dropDuplicatesWithinWatermark` (streaming/jobs.py).
+    restores effectively-once output. The streaming twin runs the same
+    transform over events staged twice.
     """
     e = load(spark, sf_dir, "events")
-    replayed = e.unionAll(e)  # simulate at-least-once redelivery
-    return replayed.dropDuplicates(["event_id"]).select(
-        "event_id",
-        "ts",
-        "user_id",
-        "event_type",
-        F.round("value", 2).alias("value"),
+    return dedup_events(e.unionAll(e))  # simulate at-least-once redelivery
+
+
+def dedup_events(events: DataFrame) -> DataFrame:
+    """One row per event_id (append mode on a stream, state unbounded;
+    ``jobs.run_dedup_stream_bounded`` is the watermark-bounded form)."""
+    return events.dropDuplicates(["event_id"]).select(
+        "event_id", "ts", "user_id", "event_type", F.round("value", 2).alias("value")
     )
 
 
@@ -317,7 +306,9 @@ def q_stream_stateful_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Batch analogue of the reference's per-key *view* (materialized
     state updated by each event): row N shows the view contents after
-    event N. Streaming form: update-mode groupBy agg (streaming/jobs.py).
+    event N. No per-event streaming twin exists: the running window is
+    not time-based, so a stream cannot run it. The streaming per-key view
+    is tests/test_streaming.py::test_update_mode_emits_incremental_group_changes.
     """
     e = load(spark, sf_dir, "events")
     w = (
@@ -449,20 +440,16 @@ def running_state_skewsafe(
     """,
 )
 def q_stream_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment: events joined to the customer dim.
+    """Stream-static enrichment: events joined to the customer dim."""
+    return enrich_events(load(spark, sf_dir, "events"), load(spark, sf_dir, "customer"))
 
-    Batch form of the stream-static join (the dim is broadcast — at
-    100 TB of events the stream side never shuffles).
-    """
-    e = load(spark, sf_dir, "events")
-    c = load(spark, sf_dir, "customer")
-    return e.join(F.broadcast(c), e.user_id == c.c_custkey).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.round("value", 2).alias("value"),
-        "c_name",
-        "c_mktsegment",
+
+def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Events joined to their customer row; the dim is broadcast, so at
+    100 TB the event side never shuffles (stateless on a stream)."""
+    return events.join(F.broadcast(customer), events.user_id == customer.c_custkey).select(
+        "event_id", "user_id", "event_type", F.round("value", 2).alias("value"),
+        "c_name", "c_mktsegment",
     )
 
 
@@ -594,9 +581,10 @@ def q_causal_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``seq`` is the merged happened-before sequence across both sources,
     ordered by (ts, event_id) regardless of arrival log. Within every
     key, both sources' src_offset subsequences ascend monotonically in
-    seq order — the defining property of a causal merge (asserted in
-    tests/test_streaming.py against the true-streaming twin
-    ``run_multi_source_causal_stream`` on the same staged input).
+    seq order — the defining property of a causal merge (asserted on
+    this query's rows in tests/test_streaming.py, where the
+    true-streaming twin ``run_multi_source_causal_stream`` is checked
+    against this query's oracle).
 
     Scale — ONE shuffle, not one per source: a per-source row_number
     would need a (source, user_id) partitioning alongside the merge's

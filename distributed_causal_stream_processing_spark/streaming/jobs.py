@@ -11,18 +11,22 @@ this module runs the same logic as real unbounded jobs:
   state partition per core), drains what its sources hold and always
   stops it; ``collect_stream`` returns a memory sink's rows through it.
   The state rule is therefore applied at one site, for every query.
-- ``run_tumbling_stream`` / ``run_dedup_stream`` / ...: streaming
-  counterparts of q_stream_tumbling / q_stream_dedup / ..., each a
-  streaming DataFrame shaped to its output columns and collected.
+- The streaming twin of a windowed, dedup or join view is its
+  ``batch_views`` transform over ``events_stream(...)``, collected:
+  ``collect_stream(window_totals(events_stream(...)), "complete")``.
+  The ``run_*`` runners build the jobs with no shared transform: the
+  causal merge and deps twins (keyed state, causal.py), HLL distinct,
+  stream-stream joins, bounded dedup and chain assignment.
 - ``IdempotentForeachBatchSink``: the reference's effectively-once
   contract — idempotent write keyed by batch id, commit marker written
   AFTER the data (write-then-commit), so at-least-once redelivery of a
   batch cannot duplicate output. Every sink runner drains its source
   through ``_run_sink``, checkpointed under the sink's root.
 
-Tests (tests/test_streaming.py) assert the semantic invariants the
-oracle can't: late-data drop past the watermark, replay idempotence,
-per-key monotone sequences across micro-batches.
+Tests (tests/test_streaming.py) check each twin against its view's
+DuckDB oracle, and assert what no oracle states: late-data drop past
+the watermark, replay idempotence, per-key monotone sequences across
+micro-batches.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ import datetime
 import json
 import os
 import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
@@ -98,28 +103,23 @@ def collect_stream(
 ) -> tuple[list[Row], StreamingQuery]:
     """Run ``df`` into a memory sink through ``run_stream``; returns its
     rows and the stopped query. The sink's table gets a fresh name and
-    is dropped after the collect, so no two runs share a table and the
-    session holds no finished run's rows."""
+    its checkpoint a fresh temp dir, both removed after the collect
+    whether or not the run raised: Spark's own temporary checkpoint
+    outlives a failed query."""
     spark = df.sparkSession
     name = f"collect_{uuid.uuid4().hex}"
-    q = run_stream(df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    checkpoint = tempfile.mkdtemp(prefix="collect-")
     try:
+        q = run_stream(
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+        )
         return spark.table(name).collect(), q
     finally:
         spark.catalog.dropTempView(name)
-
-
-def run_tumbling_stream(spark: SparkSession, stream_dir: str) -> list:
-    """Streaming q_stream_tumbling: 1h windows per event_type, complete mode."""
-    agg = (
-        events_stream(spark, stream_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return collect_stream(
-        agg.select(F.col("w.start").alias("window_start"), "event_type", "n_events"),
-        "complete",
-    )[0]
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
@@ -139,19 +139,6 @@ def run_windowed_distinct_stream(spark: SparkSession, stream_dir: str) -> list:
     return collect_stream(
         agg.select(F.col("w.start").alias("window_start"), "n_users"), "complete"
     )[0]
-
-
-def run_dedup_stream(spark: SparkSession, stream_dir: str, watermark: str = "35 days") -> list:
-    """Streaming q_stream_dedup: exactly-once by event_id across batches.
-
-    Default watermark exceeds the fixture's 30-day span so replayed
-    (old) events are deduplicated rather than dropped as late — this
-    test isolates the dedup guarantee; late-drop is covered separately.
-    """
-    deduped = events_stream(spark, stream_dir, watermark=watermark).dropDuplicates(
-        ["event_id"]
-    )
-    return collect_stream(deduped.select("event_id"))[0]
 
 
 def run_dedup_stream_bounded(
@@ -188,7 +175,7 @@ class _CommitMarkers:
     _SnapshotTable sinks CdcMergeSink and transactional.ParquetMergeTable,
     the streaming dedup indexes, PostingsIngestSink) — ONE
     implementation of the core crash-safety contract, so a hardening
-    change (e.g. fsync before the marker write, atomic marker creation)
+    change (atomic marker creation; fsync before it would be the next)
     lands in every sink at once instead of by copy-paste discipline."""
 
     def _init_markers(self, root: str) -> None:
@@ -243,9 +230,14 @@ class _CommitMarkers:
 
     def _write_marker(self, batch_id: int, **payload) -> None:
         # written only AFTER the batch's data write returned — the
-        # ordering every reader in this module relies on
-        with open(self._marker(batch_id), "w") as fh:
+        # ordering every reader in this module relies on. The JSON goes
+        # to a temp name outside _commits/ (whose names must all parse
+        # as batch ids) and is renamed in, so a failed write never
+        # leaves an empty marker that counts as committed
+        tmp = self.commits_dir + ".tmp"
+        with open(tmp, "w") as fh:
             json.dump({"batch_id": batch_id, **payload}, fh)
+        os.replace(tmp, self._marker(batch_id))
 
 
 class _SnapshotTable(_CommitMarkers):
@@ -463,31 +455,6 @@ def run_multi_source_causal_stream(
     ]
     seq = causal_sequence_stream(streams[0].unionByName(streams[1]))
     return collect_stream(seq.select("user_id", "event_id", "ts", "seq", "late"))[0]
-
-
-def run_session_window_stream(
-    spark: SparkSession, stream_dir: str, watermark: str = "35 days"
-) -> list:
-    """Streaming q_stream_session: per-user session windows with a
-    15-minute inactivity gap — the reference's per-key session view.
-    Complete mode; sessions merge as late-arriving members extend them.
-    Fixture-spanning watermark for the same reason as the other jobs:
-    staged micro-batches are time-unordered.
-    """
-    agg = (
-        events_stream(spark, stream_dir, watermark=watermark)
-        .groupBy(F.session_window("ts", "15 minutes").alias("sw"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return collect_stream(
-        agg.select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        ),
-        "complete",
-    )[0]
 
 
 class CdcMergeSink(_SnapshotTable):
@@ -723,21 +690,6 @@ def run_chain_assign_stream(
     chains = chain_assign_stream(events_stream(spark, stream_dir, watermark=watermark), gap_us)
     return collect_stream(
         chains.filter("event_id >= 0").select("user_id", "event_id", "root_id", "depth")
-    )[0]
-
-
-def run_sliding_stream(spark: SparkSession, stream_dir: str) -> list:
-    """Streaming q_stream_sliding: 1h windows sliding every 30 min per
-    event_type, complete mode — each event lands in two overlapping
-    windows, maintained incrementally across micro-batches."""
-    agg = (
-        events_stream(spark, stream_dir)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return collect_stream(
-        agg.select(F.col("w.start").alias("window_start"), "event_type", "n_events"),
-        "complete",
     )[0]
 
 

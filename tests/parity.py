@@ -61,8 +61,14 @@ def _canon_rows(cols: list[str], rows) -> list[tuple[str, ...]]:
 def compare(spark_df, con, oracle: str) -> int:
     """Raises on any mismatch; returns the (matching) row count so
     callers don't re-execute the plan just to record it."""
-    s_cols = [c.lower() for c in spark_df.columns]
-    s_rows = [tuple(r) for r in spark_df.collect()]
+    return compare_rows(spark_df.columns, spark_df.collect(), con, oracle)
+
+
+def compare_rows(cols: list[str], rows, con, oracle: str) -> int:
+    """``compare`` for rows already collected (a streaming twin's
+    memory-sink rows): ``cols`` names the values of each row in order."""
+    s_cols = [c.lower() for c in cols]
+    s_rows = [tuple(r) for r in rows]
     res = con.execute(oracle)
     d_cols = [d[0].lower() for d in res.description]
     d_rows = res.fetchall()

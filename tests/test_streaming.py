@@ -1,8 +1,8 @@
-"""Semantic tests for the true streaming layer — the invariants the
-DuckDB oracle cannot check (SURVEY §5.2.4):
+"""Tests for the true streaming layer (SURVEY §5.2.4):
 
-- streaming results == batch results for windowed aggregation;
-- dedup under replay (at-least-once → effectively-once);
+- each registered view's streaming twin == its DuckDB oracle, so the
+  windowed, session, dedup-under-replay, join and causal views are
+  checked on the streaming side too;
 - idempotent foreachBatch sink: reprocessing a batch adds no rows;
 - watermark drops data later than the bound;
 - causal sequencer: per-key monotone, gapless sequences across
@@ -30,39 +30,106 @@ def stream_dir(spark, tmp_path_factory):
     return d
 
 
-def test_tumbling_stream_matches_batch(spark, stream_dir):
-    from distributed_causal_stream_processing_spark.io import load
-    from distributed_causal_stream_processing_spark.streaming import jobs
+@pytest.fixture(scope="module")
+def smoke_duck():
+    import duckdb
 
-    got = {
-        (r.window_start, r.event_type): r.n_events
-        for r in jobs.run_tumbling_stream(spark, stream_dir)
+    from tests.parity import register_duck_views
+
+    con = duckdb.connect()
+    register_duck_views(con, SF_SMOKE)
+    yield con
+    con.close()
+
+
+def _stage_batches(d, frames):
+    """Write each frame as one parquet file under ``d``, mtimes
+    ascending, so the file source replays them one micro-batch each,
+    in order."""
+    import glob
+    import time
+
+    seen: set[str] = set()
+    for i, df in enumerate(frames):
+        df.coalesce(1).write.mode("overwrite" if i == 0 else "append").parquet(d)
+        new = set(glob.glob(os.path.join(d, "part-*.parquet"))) - seen
+        seen |= new
+        t = time.time() + 1000 * i
+        for f in new:
+            os.utime(f, (t, t))
+
+
+def _twin_rows(name, spark, stream_dir, tmp_path):
+    """Collected rows of the streaming twin of registered view ``name``:
+    its batch_views transform over ``jobs.events_stream``, or for the
+    causal views the keyed sequencer over a time-ordered staging (the
+    replay order in which the online sequence equals the batch one)."""
+    from distributed_causal_stream_processing_spark.io import load
+    from distributed_causal_stream_processing_spark.streaming import batch_views as bv
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    def collect(df, mode="append"):
+        return jobs.collect_stream(df, mode)[0]
+
+    def events(d=stream_dir, wm="10 minutes"):
+        return jobs.events_stream(spark, d, watermark=wm)
+
+    def replayed():  # staged twice = at-least-once redelivery
+        d, e = str(tmp_path / "replayed"), load(spark, SF_SMOKE, "events")
+        _stage_batches(d, [e, e])
+        return d
+
+    def ordered():
+        d = str(tmp_path / "ordered")
+        jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=3)
+        return d
+
+    def ordered_sources():
+        a, b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
+        jobs.stage_events_split_sources(spark, SF_SMOKE, a, b, n_files=3, time_ordered=True)
+        return a, b
+
+    twins = {
+        "q_stream_tumbling": lambda: collect(bv.window_totals(events()), "complete"),
+        "q_stream_sliding": lambda: collect(bv.window_totals(events(), "30 minutes"), "complete"),
+        "q_stream_session": lambda: collect(bv.session_totals(events(wm="35 days")), "complete"),
+        "q_stream_dedup": lambda: collect(bv.dedup_events(events(replayed(), "35 days"))),
+        "q_stream_join_enrich": lambda: collect(
+            bv.enrich_events(events(), load(spark, SF_SMOKE, "customer"))
+        ),
+        "q_causal_seq": lambda: collect(
+            causal.causal_sequence_stream(events(ordered(), "35 days"))
+            .select("user_id", "event_id", "ts", "seq", "late")
+        ),
+        "q_causal_deps": lambda: jobs.run_causal_deps_stream(spark, ordered()),
+        "q_causal_merge": lambda: jobs.run_multi_source_causal_stream(spark, *ordered_sources()),
     }
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {(r.w.start, r.event_type): r.n for r in batch}
-    assert got == want
+    return twins[name]()
 
 
-def test_dedup_stream_effectively_once(spark, stream_dir, tmp_path):
-    """Replayed input (staged twice) still yields each event_id once."""
-    from distributed_causal_stream_processing_spark.streaming import jobs
+@pytest.mark.parametrize(
+    "name",
+    ["q_stream_tumbling", "q_stream_sliding", "q_stream_session", "q_stream_dedup",
+     "q_stream_join_enrich", "q_causal_seq", "q_causal_deps", "q_causal_merge"],
+)
+def test_stream_twin_matches_oracle(spark, smoke_duck, stream_dir, tmp_path, name):
+    """The streaming twin of each registered view returns exactly the
+    rows of that view's DuckDB oracle: the windowed sums merged across
+    micro-batches, each replayed event once, every event enriched, and
+    for the causal views the online sequence (compared on the twin's
+    columns), with no row flagged late."""
+    from distributed_causal_stream_processing_spark import all_oracle_sql
+    from tests.parity import compare_rows
 
-    # stage the same events twice = at-least-once redelivery
-    replay_dir = str(tmp_path / "replayed")
-    from distributed_causal_stream_processing_spark.io import load
-
-    e = load(spark, SF_SMOKE, "events")
-    e.repartition(3).write.mode("overwrite").parquet(replay_dir)
-    e.repartition(2).write.mode("append").parquet(replay_dir)
-
-    rows = jobs.run_dedup_stream(spark, replay_dir)
-    ids = [r.event_id for r in rows]
-    assert len(ids) == len(set(ids)) == e.count()
+    rows = _twin_rows(name, spark, stream_dir, tmp_path)
+    assert rows
+    cols, oracle = list(rows[0].asDict()), all_oracle_sql()[name]
+    if "late" in cols:
+        assert not any(r.late for r in rows)
+        cols.remove("late")
+        rows = [tuple(r[c] for c in cols) for r in rows]
+        oracle = f"SELECT {', '.join(cols)} FROM ({oracle})"
+    compare_rows(cols, rows, smoke_duck, oracle)
 
 
 def test_effectively_once_sink_idempotent(spark, stream_dir, tmp_path):
@@ -194,23 +261,12 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     batch_b = [ev(200 + i, base + dt.timedelta(minutes=60 + i)) for i in range(30)]
     late = [ev(100, base - dt.timedelta(hours=3))]  # 3h behind max seen
 
-    import glob
-    import time as _time
-
     # Three files = three micro-batches, ordered by mtime. The watermark
     # advances one batch behind the data, so the late row goes in batch
     # 3 — by then the watermark (≈12:49) is live and must drop it.
-    seen: set[str] = set()
-    for i, rows in enumerate([batch_a, batch_b, late]):
-        mode = "overwrite" if i == 0 else "append"
-        spark.createDataFrame(rows, jobs.EVENT_SCHEMA).coalesce(1).write.mode(
-            mode
-        ).parquet(d)
-        new_files = set(glob.glob(os.path.join(d, "part-*.parquet"))) - seen
-        seen |= new_files
-        t = _time.time() + 1000 * i
-        for f in new_files:
-            os.utime(f, (t, t))
+    _stage_batches(
+        d, [spark.createDataFrame(b, jobs.EVENT_SCHEMA) for b in (batch_a, batch_b, late)]
+    )
 
     agg = (
         spark.readStream.schema(jobs.EVENT_SCHEMA)
@@ -339,52 +395,21 @@ def test_multi_source_causal_merge(spark, tmp_path):
             prev = k
 
 
-def test_multi_source_merge_stream_matches_batch_query(spark, tmp_path):
-    """VERDICT r06 item 5: the registered batch merge (q_causal_merge)
-    and the true-streaming twin (run_multi_source_causal_stream) agree
-    exactly on the same staged input when the replay is causally
-    ordered (time-ordered slices, aligned across both topics): same
-    per-key seq for every event, nothing late."""
+def test_multi_source_merge_stream_matches_batch_query(spark):
+    """The merge's defining property, on the registered batch merge
+    (q_causal_merge): within each key, each source's src_offset
+    subsequence ascends in merged-seq order. Its streaming twin
+    (run_multi_source_causal_stream) is checked against the same
+    query's oracle in test_stream_twin_matches_oracle."""
     from distributed_causal_stream_processing_spark import all_queries
-    from distributed_causal_stream_processing_spark.streaming import jobs
-
-    a, b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
-    jobs.stage_events_split_sources(spark, SF_SMOKE, a, b, n_files=3, time_ordered=True)
-    rows = jobs.run_multi_source_causal_stream(spark, a, b)
-    got = {(r.user_id, r.event_id): r.seq for r in rows}
-    assert not any(r.late for r in rows)
 
     batch = all_queries()["q_causal_merge"](spark, SF_SMOKE).collect()
-    want = {(r.user_id, r.event_id): r.seq for r in batch}
-    assert got == want
-
-    # and the merge's defining property: within each key, each source's
-    # src_offset subsequence ascends in merged-seq order
     per = {}
     for r in batch:
         per.setdefault((r.user_id, r.source), []).append((r.seq, r.src_offset))
     for (user, src), pairs in per.items():
         offs = [o for _, o in sorted(pairs)]
         assert offs == sorted(offs) == list(range(1, len(offs) + 1)), (user, src)
-
-
-def test_session_window_stream_matches_batch(spark, stream_dir):
-    """Streaming session windows equal the batch session_window result."""
-    from distributed_causal_stream_processing_spark.io import load
-    from distributed_causal_stream_processing_spark.streaming import jobs
-
-    got = {
-        (r.user_id, r.session_start, r.session_end): r.n_events
-        for r in jobs.run_session_window_stream(spark, stream_dir)
-    }
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy(F.session_window("ts", "15 minutes").alias("sw"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {(r.user_id, r.sw.start, r.sw.end): r.n for r in batch}
-    assert got == want and len(want) > 0
 
 
 def test_stream_stream_join_matches_batch(spark, stream_dir):
@@ -428,8 +453,6 @@ def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
 
     A key first seen in the last batch starts again at seq 1."""
     import datetime as dt
-    import glob
-    import time as _time
 
     from pyspark.sql import Row
 
@@ -453,16 +476,7 @@ def test_causal_sequence_stream_late_flags_across_batches(spark, tmp_path):
         [ev(13, 7, 3_000), ev(20, 8, 5_000)],  # redelivered 13; new key 8
     ]
     d = str(tmp_path / "late_flags")
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, jobs.EVENT_SCHEMA).coalesce(1).write.mode(
-            "overwrite" if i == 0 else "append"
-        ).parquet(d)
-        new_files = set(glob.glob(os.path.join(d, "part-*.parquet"))) - seen
-        seen |= new_files
-        t = _time.time() + 1000 * i  # mtime order = batch order
-        for f in new_files:
-            os.utime(f, (t, t))
+    _stage_batches(d, [spark.createDataFrame(b, jobs.EVENT_SCHEMA) for b in batches])
 
     seq = causal.causal_sequence_stream(jobs.events_stream(spark, d, watermark="1 day"))
     rows, q = jobs.collect_stream(seq.select("user_id", "event_id", "seq", "late"))
@@ -539,8 +553,8 @@ def test_causal_sequence_stream(spark, stream_dir):
 def test_dedup_bounded_state_effectively_once(spark, stream_dir, tmp_path):
     """dropDuplicatesWithinWatermark: replayed input still yields each
     event_id once, with dedup state bounded by the watermark (the
-    scale-correct variant of test_dedup_stream_effectively_once —
-    plain dropDuplicates state grows forever at sustained ingest)."""
+    scale-correct variant of q_stream_dedup's twin — plain
+    dropDuplicates state grows forever at sustained ingest)."""
     from distributed_causal_stream_processing_spark.io import load
     from distributed_causal_stream_processing_spark.streaming import jobs
 
@@ -808,20 +822,18 @@ def test_chain_assign_stream_matches_batch_recursion(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_available_now_trigger_self_terminates(spark, stream_dir):
+def test_available_now_trigger_self_terminates(spark, smoke_duck, stream_dir):
     """trigger(availableNow=True): process everything staged in bounded
     micro-batches, then stop WITHOUT external processAllAvailable — the
     backfill/catch-up mode an operator runs on a schedule. The query
     must terminate on its own and its final aggregate must equal the
-    batch result exactly."""
-    from distributed_causal_stream_processing_spark.io import load
+    q_stream_tumbling oracle exactly."""
+    from distributed_causal_stream_processing_spark import all_oracle_sql
     from distributed_causal_stream_processing_spark.streaming import jobs
+    from distributed_causal_stream_processing_spark.streaming.batch_views import window_totals
+    from tests.parity import compare_rows
 
-    agg = (
-        jobs.events_stream(spark, stream_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
+    agg = window_totals(jobs.events_stream(spark, stream_dir))
     q = (
         agg.writeStream.format("memory")
         .queryName("available_now_out")
@@ -835,20 +847,8 @@ def test_available_now_trigger_self_terminates(spark, stream_dir):
     finally:
         if q.isActive:
             q.stop()
-    got = {
-        (r.ws, r.event_type): r.n_events
-        for r in spark.sql(
-            "SELECT w.start AS ws, event_type, n_events FROM available_now_out"
-        ).collect()
-    }
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {(r.w.start, r.event_type): r.n for r in batch}
-    assert got == want
+    rows = spark.table("available_now_out").collect()
+    compare_rows(agg.columns, rows, smoke_duck, all_oracle_sql()["q_stream_tumbling"])
 
 
 def test_update_mode_emits_incremental_group_changes(spark, stream_dir):
@@ -890,37 +890,19 @@ def test_update_mode_emits_incremental_group_changes(spark, stream_dir):
     assert len(updates) > len(last), "no incremental updates observed"
 
 
-def test_sliding_stream_matches_batch(spark, stream_dir):
-    """Sliding windows (1h / 30min hop) maintained across micro-batches
-    equal the batch computation — every event counted in exactly its
-    two covering windows regardless of batch boundaries."""
-    from distributed_causal_stream_processing_spark.io import load
-    from distributed_causal_stream_processing_spark.streaming import jobs
-
-    got = {
-        (r.window_start, r.event_type): r.n_events
-        for r in jobs.run_sliding_stream(spark, stream_dir)
-    }
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {(r.w.start, r.event_type): r.n for r in batch}
-    assert got == want and len(want) > 0
-
-
-def test_append_mode_emits_only_finalized_windows(spark, tmp_path):
+def test_append_mode_emits_only_finalized_windows(spark, smoke_duck, tmp_path):
     """outputMode('append') on a watermarked windowed aggregation emits
     a window exactly once, only after the watermark passes its END —
     the finalized-result contract downstream consumers (a parquet
     sink, a report) need. With the time-ordered staged log + future
     sentinels the watermark provably passes every real window, so the
-    appended set must equal the batch aggregate exactly (sentinel
-    windows excluded by their reserved user ids)."""
+    appended set must equal the q_stream_tumbling oracle exactly
+    (sentinel windows, 40+ days past the data, excluded)."""
+    from distributed_causal_stream_processing_spark import all_oracle_sql
     from distributed_causal_stream_processing_spark.io import load
     from distributed_causal_stream_processing_spark.streaming import jobs
+    from distributed_causal_stream_processing_spark.streaming.batch_views import window_totals
+    from tests.parity import compare_rows
 
     d = str(tmp_path / "ordered_append")
     jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=4, n_sentinels=2)
@@ -929,29 +911,13 @@ def test_append_mode_emits_only_finalized_windows(spark, tmp_path):
     # EventTimeWatermark, hiding the sentinels from the watermark (the
     # stage_events_time_ordered trap) — sentinel WINDOWS are excluded
     # from the comparison instead (they sit 40+ days past real data)
-    agg = (
-        jobs.events_stream(spark, d, watermark="1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    rows, _ = jobs.collect_stream(
-        agg.select(F.col("w.start").alias("ws"), "event_type", "n_events")
-    )
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    want = {(r.w.start, r.event_type): r.n for r in batch}
-    max_real_ws = max(k[0] for k in want)
-    got = {}
-    for r in rows:
-        key = (r.ws, r.event_type)
-        assert key not in got, f"window {key} emitted twice"
-        if r.ws <= max_real_ws:
-            got[key] = r.n_events
-    assert got == want
+    agg = window_totals(jobs.events_stream(spark, d, watermark="1 hour"))
+    rows, _ = jobs.collect_stream(agg)
+    keys = [(r.window_start, r.event_type) for r in rows]
+    assert len(keys) == len(set(keys)), "a window was emitted twice"
+    last_ts = load(spark, SF_SMOKE, "events").agg(F.max("ts")).first()[0]
+    real = [r for r in rows if r.window_start <= last_ts]
+    compare_rows(agg.columns, real, smoke_duck, all_oracle_sql()["q_stream_tumbling"])
 
 
 def test_crash_mid_foreachbatch_recovers_exactly_once(spark, stream_dir, tmp_path):
@@ -1380,10 +1346,6 @@ def _stage_eval_query_stream(spark, tmp_path) -> str:
     parquet files so the file source replays them as two micro-batches
     (the window predicate is the batch query's own — one definition).
     Shared by every streaming-ANN-vs-batch test."""
-    import glob
-    import os
-    import time as _time
-
     from distributed_causal_stream_processing_spark.io import load
     from distributed_causal_stream_processing_spark.operators.similarity import (
         _q_win,
@@ -1392,16 +1354,7 @@ def _stage_eval_query_stream(spark, tmp_path) -> str:
     qdir = str(tmp_path / "queries")
     e = load(spark, SF_SMOKE, "embeddings").filter(_q_win())
     mid = e.approxQuantile("vec_id", [0.5], 0)[0]
-    seen: set[str] = set()
-    for i, part in enumerate(
-        (e.filter(F.col("vec_id") < mid), e.filter(F.col("vec_id") >= mid))
-    ):
-        part.coalesce(1).write.mode("overwrite" if i == 0 else "append").parquet(qdir)
-        new = set(glob.glob(os.path.join(qdir, "part-*.parquet"))) - seen
-        seen |= new
-        t = _time.time() + 1000 * i
-        for f in new:
-            os.utime(f, (t, t))
+    _stage_batches(qdir, [e.filter(F.col("vec_id") < mid), e.filter(F.col("vec_id") >= mid)])
     return qdir
 
 
@@ -1614,37 +1567,20 @@ def test_postings_ingest_refuses_incompatible_store(spark, tmp_path):
         jobs.PostingsIngestSink(str(tmp_path / "sink"), store)
 
 
-def test_causal_deps_stream_matches_batch(spark, tmp_path):
-    """VERDICT r12 item 2: the streaming cross-key layering twin
-    (run_causal_deps_stream) is bit-equal to the batch q_causal_deps on
-    a dependency-respecting (time-ordered) replay — same dep edge and
-    same longest-path layer for every event, nothing late."""
+def test_causal_deps_stream_matches_batch(spark):
+    """The layering's defining properties, on the registered batch
+    q_causal_deps: every dep edge runs from a partner user's click to a
+    purchase in a strictly higher layer. Its streaming twin
+    (run_causal_deps_stream) is checked against the same query's oracle
+    in test_stream_twin_matches_oracle."""
     from distributed_causal_stream_processing_spark import all_queries
-    from distributed_causal_stream_processing_spark.streaming import jobs
-
-    d = str(tmp_path / "deps_stream")
-    jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=3)
-    rows = jobs.run_causal_deps_stream(spark, d)
-    assert rows and not any(r.late for r in rows)
-    got = {r.event_id: (r.dep_id, r.causal_layer) for r in rows}
 
     batch = all_queries()["q_causal_deps"](spark, SF_SMOKE).collect()
-    want = {r.event_id: (r.dep_id, r.causal_layer) for r in batch}
-    assert got == want
-
-    # the layering's defining properties, asserted on the batch rows:
-    # every edge source sits in a strictly lower layer than its target
-    ev = {
-        r.event_id: r
-        for r in all_queries()["q_causal_deps"](spark, SF_SMOKE).collect()
-    }
-    by_user: dict[int, list] = {}
-    for r in batch:
-        by_user.setdefault(r.user_id, []).append(r)
-    layer = {r.event_id: r.causal_layer for r in batch}
+    ev = {r.event_id: r for r in batch}
+    assert any(r.dep_id is not None for r in batch)
     for r in batch:
         if r.dep_id is not None:
-            assert layer[r.dep_id] < r.causal_layer, (r.event_id, "dep edge")
+            assert ev[r.dep_id].causal_layer < r.causal_layer, (r.event_id, "dep edge")
             assert ev[r.dep_id].event_type == "click"
             assert r.event_type == "purchase"
             # cross-KEY: the dep belongs to the partner user
@@ -1832,6 +1768,65 @@ def test_collect_stream_returns_rows_and_progress(spark, stream_dir):
     assert sum(p["numInputRows"] for p in q.recentProgress) == len(want)
     assert q.lastProgress["name"] == q.name
     assert not spark.catalog.tableExists(q.name)
+
+
+def test_collect_stream_removes_checkpoint_of_failed_run(
+    spark, stream_dir, tmp_path, monkeypatch
+):
+    """A collect whose batch raises leaves no checkpoint behind: not its
+    own under the temp root, and no Spark ``temporary-*`` one under the
+    JVM's temp dir (Spark keeps those when the query failed)."""
+    import glob
+    import tempfile
+
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    jvm_tmp = spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def spark_checkpoints():
+        return set(glob.glob(os.path.join(jvm_tmp, "temporary-*")))
+
+    before = spark_checkpoints()
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    failing = jobs.events_stream(spark, stream_dir).select(
+        F.when(F.col("event_id") < 0, F.col("event_id"))
+        .otherwise(F.raise_error(F.lit("batch failed on purpose")))
+        .alias("event_id")
+    )
+    with pytest.raises(Exception, match="failed on purpose"):
+        jobs.collect_stream(failing)
+    assert spark.streams.active == []
+    assert list(root.iterdir()) == []
+    assert spark_checkpoints() == before
+
+
+def test_failed_marker_write_leaves_batch_uncommitted(tmp_path, monkeypatch):
+    """A marker write that fails halfway through its JSON leaves the
+    batch uncommitted, where an in-place write would leave a torn
+    marker that counts as committed; the retried write commits it."""
+    import json
+
+    from distributed_causal_stream_processing_spark.streaming import jobs
+
+    sink = jobs.IdempotentForeachBatchSink(str(tmp_path / "sink"))
+
+    def torn_dump(obj, fh):
+        fh.write('{"batch_id": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        sink._write_marker(3, rows=5)
+    assert not sink.is_committed(3)
+    assert sink._committed_ids() == []
+
+    monkeypatch.undo()
+    sink._write_marker(3, rows=5)
+    assert sink._committed_ids() == [3]
+    with open(sink._marker(3)) as fh:
+        assert json.load(fh) == {"batch_id": 3, "rows": 5}
 
 
 def test_recommended_state_sizes_partitions_to_cores(spark, stream_dir):
