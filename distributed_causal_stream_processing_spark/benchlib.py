@@ -105,7 +105,8 @@ def execution_window(spark):
     listener bus (a prior action's trailing events must not count), mark
     the newest execution id in the shared SQLAppStatusStore, run the
     block, drain again (the block's own executions must be stored), and
-    fill the yielded list with every execution newer than the mark.
+    fill the yielded list with every execution newer than the mark, once
+    each has its completion time (``completed_executions``).
     Robust to the store evicting OLD entries
     (spark.sql.ui.retainedExecutions): new executions are always present
     right after they run."""
@@ -117,9 +118,31 @@ def execution_window(spark):
     yield execs
     drain_listener_bus(spark)
     lst = store.executionsList()
-    execs.extend(
-        e for e in (lst.apply(i) for i in range(lst.size())) if e.executionId() > mark
-    )
+    ids = [
+        e.executionId() for e in (lst.apply(i) for i in range(lst.size()))
+        if e.executionId() > mark
+    ]
+    execs.extend(completed_executions(store, ids))
+
+
+# how long completed_executions polls for missing completion times
+COMPLETION_WAIT_S = 10.0
+
+
+def completed_executions(store, ids: list[int]) -> list:
+    """The store's record of each execution in ``ids``, polled until every
+    record has a completion time or ``COMPLETION_WAIT_S`` runs out. The SQL listener
+    writes an ended execution's final record from an async task after it
+    aggregates the metrics, so a drained listener bus can still leave
+    ``completionTime`` undefined; a record still without one after the
+    wait is returned as it is."""
+    deadline = time.monotonic() + COMPLETION_WAIT_S
+    while True:
+        recs = [store.execution(i) for i in ids]
+        recs = [r.get() for r in recs if r.isDefined()]
+        if all(r.completionTime().isDefined() for r in recs) or time.monotonic() >= deadline:
+            return recs
+        time.sleep(0.02)
 
 
 _SIZE_UNIT = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}

@@ -449,11 +449,8 @@ def run_multi_source_causal_stream(
         causal_sequence_stream,
     )
 
-    streams = [
-        events_stream(spark, d, watermark=watermark).select("event_id", "ts", "user_id")
-        for d in (dir_a, dir_b)
-    ]
-    seq = causal_sequence_stream(streams[0].unionByName(streams[1]))
+    a, b = (events_stream(spark, d, watermark=watermark) for d in (dir_a, dir_b))
+    seq = causal_sequence_stream(a.unionByName(b))
     return collect_stream(seq.select("user_id", "event_id", "ts", "seq", "late"))[0]
 
 
@@ -1232,11 +1229,7 @@ def run_causal_deps_stream(
         causal_deps_stream,
     )
 
-    deps = causal_deps_stream(
-        events_stream(spark, stream_dir, watermark=watermark).select(
-            "event_id", "ts", "user_id", "event_type"
-        )
-    )
+    deps = causal_deps_stream(events_stream(spark, stream_dir, watermark=watermark))
     return collect_stream(
         deps.filter("event_id >= 0").select(
             "event_id", "user_id", "event_type", "dep_id", "causal_layer", "late"

@@ -12,7 +12,7 @@ ties, empty match sets) via tight value ranges.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 pytestmark = pytest.mark.properties
@@ -94,6 +94,126 @@ def test_causal_sequence_batch_matches_bruteforce(spark, data):
     df = spark.createDataFrame(events, "user_id int, ts int, event_id int")
     got = {r.event_id: r.seq for r in causal_sequence_batch(df).collect()}
     assert got == _brute_sequence(events)
+
+
+class _FakeGroupState:
+    """GroupState stand-in for calling a stateful kernel without Spark."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+def _sequencer_kernel():
+    """The closure causal_sequence_stream hands to
+    applyInPandasWithState, captured through a stand-in frame."""
+    from distributed_causal_stream_processing_spark.streaming import causal
+
+    class Frame:
+        def select(self, *cols):
+            return self
+
+        def groupBy(self, *keys):
+            return self
+
+        def applyInPandasWithState(self, fn, **kwargs):
+            self.fn = fn
+            return self
+
+    return causal.causal_sequence_stream(Frame()).fn
+
+
+def _brute_sequencer(carry, rows):
+    """Plain-Python sequencer over one key's micro-batch: sort by (ts,
+    event_id), then number each row and flag it late when it is not
+    past the running (ts, event_id) frontier. Returns the output rows
+    (event_id, ts_us, seq, late) and the state tuple after."""
+    max_seq, last_us, last_eid = carry or (0, -(2**62), -1)
+    out = []
+    for ts_us, eid in sorted(rows):
+        max_seq += 1
+        late = (ts_us, eid) <= (last_us, last_eid)
+        if not late:
+            last_us, last_eid = ts_us, eid
+        out.append((eid, ts_us, max_seq, late))
+    return out, (max_seq, last_us, last_eid)
+
+
+@st.composite
+def _sequencer_batches(draw):
+    """(carry-in state or None, rows as (ts_us, event_id), chunks): one
+    key's micro-batch in shuffle order, cut into Arrow-like chunks,
+    empty ones included. Event ids are unique within the batch; the
+    tight ts range forces ties, and the carry-in is sometimes a row of
+    the batch itself (a redelivery of the frontier event)."""
+    eids = draw(st.lists(st.integers(0, 40), max_size=12, unique=True))
+    rows = [(draw(st.integers(0, 5)), eid) for eid in eids]
+    carry = draw(
+        st.one_of(
+            st.none(),
+            st.tuples(st.integers(0, 4), st.integers(-1, 6), st.integers(-1, 41)),
+        )
+    )
+    if rows and draw(st.booleans()):
+        carry = (draw(st.integers(0, 4)), *draw(st.sampled_from(rows)))
+    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), max_size=4)))
+    bounds = [0, *cuts, len(rows)]
+    chunks = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
+    return carry, rows, chunks
+
+
+@settings(max_examples=200, deadline=None)
+@given(case=_sequencer_batches())
+@example(case=(None, [(1, 5), (1, 2), (0, 9)], [[(1, 5)], [], [(1, 2), (0, 9)]]))
+@example(case=((3, 1, 5), [(1, 5), (2, 0)], [[(1, 5), (2, 0)]]))
+@example(case=((2, 3, 7), [], [[], []]))
+def test_causal_sequencer_kernel_matches_bruteforce(case):
+    """Spark-free: the streaming sequencer's kernel, fed one key's rows
+    as several chunks (empty ones too) under a stand-in GroupState,
+    emits exactly the plain-Python sequencer's rows and state, across
+    ts ties, a carried-in frontier equal to a row (flagged late), and
+    keys spanning chunks."""
+    import numpy as np
+    import pandas as pd
+
+    carry, rows, chunks = case
+
+    def frame(part):
+        return pd.DataFrame(
+            {
+                "user_id": np.full(len(part), 7, dtype="int64"),
+                "event_id": np.array([e for _, e in part], dtype="int64"),
+                "ts": (np.array([t for t, _ in part], dtype="int64") * 1000).astype(
+                    "datetime64[ns]"
+                ),
+            }
+        )
+
+    state = _FakeGroupState(carry)
+    outs = list(_sequencer_kernel()((7,), iter([frame(c) for c in chunks]), state))
+    got = []
+    for out in outs:
+        assert list(out.columns) == ["user_id", "event_id", "ts", "seq", "late"]
+        assert (out["user_id"] == 7).all() and out["ts"].dtype == "datetime64[ns]"
+        got += zip(
+            out["event_id"].tolist(),
+            (out["ts"].to_numpy().view("int64") // 1000).tolist(),
+            out["seq"].tolist(),
+            out["late"].tolist(),
+        )
+    want_rows, want_state = _brute_sequencer(carry, rows)
+    assert got == want_rows
+    assert state.value == want_state
 
 
 def _brute_sessions(rows, gap):

@@ -118,10 +118,13 @@ def test_stream_twin_matches_oracle(spark, smoke_duck, stream_dir, tmp_path, nam
     micro-batches, each replayed event once, every event enriched, and
     for the causal views the online sequence (compared on the twin's
     columns), with no row flagged late."""
+    _assert_twin_rows_match_oracle(name, _twin_rows(name, spark, stream_dir, tmp_path), smoke_duck)
+
+
+def _assert_twin_rows_match_oracle(name, rows, duck):
     from distributed_causal_stream_processing_spark import all_oracle_sql
     from tests.parity import compare_rows
 
-    rows = _twin_rows(name, spark, stream_dir, tmp_path)
     assert rows
     cols, oracle = list(rows[0].asDict()), all_oracle_sql()[name]
     if "late" in cols:
@@ -129,7 +132,60 @@ def test_stream_twin_matches_oracle(spark, smoke_duck, stream_dir, tmp_path, nam
         cols.remove("late")
         rows = [tuple(r[c] for c in cols) for r in rows]
         oracle = f"SELECT {', '.join(cols)} FROM ({oracle})"
-    compare_rows(cols, rows, smoke_duck, oracle)
+    compare_rows(cols, rows, duck, oracle)
+
+
+def test_causal_sequence_stream_keys_spanning_arrow_chunks(spark, smoke_duck, tmp_path):
+    """Each time-ordered slice is rewritten with its rows in descending
+    (ts, event_id) order, and Arrow batches hold 2 rows, so every key
+    with more than 2 rows in a micro-batch reaches the sequencer as
+    several chunks, each out of order; the sequence still equals
+    q_causal_seq's oracle."""
+    import glob
+
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    d = str(tmp_path / "ordered_desc")
+    jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=3)
+    for idx, f in enumerate(sorted(glob.glob(os.path.join(d, "slice_*.parquet")))):
+        part = spark.read.schema(jobs.EVENT_SCHEMA).parquet(f)
+        desc = part.orderBy(F.desc("ts"), F.desc("event_id"))
+        jobs._lift_single_file(desc, d, idx, os.stat(f).st_mtime - idx)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        seq = causal.causal_sequence_stream(jobs.events_stream(spark, d, watermark="35 days"))
+        rows = jobs.collect_stream(seq.select("user_id", "event_id", "ts", "seq", "late"))[0]
+    finally:
+        spark.conf.set(conf, old)
+    _assert_twin_rows_match_oracle("q_causal_seq", rows, smoke_duck)
+
+
+@pytest.mark.parametrize(
+    "operator, python_input",
+    [
+        ("causal_sequence_stream", ["user_id", "event_id", "ts"]),
+        ("chain_assign_stream", ["user_id", "event_id", "ts"]),
+        ("pattern_match_stream", ["user_id", "event_id", "ts", "event_type"]),
+        ("causal_deps_stream", ["event_id", "ts", "user_id", "event_type", "pair"]),
+    ],
+)
+def test_stateful_python_operator_reads_only_kernel_columns(
+    spark, stream_dir, operator, python_input
+):
+    """Each applyInPandasWithState operator is handed only the columns
+    its kernel reads (plus its grouping key): value and props never
+    cross the shuffle or Arrow. Read off the analyzed plan."""
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
+
+    events = jobs.events_stream(spark, stream_dir, watermark="1 day")
+    args = (10**6,) if operator == "chain_assign_stream" else ()
+    node = getattr(causal, operator)(events, *args)._jdf.queryExecution().analyzed()
+    while node.nodeName() != "FlatMapGroupsInPandasWithState":
+        node = node.children().apply(0)
+    out = node.children().apply(0).output()
+    assert [out.apply(i).name() for i in range(out.size())] == python_input
 
 
 def test_effectively_once_sink_idempotent(spark, stream_dir, tmp_path):

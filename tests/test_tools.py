@@ -516,3 +516,62 @@ def test_coverage_extras_section_matches_registry():
 
     with open(gen_extras.COVERAGE) as fh:
         assert gen_extras.committed(fh.read()) == gen_extras.render()
+
+
+class _Opt:
+    def __init__(self, value=None):
+        self.value = value
+
+    def isDefined(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+
+class _Exec:
+    def __init__(self, eid, polls_until_complete):
+        self.eid, self.polls = eid, polls_until_complete
+
+    def executionId(self):
+        return self.eid
+
+    def completionTime(self):
+        self.polls -= 1
+        return _Opt(object() if self.polls < 0 else None)
+
+
+class _Store:
+    def __init__(self, execs):
+        self.execs = {e.eid: e for e in execs}
+
+    def execution(self, eid):
+        return _Opt(self.execs.get(eid))
+
+
+def test_completed_executions_waits_for_completion_times(monkeypatch):
+    """No Spark: an execution whose completion time the status store
+    has not written yet is polled until it has one; a record that never
+    completes is returned as it is once the wait runs out, and an
+    evicted id is left out."""
+    from distributed_causal_stream_processing_spark import benchlib
+
+    late = _Exec(1, polls_until_complete=3)
+    recs = benchlib.completed_executions(_Store([_Exec(0, 0), late]), [0, 1, 2])
+    assert [r.executionId() for r in recs] == [0, 1]
+    assert late.polls < 0  # polled past its undefined completion time
+
+    monkeypatch.setattr(benchlib, "COMPLETION_WAIT_S", 0.05)
+    never = _Exec(3, polls_until_complete=10**9)
+    recs = benchlib.completed_executions(_Store([never]), [3])
+    assert [r.executionId() for r in recs] == [3]
+
+
+def test_profile_query_prints_na_for_unfinished_execution():
+    """A duration the store cannot give prints as n/a, never nan."""
+    from tools.profile_query import format_execution_row
+
+    line = format_execution_row((4, None, 2, 1_000, 2_048))
+    assert "n/a" in line and "nan" not in line
+    assert "shuffle_records=1,000" in line
+    assert "  1.500s" in format_execution_row((4, 1.5, 2, 1_000, 2_048))

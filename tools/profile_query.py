@@ -31,6 +31,27 @@ if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
 
+def execution_row(store, e) -> tuple:
+    """(id, duration in s or None while the store lacks the completion
+    time, exchanges, shuffle records, shuffle bytes) of execution ``e``."""
+    from distributed_causal_stream_processing_spark.benchlib import (
+        execution_exchange_volume,
+    )
+
+    comp = e.completionTime()
+    dur = (comp.get().getTime() - e.submissionTime()) / 1000.0 if comp.isDefined() else None
+    rec, nb = execution_exchange_volume(store, e.executionId())
+    nodes = store.planGraph(e.executionId()).allNodes()
+    n_ex = sum(1 for j in range(nodes.size()) if nodes.apply(j).name() == "Exchange")
+    return e.executionId(), dur, n_ex, rec, nb
+
+
+def format_execution_row(row: tuple) -> str:
+    eid, dur, n_ex, rec, nb = row
+    shown = f"{dur:7.3f}s" if dur is not None else f"{'n/a':>8}"
+    return f"  exec {eid}: {shown}  exchanges={n_ex}  shuffle_records={rec:,}  shuffle_bytes={nb:,}"
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -40,7 +61,6 @@ def main() -> None:
 
     from distributed_causal_stream_processing_spark import all_queries
     from distributed_causal_stream_processing_spark.benchlib import (
-        execution_exchange_volume,
         execution_window,
         release_storage,
         warm_session,
@@ -65,35 +85,15 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 t2 = time.perf_counter()
                 spark.sparkContext.setJobDescription(None)
-            rows = []
-            for e in execs:
-                sub = e.submissionTime()
-                comp = e.completionTime()
-                dur = (
-                    (comp.get().getTime() - sub) / 1000.0
-                    if comp.isDefined()
-                    else float("nan")
-                )
-                rec, nb = execution_exchange_volume(store, e.executionId())
-                g = store.planGraph(e.executionId())
-                nodes = g.allNodes()
-                n_ex = sum(
-                    1
-                    for j in range(nodes.size())
-                    if nodes.apply(j).name() == "Exchange"
-                )
-                rows.append((e.executionId(), dur, n_ex, rec, nb))
+            rows = [execution_row(store, e) for e in execs]
             cur = (t1 - t0, t2 - t1, rows)
             if best is None or (cur[0] + cur[1]) < (best[0] + best[1]):
                 best = cur
         build_s, exec_s, rows = best
         print(f"\n=== {name}: build {build_s:.3f}s + exec {exec_s:.3f}s "
               f"= {build_s + exec_s:.3f}s  ({args.n} passes, best kept)")
-        for eid, dur, n_ex, rec, nb in rows:
-            print(
-                f"  exec {eid}: {dur:7.3f}s  exchanges={n_ex}  "
-                f"shuffle_records={rec:,}  shuffle_bytes={nb:,}"
-            )
+        for row in rows:
+            print(format_execution_row(row))
     spark.stop()
 
 
