@@ -669,27 +669,6 @@ def run_stream_stream_join_outer(
     return [r for r in rows if r.c_id >= 0]
 
 
-def run_chain_assign_stream(
-    spark: SparkSession,
-    stream_dir: str,
-    gap_us: int,
-    watermark: str = "35 days",
-) -> list:
-    """Streaming chain-root assignment (causal.chain_assign_stream)
-    over the staged events log; memory-sink collect for tests.
-    Sentinel rows (negative event_id), if staged, are excluded from
-    the returned rows but still flow through state — harmless: they
-    use reserved user ids."""
-    from distributed_causal_stream_processing_spark.streaming.causal import (
-        chain_assign_stream,
-    )
-
-    chains = chain_assign_stream(events_stream(spark, stream_dir, watermark=watermark), gap_us)
-    return collect_stream(
-        chains.filter("event_id >= 0").select("user_id", "event_id", "root_id", "depth")
-    )[0]
-
-
 # --- Streaming content dedup (MinHash bands vs accumulating index) -------
 
 DOC_SCHEMA = T.StructType(
@@ -1210,31 +1189,6 @@ def run_streaming_postings_ingest(
     return _run_sink(
         _file_stream(spark, DOC_SCHEMA, doc_stream_dir), PostingsIngestSink(root, store_dir)
     )
-
-
-def run_causal_deps_stream(
-    spark: SparkSession,
-    stream_dir: str,
-    watermark: str = "35 days",
-) -> list:
-    """Streaming cross-key causal layering (causal.causal_deps_stream)
-    over the staged events log; memory-sink collect for tests. On a
-    time-ordered staging (stage_events_time_ordered) the returned rows
-    are bit-equal to the batch q_causal_deps — the dependency-
-    respecting replay asserted in tests/test_streaming.py. Sentinel
-    rows (negative event_id) are excluded from the returned rows but
-    flow through state harmlessly (reserved user ids → their own
-    pairs)."""
-    from distributed_causal_stream_processing_spark.streaming.causal import (
-        causal_deps_stream,
-    )
-
-    deps = causal_deps_stream(events_stream(spark, stream_dir, watermark=watermark))
-    return collect_stream(
-        deps.filter("event_id >= 0").select(
-            "event_id", "user_id", "event_type", "dep_id", "causal_layer", "late"
-        )
-    )[0]
 
 
 # --- Kafka-shaped decode (broker-free) -----------------------------------

@@ -234,7 +234,11 @@ def test_observe_streaming_metrics_in_progress(spark, tmp_path):
     stream = jobs.events_stream(spark, d, watermark="35 days").observe(
         "batch_metrics", F.count(F.lit(1)).alias("n_rows")
     )
-    q = jobs.run_stream(stream.writeStream.format("noop"))
+    q = jobs.run_stream(
+        stream.writeStream.format("noop").option(
+            "checkpointLocation", str(tmp_path / "checkpoint")
+        )
+    )
     total = 0
     for p in q.recentProgress:
         m = p.get("observedMetrics", {}).get("batch_metrics")

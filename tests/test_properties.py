@@ -114,13 +114,17 @@ class _FakeGroupState:
         self.value = tuple(value)
 
 
-def _sequencer_kernel():
-    """The closure causal_sequence_stream hands to
-    applyInPandasWithState, captured through a stand-in frame."""
+def _kernel(operator, *args):
+    """The closure a streaming.causal operator hands to
+    applyInPandasWithState, captured through a stand-in frame.
+    ``F.expr`` is stubbed: building a real one needs a SparkContext."""
     from distributed_causal_stream_processing_spark.streaming import causal
 
     class Frame:
         def select(self, *cols):
+            return self
+
+        def withColumn(self, *args):
             return self
 
         def groupBy(self, *keys):
@@ -130,7 +134,44 @@ def _sequencer_kernel():
             self.fn = fn
             return self
 
-    return causal.causal_sequence_stream(Frame()).fn
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(causal.F, "expr", str)
+        return getattr(causal, operator)(Frame(), *args).fn
+
+
+def _run_kernel(operator, args, key, carry, chunks):
+    """Feed one key's chunks of (ts_us, event_id, user_id, event_type)
+    rows to ``operator``'s kernel under a stand-in GroupState holding
+    ``carry``; returns the emitted frames and the state after."""
+    import numpy as np
+    import pandas as pd
+
+    def frame(part):
+        ts, eid, user, etype = (list(c) for c in zip(*part)) if part else ([],) * 4
+        return pd.DataFrame(
+            {
+                "event_id": np.array(eid, dtype="int64"),
+                "ts": (np.array(ts, dtype="int64") * 1000).astype("datetime64[ns]"),
+                "user_id": np.array(user, dtype="int64"),
+                "event_type": np.array(etype, dtype=object),
+                "pair": np.array(user, dtype="int64") // 2,
+            }
+        )
+
+    state = _FakeGroupState(carry)
+    fn = _kernel(operator, *args)
+    return list(fn((key,), iter([frame(c) for c in chunks]), state)), state.value
+
+
+def _delivered(draw, rows):
+    """``rows`` plus exact copies of some of them (redeliveries) in a
+    drawn shuffle order, and that order cut into Arrow-like chunks,
+    empty ones included."""
+    if rows:
+        rows = draw(st.permutations(rows + draw(st.lists(st.sampled_from(rows), max_size=4))))
+    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), max_size=4)))
+    bounds = [0, *cuts, len(rows)]
+    return rows, [rows[a:b] for a, b in zip(bounds, bounds[1:])]
 
 
 def _brute_sequencer(carry, rows):
@@ -153,11 +194,13 @@ def _brute_sequencer(carry, rows):
 def _sequencer_batches(draw):
     """(carry-in state or None, rows as (ts_us, event_id), chunks): one
     key's micro-batch in shuffle order, cut into Arrow-like chunks,
-    empty ones included. Event ids are unique within the batch; the
-    tight ts range forces ties, and the carry-in is sometimes a row of
-    the batch itself (a redelivery of the frontier event)."""
-    eids = draw(st.lists(st.integers(0, 40), max_size=12, unique=True))
-    rows = [(draw(st.integers(0, 5)), eid) for eid in eids]
+    empty ones included. The tight ts range forces ties, some rows are
+    exact copies of others (an in-batch redelivery), and the carry-in
+    is sometimes a row of the batch itself (a redelivery of the
+    frontier event)."""
+    rows, chunks = _delivered(
+        draw, draw(st.lists(st.tuples(st.integers(0, 5), st.integers(0, 40)), max_size=12))
+    )
     carry = draw(
         st.one_of(
             st.none(),
@@ -166,9 +209,6 @@ def _sequencer_batches(draw):
     )
     if rows and draw(st.booleans()):
         carry = (draw(st.integers(0, 4)), *draw(st.sampled_from(rows)))
-    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), max_size=4)))
-    bounds = [0, *cuts, len(rows)]
-    chunks = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
     return carry, rows, chunks
 
 
@@ -177,30 +217,17 @@ def _sequencer_batches(draw):
 @example(case=(None, [(1, 5), (1, 2), (0, 9)], [[(1, 5)], [], [(1, 2), (0, 9)]]))
 @example(case=((3, 1, 5), [(1, 5), (2, 0)], [[(1, 5), (2, 0)]]))
 @example(case=((2, 3, 7), [], [[], []]))
+@example(case=(None, [(1, 5), (1, 5)], [[(1, 5)], [(1, 5)]]))
 def test_causal_sequencer_kernel_matches_bruteforce(case):
     """Spark-free: the streaming sequencer's kernel, fed one key's rows
     as several chunks (empty ones too) under a stand-in GroupState,
     emits exactly the plain-Python sequencer's rows and state, across
-    ts ties, a carried-in frontier equal to a row (flagged late), and
-    keys spanning chunks."""
-    import numpy as np
-    import pandas as pd
-
+    ts ties, a carried-in frontier equal to a row (flagged late), an
+    exact duplicate within the batch (the second copy flagged late),
+    and keys spanning chunks."""
     carry, rows, chunks = case
-
-    def frame(part):
-        return pd.DataFrame(
-            {
-                "user_id": np.full(len(part), 7, dtype="int64"),
-                "event_id": np.array([e for _, e in part], dtype="int64"),
-                "ts": (np.array([t for t, _ in part], dtype="int64") * 1000).astype(
-                    "datetime64[ns]"
-                ),
-            }
-        )
-
-    state = _FakeGroupState(carry)
-    outs = list(_sequencer_kernel()((7,), iter([frame(c) for c in chunks]), state))
+    chunks = [[(t, e, 7, "view") for t, e in c] for c in chunks]
+    outs, state = _run_kernel("causal_sequence_stream", (), 7, carry, chunks)
     got = []
     for out in outs:
         assert list(out.columns) == ["user_id", "event_id", "ts", "seq", "late"]
@@ -213,7 +240,124 @@ def test_causal_sequencer_kernel_matches_bruteforce(case):
         )
     want_rows, want_state = _brute_sequencer(carry, rows)
     assert got == want_rows
-    assert state.value == want_state
+    assert state == want_state
+
+
+_EVENT_TYPES = ("signup", "click", "view", "purchase", "error")
+_CHAIN_GAP_US = 2
+
+
+def _brute_pattern(carry, rows):
+    """signup → (click|view)* → purchase matches over the rows sorted
+    by (ts, event_id); a row not past the running frontier only counts
+    as late. Output: the one cumulative row of user 7."""
+    open_, n_events, n_matches, n_late, *frontier = carry or (0, 0, 0, 0, -(2**62), -1)
+    for ts, eid, _, etype in sorted(rows, key=lambda r: r[:2]):
+        n_events += 1
+        if (ts, eid) <= tuple(frontier):
+            n_late += 1
+            continue
+        frontier = [ts, eid]
+        if etype == "purchase":
+            n_matches += open_
+        open_ = {"signup": 1, "click": open_, "view": open_}.get(etype, 0)
+    counts = (n_events, n_matches, n_late)
+    return [(7, *counts)] if rows else [], (open_, *counts, *frontier)
+
+
+def _brute_chain(carry, rows):
+    """Chain roots over the rows sorted by (ts, event_id): a row more
+    than the gap past the furthest-seen ts roots a new chain, any other
+    extends the open one."""
+    furthest, root, depth = carry or (None, -1, -1)
+    out = []
+    for ts, eid, _, _ in sorted(rows, key=lambda r: r[:2]):
+        if furthest is None or ts - furthest > _CHAIN_GAP_US:
+            root, depth = eid, 0
+        else:
+            depth += 1
+        furthest = ts if furthest is None else max(furthest, ts)
+        out.append((7, eid, root, depth))
+    return out, (-(2**62) if furthest is None else furthest, root, depth)
+
+
+def _brute_deps(carry, rows):
+    """Online causal layers of the pair (6, 7) over the rows sorted by
+    (ts, event_id): a row's layer is one past its user's last layer
+    and, for a purchase, one past the partner's latest click (its dep).
+    A row not past the pair's frontier is late, layer -1, and leaves
+    the state as it was."""
+    lle, llo, cle, cee, clo, ceo, *frontier = carry or (-1,) * 6 + (-(2**62), -1)
+    last, clicks = {6: lle, 7: llo}, {6: (cle, cee), 7: (clo, ceo)}
+    out = []
+    for ts, eid, user, etype in sorted(rows, key=lambda r: r[:2]):
+        if (ts, eid) <= tuple(frontier):
+            out.append((eid, user, etype, None, -1, True))
+            continue
+        partner_layer, partner_click = clicks[user ^ 1]
+        dep = partner_click if etype == "purchase" and partner_click >= 0 else None
+        layer = max(last[user], -1 if dep is None else partner_layer) + 1
+        if etype == "click":
+            clicks[user] = (layer, eid)
+        last[user], frontier = layer, [ts, eid]
+        out.append((eid, user, etype, dep, layer, False))
+    return out, (last[6], last[7], *clicks[6], *clicks[7], *frontier)
+
+
+_TS_US, _EID, _SMALL = st.integers(-1, 6), st.integers(-1, 16), st.integers(-1, 3)
+
+# operator: (extra args, key, users of the key, carry-in state, reference)
+_KERNEL_CASES = {
+    "pattern_match_stream": (
+        (), 7, (7,),
+        st.tuples(st.integers(0, 1), _SMALL, _SMALL, _SMALL, _TS_US, _EID),
+        _brute_pattern,
+    ),
+    "chain_assign_stream": (
+        (_CHAIN_GAP_US,), 7, (7,), st.tuples(_TS_US, _EID, _SMALL), _brute_chain
+    ),
+    "causal_deps_stream": (
+        (), 3, (6, 7),
+        st.tuples(_SMALL, _SMALL, _SMALL, _EID, _SMALL, _EID, _TS_US, _EID),
+        _brute_deps,
+    ),
+}
+
+
+@st.composite
+def _key_batches(draw, users, carry):
+    """(carry-in state or None, rows as (ts_us, event_id, user_id,
+    event_type), chunks): one key's micro-batch in shuffle order, cut
+    into Arrow-like chunks, empty ones included. Tight ts and id ranges
+    force ties with each other and with the carried-in frontier, and
+    some rows are exact copies of others."""
+    row = st.tuples(
+        st.integers(0, 5), st.integers(0, 15), st.sampled_from(users),
+        st.sampled_from(_EVENT_TYPES),
+    )
+    rows, chunks = _delivered(draw, draw(st.lists(row, max_size=12)))
+    return draw(st.none() | carry), rows, chunks
+
+
+@pytest.mark.parametrize("operator", sorted(_KERNEL_CASES))
+@settings(max_examples=150, deadline=None)
+@given(data=st.data())
+def test_keyed_state_kernel_matches_bruteforce(operator, data):
+    """Spark-free: the pattern, chain and deps kernels, fed one key's
+    rows in shuffle order as several chunks (empty ones too) under a
+    stand-in GroupState, emit exactly the rows and state of a
+    plain-Python reference that sorts by (ts, event_id), then loops."""
+    import pandas as pd
+
+    args, key, users, carry_st, brute = _KERNEL_CASES[operator]
+    carry, rows, chunks = data.draw(_key_batches(users, carry_st))
+    outs, state = _run_kernel(operator, args, key, carry, chunks)
+    got = [
+        tuple(None if pd.isna(v) else v for v in r)
+        for out in outs
+        for r in out.itertuples(index=False)
+    ]
+    assert (got, state) == brute(carry, rows)
 
 
 def _brute_sessions(rows, gap):

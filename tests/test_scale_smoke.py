@@ -194,8 +194,10 @@ def test_scale_bench_replicas_preserve_workload_shape(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from tests.conftest import REPO_DIR
+
     spec = importlib.util.spec_from_file_location(
-        "scale_bench", "/root/repo/tools/scale_bench.py"
+        "scale_bench", os.path.join(REPO_DIR, "tools", "scale_bench.py")
     )
     sb = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(sb)
@@ -272,8 +274,10 @@ def test_skew_pair_join_twins_match_every_event(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from tests.conftest import REPO_DIR
+
     spec = importlib.util.spec_from_file_location(
-        "scale_bench", "/root/repo/tools/scale_bench.py"
+        "scale_bench", os.path.join(REPO_DIR, "tools", "scale_bench.py")
     )
     sb = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(sb)

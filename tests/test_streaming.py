@@ -101,7 +101,9 @@ def _twin_rows(name, spark, stream_dir, tmp_path):
             causal.causal_sequence_stream(events(ordered(), "35 days"))
             .select("user_id", "event_id", "ts", "seq", "late")
         ),
-        "q_causal_deps": lambda: jobs.run_causal_deps_stream(spark, ordered()),
+        "q_causal_deps": lambda: collect(
+            causal.causal_deps_stream(events(ordered(), "35 days")).filter("event_id >= 0")
+        ),
         "q_causal_merge": lambda: jobs.run_multi_source_causal_stream(spark, *ordered_sources()),
     }
     return twins[name]()
@@ -862,14 +864,17 @@ def test_chain_assign_stream_matches_batch_recursion(spark, tmp_path):
         GAP_US,
         q_causal_chains,
     )
-    from distributed_causal_stream_processing_spark.streaming import jobs
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
     d = str(tmp_path / "ordered_for_chains")
     jobs.stage_events_time_ordered(spark, SF_SMOKE, d, n_files=4)
 
+    chains = causal.chain_assign_stream(
+        jobs.events_stream(spark, d, watermark="35 days"), GAP_US
+    )
     got = {
         (r.user_id, r.event_id): (r.root_id, r.depth)
-        for r in jobs.run_chain_assign_stream(spark, d, GAP_US)
+        for r in jobs.collect_stream(chains.filter("event_id >= 0"))[0]
     }
     want = {
         (r.user_id, r.event_id): (r.root_id, r.depth)
@@ -907,7 +912,7 @@ def test_available_now_trigger_self_terminates(spark, smoke_duck, stream_dir):
     compare_rows(agg.columns, rows, smoke_duck, all_oracle_sql()["q_stream_tumbling"])
 
 
-def test_update_mode_emits_incremental_group_changes(spark, stream_dir):
+def test_update_mode_emits_incremental_group_changes(spark, stream_dir, tmp_path):
     """outputMode('update') on a streaming aggregation emits, per
     micro-batch, only the groups that changed — captured via
     foreachBatch on the driver. Per-user counts must be monotone
@@ -929,6 +934,7 @@ def test_update_mode_emits_incremental_group_changes(spark, stream_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.outputMode("update")
         .foreachBatch(capture)
+        .option("checkpointLocation", str(tmp_path / "checkpoint"))
     )
 
     last: dict[int, int] = {}
@@ -1627,7 +1633,7 @@ def test_causal_deps_stream_matches_batch(spark):
     """The layering's defining properties, on the registered batch
     q_causal_deps: every dep edge runs from a partner user's click to a
     purchase in a strictly higher layer. Its streaming twin
-    (run_causal_deps_stream) is checked against the same query's oracle
+    (causal_deps_stream) is checked against the same query's oracle
     in test_stream_twin_matches_oracle."""
     from distributed_causal_stream_processing_spark import all_queries
 
@@ -1648,11 +1654,12 @@ def test_causal_deps_stream_flags_late_rows(spark, tmp_path):
     pair high-water mark; the twin must flag them late (layer -1)
     instead of assigning a wrong online layer — and the non-late rows
     must still carry batch-consistent PER-PAIR monotone layers."""
-    from distributed_causal_stream_processing_spark.streaming import jobs
+    from distributed_causal_stream_processing_spark.streaming import causal, jobs
 
     d = str(tmp_path / "deps_stream_unordered")
     jobs.stage_events_as_stream_dir(spark, SF_SMOKE, d, n_files=4)
-    rows = jobs.run_causal_deps_stream(spark, d)
+    deps = causal.causal_deps_stream(jobs.events_stream(spark, d, watermark="35 days"))
+    rows = jobs.collect_stream(deps.filter("event_id >= 0"))[0]
     lates = [r for r in rows if r.late]
     assert lates, "arbitrary staging should produce late rows"
     assert all(r.causal_layer == -1 and r.dep_id is None for r in lates)

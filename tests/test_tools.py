@@ -5,10 +5,9 @@ by the warm re-run; a genuine 2x slowdown must survive it and trip."""
 from __future__ import annotations
 
 import json
-import sys
+import os
 
-sys.path.insert(0, "/root/repo")
-
+from tests.conftest import REPO_DIR
 from tools import check_bench_regression as cbr
 
 
@@ -221,9 +220,9 @@ def test_committed_detail_is_healthy_against_reference():
     artifact, rc 1 means the engine really regressed."""
     import pytest
 
-    ref = json.load(open("/root/repo/BENCH_REFERENCE.json"))
+    ref = json.load(open(os.path.join(REPO_DIR, "BENCH_REFERENCE.json")))
     try:
-        det = json.load(open("/root/repo/BENCH_DETAIL.json"))
+        det = json.load(open(os.path.join(REPO_DIR, "BENCH_DETAIL.json")))
     except FileNotFoundError:
         # BENCH_DETAIL.json is a per-run artifact (gitignored): on a
         # fresh checkout there is nothing to adjudicate yet — that is
@@ -299,7 +298,7 @@ def test_index_build_reference_rows_exist():
     closes."""
     from distributed_causal_stream_processing_spark.benchlib import INDEX_BUILDS
 
-    ref = json.load(open("/root/repo/BENCH_REFERENCE.json"))
+    ref = json.load(open(os.path.join(REPO_DIR, "BENCH_REFERENCE.json")))
     assert set(ref.get("index_build", {})) == set(INDEX_BUILDS)
 
 
@@ -351,8 +350,6 @@ def test_reanchored_rows_printed_every_run(tmp_path, monkeypatch, capsys):
 def test_committed_reference_reanchor_map_is_seeded():
     """The two round-12 re-anchors must live in the committed map —
     the lifetime record the policy's condition 3 requires."""
-    import os
-
     ref = json.load(
         open(os.path.join(os.path.dirname(cbr.__file__), "..", "BENCH_REFERENCE.json"))
     )
@@ -464,7 +461,7 @@ def test_volume_drift_annotation_pure():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "scale_bench_drift", "/root/repo/tools/scale_bench.py"
+        "scale_bench_drift", os.path.join(REPO_DIR, "tools", "scale_bench.py")
     )
     sb = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(sb)
